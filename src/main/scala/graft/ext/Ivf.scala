@@ -166,10 +166,6 @@ object Ivf {
     cents
   }
 
-  private[ext] def centroidsOf(
-      spark: SparkSession, cents: Seq[(Int, Seq[Double])]): DataFrame =
-    centroidsDf(spark, cents)
-
   /** Build the index: `iters` deterministic Lloyd passes from the k
     * smallest-vec_id seeds. `assigned` carries (vec_id, e, nrm, cluster)
     * under the FINAL centroids; `centroids` is ≤ k rows of

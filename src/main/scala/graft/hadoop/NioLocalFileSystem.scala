@@ -141,6 +141,11 @@ class NioLocalFileSystem extends RawLocalFileSystem {
           if (Files.exists(nio, LinkOption.NOFOLLOW_LINKS))
             return super.getFileStatus(f)
           throw new java.io.FileNotFoundException(s"File $f does not exist")
+        // an ancestor is a regular file (ENOTDIR): absent, as the
+        // parent reports it
+        case _: java.nio.file.FileSystemException
+            if !Files.exists(nio, LinkOption.NOFOLLOW_LINKS) =>
+          throw new java.io.FileNotFoundException(s"File $f does not exist")
         case _: UnsupportedOperationException =>
           return super.getFileStatus(f)
       }
@@ -169,7 +174,9 @@ class NioLocalFileSystem extends RawLocalFileSystem {
       val it = stream.iterator()
       while (it.hasNext) {
         val child = it.next()
-        val childPath = new Path(f, child.getFileName.toString)
+        // 3-arg ctor: a name holding ':' is a name, not a URI scheme
+        val childPath =
+          new Path(f, new Path(null, null, child.getFileName.toString))
         try out += nioStatus(childPath,
           Files.readAttributes(child, classOf[PosixFileAttributes]))
         catch { case _: java.nio.file.NoSuchFileException => () }

@@ -823,7 +823,7 @@ object LakeSql {
           s"at $path")
       snap.adds.map(_.partitionValues).distinct
         .map(pv => cols.map { c =>
-          val v = pv.get(c).map(TxStreamDataWriter.escape)
+          val v = pv.get(c).map(StageWrite.escape)
             .getOrElse("__HIVE_DEFAULT_PARTITION__")
           s"$c=$v"
         }.mkString("/"))

@@ -5,6 +5,7 @@ import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal, UnsafeProjection}
 import org.apache.spark.sql.catalyst.expressions.aggregate.HllSketchAgg
@@ -17,29 +18,29 @@ import org.apache.spark.util.SerializableConfiguration
 import scala.collection.mutable
 
 /** Per-file result of one staged write: the root-relative path plus the
-  * stats the commit needs — computed BY THE WRITING TASK while the rows
+  * stats the commit needs, computed BY THE WRITING TASK while the rows
   * stream through, so the commit never re-reads (or even re-lists) what
-  * it just wrote. `mins`/`maxs` carry the same Cast-to-string rendering
-  * `stagedAdds`' read-back aggregation produced (null where the file
-  * holds no non-null value); `hlls` the same serialized HLL sketch for
-  * string stat columns (null elsewhere). Arrays are parallel to the
-  * staging call's statCols order. `cdf` marks rows routed to the
-  * change-feed side of a combined data+capture write. */
+  * it just wrote. `mins`/`maxs` carry Catalyst's Cast-to-string
+  * rendering (null where the file holds no non-null value); `hlls` the
+  * serialized HLL sketch for string stat columns (null elsewhere).
+  * Arrays are parallel to the staging call's statCols order. `cdf`
+  * marks a change-feed file of a combined data+capture write; it
+  * carries rows and bytes only (stat arrays null). */
 final case class StagedStat(rel: String, rows: Long, bytes: Long,
     mins: Array[String], maxs: Array[String], nulls: Array[Long],
     hlls: Array[Array[Byte]], cdf: Boolean = false)
 
-/** One-action staging: lands a DataFrame as partition-routed parquet
-  * (byte-compatible with what `DataFrame.write.partitionBy` lands — same
-  * Hive-escaped fragments, same `__HIVE_DEFAULT_PARTITION__` nulls, same
-  * vectorized parquet writer via Spark's own [[OutputWriterFactory]])
-  * and returns per-file stats computed in the writer tasks themselves.
+/** The one writer that lands lake commit files: a DataFrame staged as
+  * partition-routed parquet (byte-compatible with what
+  * `DataFrame.write.partitionBy` lands: same Hive-escaped fragments,
+  * same `__HIVE_DEFAULT_PARTITION__` nulls, same vectorized parquet
+  * writer via Spark's own [[OutputWriterFactory]]), with per-file stats
+  * computed in the writer tasks themselves. Batch DML, appends and the
+  * DSv2 streaming sink's executor tasks all write through
+  * [[StageTaskWriter]].
   *
-  * Replaces the three-step commit staging (write job → staging-dir walk
-  * → stats read-back aggregation job) with ONE job and zero re-reads:
-  * at 100 TB the read-back was a full second pass over every staged
-  * byte; locally it was one Spark action + a footer/schema round per
-  * commit. Stats parity with the old read-back is by construction:
+  * ONE Spark job per commit and zero re-reads. Stats match a read-back
+  * aggregation over the landed files by construction:
   *   - min/max tracked with the same orderings Catalyst's Min/Max use
   *     (NaN greatest, ±0.0 equal-first-seen for floats; signed for
   *     integers; binary UTF8String for strings) and rendered through
@@ -49,15 +50,14 @@ final case class StagedStat(rel: String, rows: Long, bytes: Long,
   *     [[HllSketchAgg]] (identical class, identical lgK, identical
   *     update sequence = the file's own row order).
   *
-  * Optionally routes change-feed rows to a SECOND root in the same pass
-  * (Delta's commit-time CDC design: the capture rides the data write,
-  * keyed by a virtual boolean column that is stripped before landing):
-  * rows where `cdfTagOrdinal` is true land under `cdfStageAbs` with
-  * `_change_type` kept; data rows land under `stageAbs` without it.
+  * [[stageWithCapture]] lands a commit's change feed in the SAME job
+  * (Delta's commit-time CDC design: the capture rides the data write):
+  * change rows land flat under their own `_change_data/<uuid>/` dir
+  * with `_change_type` kept; data rows land under `data/<uuid>/`.
   *
   * Task-retry safety without a commit protocol: files are named by
   * `TaskContext.taskAttemptId` (unique per attempt), and ONLY the stats
-  * returned by the winning attempt reach the commit — a failed or
+  * returned by the winning attempt reach the commit: a failed or
   * speculative attempt's files are unreferenced orphans in the staging
   * dir, reclaimed by vacuum exactly like a lost optimistic race's.
   */
@@ -75,11 +75,17 @@ object StageWrite {
       dataIdx: Array[Int], dataTypes: Array[DataType], zoneId: String,
       stats: Array[StatSpec], hllLgK: Int, maxOpenWriters: Int,
       ext: String,
-      // combined data+capture routing (both unset for plain staging)
+      // change-feed routing (all unset for plain staging); the parquet
+      // writer takes its schema from the Hadoop conf, so each side
+      // carries its own
       cdfStageAbs: String = null, cdfTagOrdinal: Int = -1,
       cdfSchema: StructType = null, cdfIdx: Array[Int] = null,
       cdfTypes: Array[DataType] = null,
-      cdfWriters: OutputWriterFactory = null)
+      cdfWriters: OutputWriterFactory = null,
+      cdfConf: SerializableConfiguration = null)
+
+  private val ChangeType = "_change_type"
+  private val Tag = "__txlog_cdf"
 
   /** Stage `physDf` (physical column names; partition columns included)
     * under `stageAbs` and return the per-file stats. One Spark action. */
@@ -87,53 +93,55 @@ object StageWrite {
       rootAbs: String, partCols: Seq[String],
       statCols: Seq[(String, DataType, String)], hllLgK: Int)
       : Vector[StagedStat] =
-    run(spark, physDf, mkFactory(spark, physDf.schema, stageAbs, rootAbs,
-      partCols, statCols, hllLgK))
+    run(spark, physDf, factory(spark, physDf.schema, physDf.columns.toSeq,
+      stageAbs, rootAbs, partCols, statCols, hllLgK))
 
-  /** Combined data+capture staging: `physDf` carries the union of data
-    * rows and change rows; `tagCol` (boolean, stripped before landing)
-    * marks change rows, which land under `cdfStageAbs` keeping
-    * `_change_type`; data rows land under `stageAbs` without it and
-    * with full stats. One Spark action for both sides. */
+  /** Data + change feed in ONE Spark action: `physDf` lands under
+    * `stageAbs` with full stats like [[stage]]; `physChanges` (physical
+    * names + `_change_type`, partition columns riding as DATA columns —
+    * feed files are planned from log metadata, never
+    * partition-discovered) lands flat under `cdfStageAbs`, one file per
+    * writing task, as `cdf` stats. */
   def stageWithCapture(spark: SparkSession, physDf: DataFrame,
-      stageAbs: String, cdfStageAbs: String, rootAbs: String,
-      partCols: Seq[String], statCols: Seq[(String, DataType, String)],
-      hllLgK: Int, tagCol: String, changeTypeCol: String)
+      physChanges: DataFrame, stageAbs: String, cdfStageAbs: String,
+      rootAbs: String, partCols: Seq[String],
+      statCols: Seq[(String, DataType, String)], hllLgK: Int)
       : Vector[StagedStat] = {
-    val full = physDf.schema
-    val tagOrd = full.fieldIndex(tagCol)
-    // data side: everything except the tag and _change_type
-    val dropForData = Set(tagCol, changeTypeCol)
-    val base = mkFactory(spark, full, stageAbs, rootAbs, partCols,
-      statCols, hllLgK, dropForData)
-    // capture side: everything except the tag (keeps _change_type),
-    // partition columns ride as DATA columns (feed files are planned
-    // from log metadata, never partition-discovered)
-    val cdfIdx = full.fields.zipWithIndex
-      .filter { case (f, _) => f.name != tagCol }.map(_._2)
-    val cdfTypes = cdfIdx.map(i => full.fields(i).dataType)
+    // one relation for both sides, a boolean tag routes each row; each
+    // side projects only its own columns out of the by-name union
+    val tagged = physDf
+      .withColumn(ChangeType, lit(null).cast(StringType))
+      .withColumn(Tag, lit(false))
+      .unionByName(physChanges.withColumn(Tag, lit(true)),
+        allowMissingColumns = true)
+    val full = tagged.schema
+    val base = factory(spark, full, physDf.columns.toSeq, stageAbs,
+      rootAbs, partCols, statCols, hllLgK)
+    val cdfIdx = physChanges.columns.map(full.fieldIndex)
     val cdfSchema = StructType(cdfIdx.map(i =>
       full.fields(i).copy(nullable = true)).toIndexedSeq)
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
     val cdfWriters = new ParquetFileFormat().prepareWrite(
       spark, job, Map.empty[String, String], cdfSchema)
-    val f = base.copy(cdfStageAbs = cdfStageAbs, cdfTagOrdinal = tagOrd,
-      cdfSchema = cdfSchema, cdfIdx = cdfIdx, cdfTypes = cdfTypes,
+    run(spark, tagged, base.copy(cdfStageAbs = cdfStageAbs,
+      cdfTagOrdinal = full.fieldIndex(Tag), cdfSchema = cdfSchema,
+      cdfIdx = cdfIdx, cdfTypes = cdfIdx.map(i => full.fields(i).dataType),
       cdfWriters = cdfWriters,
-      conf = new SerializableConfiguration(job.getConfiguration))
-    run(spark, physDf, f)
+      cdfConf = new SerializableConfiguration(job.getConfiguration)))
   }
 
-  private def mkFactory(spark: SparkSession, full: StructType,
-      stageAbs: String, rootAbs: String, partCols: Seq[String],
-      statCols: Seq[(String, DataType, String)], hllLgK: Int,
-      dropCols: Set[String] = Set.empty): Factory = {
+  /** Writer-task configuration over rows of schema `full`: `dataCols`
+    * name the columns that land (partition columns among them route to
+    * directories), `statCols` the per-file stats. Built on the driver,
+    * shipped to every writing task. */
+  private[lake] def factory(spark: SparkSession, full: StructType,
+      dataCols: Seq[String], stageAbs: String, rootAbs: String,
+      partCols: Seq[String], statCols: Seq[(String, DataType, String)],
+      hllLgK: Int): Factory = {
     val partIdx = partCols.map(full.fieldIndex).toArray
     val partTypes = partIdx.map(i => full.fields(i).dataType)
-    val dataIdx = full.fields.zipWithIndex
-      .filter { case (f, _) =>
-        !partCols.contains(f.name) && !dropCols.contains(f.name) }
-      .map(_._2).toArray
+    val dataIdx = dataCols.filterNot(partCols.contains)
+      .map(full.fieldIndex).toArray
     val dataTypes = dataIdx.map(i => full.fields(i).dataType)
     val dataSchema = StructType(dataIdx.map(i =>
       full.fields(i).copy(nullable = true)).toIndexedSeq)
@@ -172,20 +180,41 @@ object StageWrite {
         }
       }).flatten.toVector
   }
+
+  /** Hive's escapePathName (the inverse of [[TxTable]]'s unescape and
+    * the spelling Spark's own dynamic-partition writes use): control
+    * chars and filesystem-hostile specials become %XX. */
+  private val needsEscape: Char => Boolean = c =>
+    c < 0x20 || "\"#%'*/:=?\\{[]^".indexOf(c.toInt) >= 0
+
+  def escape(s: String): String =
+    if (!s.exists(needsEscape)) s
+    else {
+      val sb = new java.lang.StringBuilder(s.length + 8)
+      s.foreach { c =>
+        if (needsEscape(c)) sb.append(f"%%${c.toInt}%02X")
+        else sb.append(c)
+      }
+      sb.toString
+    }
 }
 
 /** One task's staging writer: LRU-bounded per-partition-fragment parquet
-  * writers (the [[TxStreamDataWriter]] pattern), plus a per-open-file
-  * stats aggregator updated as rows stream through. */
+  * writers, plus a per-open-file stats aggregator updated as rows stream
+  * through. Batch staging and the DSv2 streaming sink's tasks both
+  * drive it. */
 private[lake] final class StageTaskWriter(f: StageWrite.Factory,
     partitionId: Int, taskAttemptId: Long) {
 
-  private val ctx = new TaskAttemptContextImpl(
-    new org.apache.hadoop.conf.Configuration(f.conf.value),
-    new TaskAttemptID(new TaskID(
-      new org.apache.hadoop.mapreduce.JobID(
-        "graftstage", partitionId), TaskType.MAP, partitionId),
-      (taskAttemptId % Int.MaxValue).toInt))
+  private def taskCtx(conf: SerializableConfiguration) =
+    new TaskAttemptContextImpl(
+      new org.apache.hadoop.conf.Configuration(conf.value),
+      new TaskAttemptID(new TaskID(
+        new org.apache.hadoop.mapreduce.JobID(
+          "graftstage", partitionId), TaskType.MAP, partitionId),
+        (taskAttemptId % Int.MaxValue).toInt))
+  private val ctx = taskCtx(f.conf)
+  private lazy val cdfCtx = taskCtx(f.cdfConf)
 
   private lazy val dataProj = UnsafeProjection.create(
     f.dataIdx.toIndexedSeq.zip(f.dataTypes.toIndexedSeq).map {
@@ -223,7 +252,6 @@ private[lake] final class StageTaskWriter(f: StageWrite.Factory,
     * Min/Max update rule (strictly-less/greater replaces, ties keep the
     * first-seen value; NaN greatest, -0.0 == 0.0 for floats). */
   private final class FileAgg {
-    var rows = 0L
     private val n = f.stats.length
     val nulls = new Array[Long](n)
     private val seen = new Array[Boolean](n)
@@ -243,7 +271,6 @@ private[lake] final class StageTaskWriter(f: StageWrite.Factory,
       } else -1
 
     def update(row: InternalRow): Unit = {
-      rows += 1
       var i = 0
       while (i < n) {
         val s = f.stats(i)
@@ -334,12 +361,20 @@ private[lake] final class StageTaskWriter(f: StageWrite.Factory,
   private final class OpenFile(
       val writer: org.apache.spark.sql.execution.datasources.OutputWriter,
       val abs: String, val isCdf: Boolean) {
+    var rows = 0L
     val agg: FileAgg = if (isCdf) null else new FileAgg
   }
 
+  // Open writers, least-recently-WRITTEN first (re-inserted on every
+  // access so the head is always the coldest fragment), bounded at
+  // f.maxOpenWriters: each open parquet writer pins a row-group buffer,
+  // so an unbounded map is executor-OOM when one task spans many
+  // partition values. Rotated files land in `done` like finished ones.
   private val open = mutable.LinkedHashMap[String, OpenFile]()
   private val done = mutable.ArrayBuffer[StagedStat]()
   private var fileSeq = 0
+  // consecutive rows overwhelmingly share a fragment, so the hot path is
+  // a string compare, not an LRU map touch per row
   private var lastFrag: String = null
   private var lastFile: OpenFile = null
 
@@ -349,7 +384,7 @@ private[lake] final class StageTaskWriter(f: StageWrite.Factory,
     f.partCols.indices.map { i =>
       val v =
         if (rendered.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__"
-        else TxStreamDataWriter.escape(rendered.getUTF8String(i).toString)
+        else StageWrite.escape(rendered.getUTF8String(i).toString)
       s"${f.partCols(i)}=$v"
     }.mkString("/")
   }
@@ -365,34 +400,31 @@ private[lake] final class StageTaskWriter(f: StageWrite.Factory,
     val rel =
       if (ap.startsWith(rootPrefix)) ap.stripPrefix(rootPrefix) else ap
     if (of.isCdf)
-      done += StagedStat(rel, of.agg2Rows, bytes, null, null, null, null,
+      done += StagedStat(rel, of.rows, bytes, null, null, null, null,
         cdf = true)
     else {
       val (mins, maxs, hlls) = of.agg.finish()
-      done += StagedStat(rel, of.agg.rows, bytes, mins, maxs,
-        of.agg.nulls, hlls)
+      done += StagedStat(rel, of.rows, bytes, mins, maxs, of.agg.nulls,
+        hlls)
     }
-  }
-
-  // row counter for cdf files (no FileAgg there)
-  private val cdfRows = mutable.HashMap[String, Long]()
-  private implicit class OfOps(of: OpenFile) {
-    def agg2Rows: Long = cdfRows.getOrElse(of.abs, 0L)
   }
 
   def write(row: InternalRow): Unit = {
     val isCdf = f.cdfTagOrdinal >= 0 &&
       !row.isNullAt(f.cdfTagOrdinal) && row.getBoolean(f.cdfTagOrdinal)
-    val frag0 = dirFragment(row)
-    val frag = if (isCdf) " cdf/" + frag0 else frag0
+    // change rows carry partition values as DATA columns and land flat:
+    // one feed file per task, under a key no fragment can spell
+    val frag = if (isCdf) "/cdf" else dirFragment(row)
     val of =
       if (frag == lastFrag) lastFile
       else open.remove(frag) match {
-        case Some(entry) =>
+        case Some(entry) => // touch: re-insert at the tail
           open.put(frag, entry): Unit
           entry
         case None =>
           if (open.size >= f.maxOpenWriters) {
+            // the hot-path shortcut skips the LRU touch, so re-insert
+            // the current fragment before picking the coldest victim
             if (lastFrag != null && open.size > 1)
               open.remove(lastFrag).foreach(e =>
                 open.put(lastFrag, e): Unit)
@@ -403,14 +435,13 @@ private[lake] final class StageTaskWriter(f: StageWrite.Factory,
           }
           val name = f"part-$partitionId%05d-$taskAttemptId-$fileSeq${f.ext}"
           fileSeq += 1
-          val stageRoot = if (isCdf) f.cdfStageAbs else f.stageAbs
-          // capture rows carry partition values as DATA columns — the
-          // feed lands flat under its own staging dir
           val dir =
-            if (isCdf || frag0.isEmpty) stageRoot else s"$stageRoot/$frag0"
+            if (isCdf) f.cdfStageAbs
+            else if (frag.isEmpty) f.stageAbs
+            else s"${f.stageAbs}/$frag"
           val abs = s"$dir/$name"
           val nw =
-            if (isCdf) f.cdfWriters.newInstance(abs, f.cdfSchema, ctx)
+            if (isCdf) f.cdfWriters.newInstance(abs, f.cdfSchema, cdfCtx)
             else f.writers.newInstance(abs, f.dataSchema, ctx)
           val entry = new OpenFile(nw, abs, isCdf)
           open.put(frag, entry): Unit
@@ -418,10 +449,9 @@ private[lake] final class StageTaskWriter(f: StageWrite.Factory,
       }
     lastFrag = frag
     lastFile = of
-    if (of.isCdf) {
-      of.writer.write(cdfProj(row))
-      cdfRows.update(of.abs, cdfRows.getOrElse(of.abs, 0L) + 1L)
-    } else {
+    of.rows += 1
+    if (of.isCdf) of.writer.write(cdfProj(row))
+    else {
       val projected = dataProj(row)
       of.agg.update(projected)
       of.writer.write(projected)

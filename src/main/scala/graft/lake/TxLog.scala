@@ -262,11 +262,15 @@ object TxLog {
   final case class Remove(path: String, rows: Option[Long] = None,
       bytes: Option[Long] = None)
   /** One commit-time change-data file (Delta's `cdc` action): `path` is
-    * a parquet file under `_change_data/` holding the commit's changed
-    * rows, table schema + `_change_type` ('insert' | 'delete' |
-    * 'update_preimage' | 'update_postimage'). These files are NOT part
-    * of the live table state — only [[TxTable.readChanges]] reads
-    * them. */
+    * a parquet file under `_change_data/<uuid>/` (flat, no partition
+    * dirs) holding the commit's changed rows, table columns under their
+    * PHYSICAL names + `_change_type` ('insert' | 'delete' |
+    * 'update_preimage' | 'update_postimage'). The DML's own staging
+    * write lands it in the same Spark action as the commit's data files
+    * ([[StageWrite.stageWithCapture]]), with `rows`/`bytes` reported by
+    * the writing task; a file is only ever opened for a row, so no Cdf
+    * action has zero rows. These files are NOT part of the live table
+    * state — only [[TxTable.readChanges]] reads them. */
   final case class Cdf(path: String, rows: Long,
       bytes: Option[Long] = None)
   /** Commit provenance: operation name + the snapshot version the writer

@@ -1,22 +1,14 @@
 package graft.lake
 
-import scala.collection.mutable
-
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{
-  BoundReference, Cast, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Cast, UnsafeProjection}
 import org.apache.spark.sql.connector.write.{
   DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{
   StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.OutputWriterFactory
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import TxLog.Txn
 
@@ -24,11 +16,13 @@ import TxLog.Txn
   * connector-API sink (`writeStream.toTable("cat.ns.t")` /
   * `writeStream.format("txlog")`): executor tasks land micro-batch
   * rows as immutable parquet under the ordinary `data/<uuid>/` staging
-  * convention — rows never touch the driver — and the driver's
-  * `commit(epochId)` turns the reported file list into Add actions
-  * (stats + bloom sidecars via [[TxTable.stagedAdds]], one distributed
-  * aggregation over just the new files) and claims one atomic commit
-  * under the `(queryId, epochId)` writer-transaction watermark.
+  * convention through the lake's one commit-file writer
+  * ([[StageTaskWriter]]) — rows never touch the driver, and each task
+  * reports its files' stats, computed while writing, in its commit
+  * message. The driver's `commit(epochId)` turns those stats into Add
+  * actions (bloom sidecars added on bloom-indexed tables) and claims
+  * one atomic commit under the `(queryId, epochId)` writer-transaction
+  * watermark.
   * Exactly-once falls out of the log: a replayed epoch is a no-op, an
   * aborted epoch's staged files are never referenced (vacuum reclaims
   * them, like any lost-race staging), and the idempotence key is the
@@ -100,7 +94,7 @@ final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
   // gate refusals (failure locality: a refused table fails .start(),
   // not the Nth micro-batch)
   private val (physSchema, partCols, checkRows, notNullOrdinals,
-      appendedCols) = {
+      appendedCols, statCols) = {
     val tx = new TxTable(spark, rootStr)
     val metaOpt =
       if (tx.exists) {
@@ -149,11 +143,11 @@ final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
         // a per-epoch watermark allocation (None marker — the factory
         // re-reads `nextRowId` each epoch), physically written like
         // any column but NEVER part of the logical schema (commit()
-        // strips it from the evolve schema; stagedAdds still computes
-        // its stats so the watermark bump reads the staged max). The
-        // change feed stays consistent: the sink's commits are
-        // insert-only, and insert rows' ids live in the data files the
-        // diff-based feed reads.
+        // strips it from the evolve schema; the writer tasks still
+        // compute its stats so the watermark bump reads the staged
+        // max). The change feed stays consistent: the sink's commits
+        // are insert-only, and insert rows' ids live in the data files
+        // the diff-based feed reads.
         metaOpt.filter(_.tracksRows).map(_ =>
           ("_row_id", org.apache.spark.sql.types.LongType: DataType,
             Option.empty[
@@ -234,13 +228,15 @@ final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
     parts.foreach(c => require(augSchema.fieldNames.contains(c),
       s"partition column $c is not in the stream schema " +
         s"(${augSchema.fieldNames.mkString(", ")})"))
-    val phys = StructType(augSchema.fields
-      .filterNot(f => parts.contains(f.name))
-      .map(f => f.copy(
-        name = metaOpt.map(_.physicalOf(f.name)).getOrElse(f.name),
-        nullable = true)))
+    // the meta the commit lands under: the table's, or the one the
+    // first epoch's commit creates from the stream schema
+    val meta = metaOpt.getOrElse(TxLog.Meta(streamSchema.json, parts.toList))
+    // rows arrive in augmented order; files store PHYSICAL names
+    val phys = StructType(augSchema.fields.map(f =>
+      f.copy(name = meta.physicalOf(f.name))))
     (phys, parts, (checks ++ genValidators).toArray,
-      requiredOrds.toArray, appended)
+      requiredOrds.toArray, appended,
+      TxTable.statColsOf(meta, augSchema.fieldNames.toSet))
   }
 
   /** The staged data's LOGICAL schema: the stream's own columns plus
@@ -257,9 +253,6 @@ final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    val factory = new ParquetFileFormat().prepareWrite(
-      spark, job, Map.empty[String, String], physSchema)
     // identity starts re-read HERE — Spark calls this once per epoch
     // (each micro-batch gets its own MicroBatchWrite), so every epoch
     // allocates past the watermark the previous commit bumped
@@ -285,45 +278,34 @@ final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
         if (dt == org.apache.spark.sql.types.LongType) alloc
         else Cast(alloc, dt)
     }.toArray
-    val augFields = augLogical.fields
-    val partIdx = partCols.map(c => augLogical.fieldIndex(c)).toArray
-    val partTypes = partCols.map(c =>
-      augFields(augLogical.fieldIndex(c)).dataType).toArray
-    val dataIdx = augFields.zipWithIndex
-      .filterNot { case (f, _) => partCols.contains(f.name) }
-      .map(_._2)
-    val dataTypes = dataIdx.map(i => augFields(i).dataType)
+    val root = new Path(rootStr)
     TxStreamWriterFactory(
-      new Path(rootStr, stageRel).toString, factory,
-      new SerializableConfiguration(job.getConfiguration),
-      physSchema, partCols.toArray, partIdx, partTypes,
-      dataIdx, dataTypes,
-      spark.sessionState.conf.sessionLocalTimeZone,
-      checkRows, notNullOrdinals,
-      TxStreamingWrite.maxOpenWriters(spark),
-      appendExprs)
+      StageWrite.factory(spark, physSchema, physSchema.fieldNames.toSeq,
+        new Path(root, stageRel).toString, root.toUri.getPath, partCols,
+        statCols, TxTable.statHllLgK),
+      checkRows, notNullOrdinals, appendExprs)
   }
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.flatMap {
-      case m: TxStreamCommitMessage => m.files
+    val stats = messages.toVector.flatMap {
+      case m: TxStreamCommitMessage => m.stats
       case other => sys.error(s"unexpected commit message $other")
     }
     val tx = new TxTable(spark, rootStr)
     if (!tx.exists)
       tx.createIfAbsent(streamSchema, partCols): Unit
-    val root = new Path(rootStr)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val meta = TxLog.snapshot(fs, root).meta
     val adds =
-      if (files.isEmpty) Vector.empty
-      else tx.stagedAdds(
-        files.map(rel => new Path(root, rel).toString).toIndexedSeq,
-        meta, augLogical.fieldNames.toSet)
+      if (stats.isEmpty) Vector.empty
+      else {
+        val root = new Path(rootStr)
+        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        tx.withBloomSidecars(tx.addsFromStats(stats, statCols),
+          TxLog.snapshot(fs, root).meta, augLogical.fieldNames.toSet)
+      }
     // `_row_id` is physical-only: present in the staged files (and in
-    // the stats set above, so the watermark bump sees the staged max)
-    // but never in the schema the commit evolves against
+    // the stat columns, so the watermark bump sees the staged max) but
+    // never in the schema the commit evolves against
     val logical = StructType(
       augLogical.fields.filterNot(_.name == "_row_id"))
     // empty batches still advance the watermark: a replay of this
@@ -338,8 +320,8 @@ final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     messages.foreach {
       case m: TxStreamCommitMessage =>
-        m.files.foreach(rel =>
-          scala.util.Try(fs.delete(new Path(root, rel), false)): Unit)
+        m.stats.foreach(st =>
+          scala.util.Try(fs.delete(new Path(root, st.rel), false)): Unit)
       case _ => ()
     }
   }
@@ -370,93 +352,31 @@ object TxStreamingWrite {
       .getOrElse(maxOpenWritersDefault)
 }
 
-/** Files one task landed, root-relative (partition dirs included). */
-final case class TxStreamCommitMessage(files: Seq[String])
+/** Files one task landed (root-relative, partition dirs included) with
+  * the stats its writer computed while landing them. */
+final case class TxStreamCommitMessage(stats: Seq[StagedStat])
     extends WriterCommitMessage
 
-final case class TxStreamWriterFactory(stageAbs: String,
-    writers: OutputWriterFactory, conf: SerializableConfiguration,
-    physSchema: StructType, partCols: Array[String],
-    partIdx: Array[Int], partTypes: Array[DataType],
-    dataIdx: Array[Int], dataTypes: Array[DataType],
-    zoneId: String,
+final case class TxStreamWriterFactory(stage: StageWrite.Factory,
     checks: Array[(String,
-      org.apache.spark.sql.catalyst.expressions.Expression)] =
-      Array.empty,
-    notNull: Array[(String, Int)] = Array.empty,
-    maxOpenWriters: Int = TxStreamingWrite.maxOpenWritersDefault,
-    appendExprs: Array[
-      org.apache.spark.sql.catalyst.expressions.Expression] =
-      Array.empty)
+      org.apache.spark.sql.catalyst.expressions.Expression)],
+    notNull: Array[(String, Int)],
+    appendExprs: Array[org.apache.spark.sql.catalyst.expressions.Expression])
     extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new TxStreamDataWriter(this, partitionId, taskId, epochId)
+    new TxStreamDataWriter(this, partitionId, taskId)
 }
 
-/** One task's writer: routes rows to per-partition-directory parquet
-  * files through Spark's own [[OutputWriterFactory]] (vectorized
-  * parquet write support, physical column names), Hive-escaped
-  * `col=value` directory fragments, `__HIVE_DEFAULT_PARTITION__` for
-  * nulls — byte-compatible with what `DataFrame.write.partitionBy`
-  * lands, so the log's partition-value parsing and the FileIndex read
-  * path treat both writers' files identically. */
+/** One task's writer: appends the table-rewritten columns, validates
+  * each row, and hands it to [[StageTaskWriter]], which routes rows to
+  * Hive-escaped partition directories exactly like batch staging and
+  * reports per-file stats in the commit message. */
 final class TxStreamDataWriter(f: TxStreamWriterFactory,
-    partitionId: Int, taskId: Long, epochId: Long)
-    extends DataWriter[InternalRow] {
+    partitionId: Int, taskId: Long) extends DataWriter[InternalRow] {
 
-  private val ctx = new TaskAttemptContextImpl(
-    new org.apache.hadoop.conf.Configuration(f.conf.value),
-    new TaskAttemptID(new TaskID(
-      new org.apache.hadoop.mapreduce.JobID(
-        "graftstream", (epochId % Int.MaxValue).toInt),
-      TaskType.MAP, partitionId), (taskId % Int.MaxValue).toInt))
-
-  private val ext = f.writers.getFileExtension(ctx)
-
-  private lazy val dataProj = UnsafeProjection.create(
-    f.dataIdx.toIndexedSeq.zip(f.dataTypes.toIndexedSeq).map {
-      case (i, dt) => BoundReference(i, dt, nullable = true)
-    })
-
-  // partition values rendered as strings with Catalyst's own Cast —
-  // the spelling DataFrame.write's dynamic partitioning uses
-  private lazy val partProj = UnsafeProjection.create(
-    f.partIdx.toIndexedSeq.zip(f.partTypes.toIndexedSeq).map {
-      case (i, dt) =>
-        Cast(BoundReference(i, dt, nullable = true), StringType,
-          Some(f.zoneId))
-    })
-
-  // Open writers, least-recently-WRITTEN first (re-inserted on every
-  // access so the head is always the coldest fragment). Bounded at
-  // f.maxOpenWriters: each open parquet writer pins a row-group
-  // buffer, so an unbounded map is executor-OOM when one epoch spans
-  // many partition values. Closed files accumulate in `landed` — the
-  // commit message (and abort's delete list) covers rotated files
-  // exactly like still-open ones.
-  private val open = mutable.LinkedHashMap[String,
-    (org.apache.spark.sql.execution.datasources.OutputWriter, String)]()
-  private val landed = mutable.ArrayBuffer[String]()
-  private var fileSeq = 0
-  // consecutive rows overwhelmingly share a fragment (unpartitioned
-  // tables always; partitioned ones arrive run-length-clustered), so
-  // the hot path is a string compare, not an LRU map touch per row
-  private var lastFrag: String = null
-  private var lastWriter
-      : org.apache.spark.sql.execution.datasources.OutputWriter = null
-
-  private def dirFragment(row: InternalRow): String = {
-    if (f.partCols.isEmpty) return ""
-    val rendered = partProj(row)
-    f.partCols.indices.map { i =>
-      val v =
-        if (rendered.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__"
-        else TxStreamDataWriter.escape(rendered.getUTF8String(i).toString)
-      s"${f.partCols(i)}=$v"
-    }.mkString("/")
-  }
+  private val out = new StageTaskWriter(f.stage, partitionId, taskId)
 
   // constraint predicates compiled ONCE per task from the bound
   // expressions the driver resolved at query start: NOT NULL is a
@@ -504,86 +424,13 @@ final class TxStreamDataWriter(f: TxStreamWriterFactory,
       if (f.appendExprs.isEmpty) row0
       else joined(row0, appendProj(row0))
     validate(row)
-    val frag = dirFragment(row)
-    if (frag == lastFrag) { lastWriter.write(dataProj(row)); return }
-    val w = open.remove(frag) match {
-      case Some(entry) => // touch: re-insert at the tail (most recent)
-        open.put(frag, entry): Unit
-        entry._1
-      case None =>
-        if (open.size >= f.maxOpenWriters) {
-          // the hot-path shortcut above skips the LRU touch, so a long
-          // run on one fragment can leave the HOTTEST fragment at the
-          // cold end — re-insert it at the tail before picking the
-          // victim, so the memoized writer is never the one rotated
-          // (rotating it costs an avoidable extra file)
-          if (lastFrag != null && open.size > 1)
-            open.remove(lastFrag).foreach(e => open.put(lastFrag, e): Unit)
-          // rotate out the coldest fragment's writer; its file is done
-          val (coldFrag, (cw, cAbs)) = open.head
-          cw.close()
-          landed += cAbs
-          open.remove(coldFrag): Unit
-          if (coldFrag == lastFrag) { lastFrag = null; lastWriter = null }
-        }
-        val name = f"part-$partitionId%05d-$taskId-$fileSeq$ext"
-        fileSeq += 1
-        val dir = if (frag.isEmpty) f.stageAbs else s"${f.stageAbs}/$frag"
-        val abs = s"$dir/$name"
-        val nw = f.writers.newInstance(abs, f.physSchema, ctx)
-        open.put(frag, (nw, abs)): Unit
-        nw
-    }
-    lastFrag = frag
-    lastWriter = w
-    w.write(dataProj(row))
+    out.write(row)
   }
 
-  override def commit(): WriterCommitMessage = {
-    open.values.foreach { case (w, abs) =>
-      w.close()
-      landed += abs
-    }
-    open.clear()
-    val stageRoot = new Path(f.stageAbs).getParent.getParent // table root
-    val rootPrefix = stageRoot.toUri.getPath.stripSuffix("/") + "/"
-    TxStreamCommitMessage(landed.map { abs =>
-      val p = new Path(abs).toUri.getPath
-      if (p.startsWith(rootPrefix)) p.stripPrefix(rootPrefix) else p
-    }.toSeq)
-  }
+  override def commit(): WriterCommitMessage =
+    TxStreamCommitMessage(out.finish().toSeq)
 
-  override def abort(): Unit = {
-    open.values.foreach { case (w, abs) =>
-      scala.util.Try(w.close()): Unit
-      landed += abs
-    }
-    open.clear()
-    landed.foreach { abs =>
-      val p = new Path(abs)
-      scala.util.Try(
-        p.getFileSystem(f.conf.value).delete(p, false)): Unit
-    }
-  }
+  override def abort(): Unit = out.abort()
 
   override def close(): Unit = ()
-}
-
-object TxStreamDataWriter {
-  /** Hive's escapePathName (the inverse of [[TxTable]]'s unescape and
-    * the spelling Spark's own dynamic-partition writes use): control
-    * chars and filesystem-hostile specials become %XX. */
-  private val needsEscape: Char => Boolean = c =>
-    c < 0x20 || "\"#%'*/:=?\\{[]^".indexOf(c.toInt) >= 0
-
-  def escape(s: String): String =
-    if (!s.exists(needsEscape)) s
-    else {
-      val sb = new java.lang.StringBuilder(s.length + 8)
-      s.foreach { c =>
-        if (needsEscape(c)) sb.append(f"%%${c.toInt}%02X")
-        else sb.append(c)
-      }
-      sb.toString
-    }
 }

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import TxLog._
+import TxTable.{statColsOf, statKind}
 
 /** Table operations over a [[TxLog]]-managed parquet directory: ACID
   * create / append / delete / partition-overwrite, snapshot-isolated
@@ -256,17 +257,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         if (snap.meta.cdf && (tracks || snap.meta.identities.nonEmpty))
           staged0.localCheckpoint()
         else staged0
-      val adds = stageWrite(staged, merged)
-      val newMeta = bumpIdentities(
-        if (tracks) bumpWatermark(merged, adds) else merged, adds)
-      val metaEntry =
-        if (newMeta != snap.meta) Seq(LogEntry(meta = Some(newMeta)))
-        else Nil
-      val entries = metaEntry ++
-        doomed.map(a => LogEntry(remove =
-          Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
-        adds.map(a => LogEntry(add = Some(a))) ++
-        captureTail(merged, "OVERWRITE", snap.version, {
+      val entries = stageCommit(snap, merged, "OVERWRITE", doomed,
+          Some(staged), {
           def aligned(d: DataFrame) =
             d.select(merged.schema.fields.map(f =>
               if (d.columns.contains(f.name)) col(f.name)
@@ -509,12 +501,9 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       val survivors = readFiles(snap, affected.map(_.path),
           withRowId = snap.meta.tracksRows)
         .where(!coalesce(cond, lit(false)))
-      val adds = stageWrite(survivors, snap.meta)
-      val entries = affected.map(a => LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
-        adds.map(a => LogEntry(add = Some(a))) ++
-        captureTail(snap.meta, "DELETE", snap.version,
-          cur.where(cond).drop(FileCol)
-            .withColumn("_change_type", lit("delete")))
+      val entries = stageCommit(snap, snap.meta, "DELETE", affected,
+        Some(survivors), cur.where(cond).drop(FileCol)
+          .withColumn("_change_type", lit("delete")))
       commitRebasing(snap, entries, cond).foreach(v => return v)
       attempt += 1
       require(attempt < maxRetries, s"delete in $root lost $maxRetries races")
@@ -579,17 +568,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       // an id-carrying feed must record the SAME fresh ids the write
       // lands — materialize the assignment (merge's rule)
       val incoming = if (idFeed) incoming1.localCheckpoint() else incoming1
-      val adds = stageWrite(survivors.unionByName(incoming), snap.meta)
-      val newMeta = if (tracks) bumpWatermark(snap.meta, adds)
-        else snap.meta
-      val metaEntry =
-        if (newMeta != snap.meta) Seq(LogEntry(meta = Some(newMeta)))
-        else Nil
-      val entries = metaEntry ++
-        affected.map(a => LogEntry(remove =
-          Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
-        adds.map(a => LogEntry(add = Some(a))) ++
-        captureTail(snap.meta, "REPLACE_WHERE", snap.version, {
+      val entries = stageCommit(snap, snap.meta, "REPLACE_WHERE", affected,
+          Some(survivors.unionByName(incoming)), {
           val dels = cur.where(cond).drop(FileCol)
             .withColumn("_change_type", lit("delete"))
           val ins = (if (idFeed) incoming else incoming0)
@@ -664,30 +644,28 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         }
       }
       val cowAffected = cowHits.map(h => addByPath(h._1)).toSeq
-      val cowAdds =
-        if (cowAffected.isEmpty) Vector.empty
-        else stageWrite(readFiles(snap, cowAffected.map(_.path),
-            withRowId = snap.meta.tracksRows)
-          .where(!coalesce(cond, lit(false))), snap.meta)
       // the first vectored file makes naive readers WRONG (they would
       // return deleted rows) and naive WRITERS destructive (a rewrite
       // ignoring the vector resurrects them) — stamp both protocol
       // halves in the same commit so a version-skewed client refuses
       // instead of misreading or corrupting
-      val protocol =
+      val meta =
         if (dvEntries.exists(_.add.exists(_.dvFile.isDefined)) &&
             (!snap.meta.features.contains("deletionVectors") ||
              !snap.meta.writerFeats.contains("deletionVectors")))
-          Seq(LogEntry(meta =
-            Some(snap.meta.withReaderFeature("deletionVectors")
-              .withWriterFeature("deletionVectors"))))
-        else Nil
-      val entries = protocol ++ dvEntries ++
-        cowAffected.map(a => LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
-        cowAdds.map(a => LogEntry(add = Some(a))) ++
-        captureTail(snap.meta, "DELETE_DV", snap.version,
-          cur.where(cond).drop(FileCol, PosCol)
-            .withColumn("_change_type", lit("delete")))
+          snap.meta.withReaderFeature("deletionVectors")
+            .withWriterFeature("deletionVectors")
+        else snap.meta
+      // the copy-on-write fallback's survivors (none when every hit
+      // file took a vector: then only the capture is staged)
+      val cowRows =
+        if (cowAffected.isEmpty) None
+        else Some(readFiles(snap, cowAffected.map(_.path),
+            withRowId = snap.meta.tracksRows)
+          .where(!coalesce(cond, lit(false))))
+      val entries = stageCommit(snap, meta, "DELETE_DV", cowAffected,
+        cowRows, cur.where(cond).drop(FileCol, PosCol)
+          .withColumn("_change_type", lit("delete")), dvEntries)
       commitRebasing(snap, entries, cond).foreach(v => return v)
       attempt += 1
       require(attempt < maxRetries,
@@ -752,7 +730,6 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       // copied-verbatim neighbours already passed at their own write
       enforceConstraints(
         rewritten.where(col(flag)).drop(flag, RowIdCol), snap.meta)
-      val adds = stageWrite(rewritten.drop(flag), snap.meta)
       // an UPDATE's feed is the pre/postimage pair per matched row
       // (Delta's four change types — downstream consumers can tell an
       // update from a coincidental delete+insert of the same key in one
@@ -760,14 +737,12 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       // = the transformed half of the rewrite). On a tracked CDF table
       // both images carry the row's _row_id — UPDATE preserves identity,
       // so the pair is id-joinable with no key assumptions.
-      val entries = affected.map(a => LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
-        adds.map(a => LogEntry(add = Some(a))) ++
-        captureTail(snap.meta, "UPDATE", snap.version,
-          cur.where(matched).drop(FileCol)
-            .withColumn("_change_type", lit("update_preimage"))
-            .unionByName(rewritten.where(col(flag))
-              .drop((flag +: (if (idFeed) Nil else Seq(RowIdCol))): _*)
-              .withColumn("_change_type", lit("update_postimage"))))
+      val entries = stageCommit(snap, snap.meta, "UPDATE", affected,
+        Some(rewritten.drop(flag)), cur.where(matched).drop(FileCol)
+          .withColumn("_change_type", lit("update_preimage"))
+          .unionByName(rewritten.where(col(flag))
+            .drop((flag +: (if (idFeed) Nil else Seq(RowIdCol))): _*)
+            .withColumn("_change_type", lit("update_postimage"))))
       commitRebasing(snap, entries, cond).foreach(v => return v)
       attempt += 1
       require(attempt < maxRetries, s"update in $root lost $maxRetries races")
@@ -891,22 +866,13 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         // lost checkpoint block fails loudly instead)
         val srcAligned =
           if (idFeed) srcAligned0b.localCheckpoint() else srcAligned0b
-        val adds = stageWrite(survivors.unionByName(srcAligned), meta)
-        val newMeta = if (tracks) bumpWatermark(meta, adds) else meta
-        val metaEntry =
-          if (newMeta != snap.meta) Seq(LogEntry(meta = Some(newMeta)))
-          else Nil
         // MERGE feed, Delta's four change types: every replaced row is
         // an update PREIMAGE and its replacement the POSTIMAGE (the
         // pair surfaces even when the replacement is byte-identical —
         // Delta's behavior); source rows with no matched key are plain
         // inserts
-        val entries = metaEntry ++
-          affected.map(a => LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
-          adds.map(a => LogEntry(add = Some(a))) ++
-          txn.map { case (app, tv) =>
-            LogEntry(txn = Some(Txn(app, tv))) }.toSeq ++
-          captureTail(meta, "MERGE", snap.version, {
+        val entries = stageCommit(snap, meta, "MERGE", affected,
+            Some(survivors.unionByName(srcAligned)), {
             // on a tracked CDF table every image carries its _row_id
             // (preimages from the files, postimages/inserts from the
             // materialized assignment above); untracked feeds carry
@@ -921,7 +887,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
                 .withColumn("_change_type", lit("update_postimage")))
               .unionByName(srcCap.join(tgtKeys, keyCols, "left_anti")
                 .withColumn("_change_type", lit("insert")))
-          })
+          }, txn.map { case (app, tv) => LogEntry(txn = Some(Txn(app, tv))) }
+            .toSeq)
         // lost-race rebase on the SOURCE KEY ranges: a winner blind
         // append whose files cannot hold any source key cannot change
         // what this merge replaces
@@ -1113,15 +1080,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
             else kept0.withColumn(RowIdCol, coalesce(col(RowIdCol),
               lit(snap.meta.nextRowId) + monotonically_increasing_id()))
           enforceConstraints(kept.drop(RowIdCol), snap.meta)
-          val adds = stageWrite(kept, snap.meta)
-          val newMeta =
-            if (tracks) bumpWatermark(snap.meta, adds) else snap.meta
-          val entries =
-            (if (newMeta != snap.meta) Seq(LogEntry(meta = Some(newMeta)))
-             else Nil) ++
-            affected.map(a => LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
-            adds.map(a => LogEntry(add = Some(a))) ++
-            captureTail(snap.meta, "MERGE_INTO", snap.version, {
+          val entries = stageCommit(snap, snap.meta, "MERGE_INTO", affected,
+              Some(kept), {
               // feed, Delta's four change types: an update clause emits
               // the pre/postimage pair, a delete clause a plain delete,
               // an insert clause a plain insert; untouched survivors
@@ -1286,15 +1246,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         val insAligned =
           if (idFeed && !byId) insAligned0b.localCheckpoint()
           else insAligned0b
-        val adds = stageWrite(survivors.unionByName(insAligned), snap.meta)
-        val newMeta =
-          if (tracks) bumpWatermark(snap.meta, adds) else snap.meta
-        val entries =
-          (if (newMeta != snap.meta) Seq(LogEntry(meta = Some(newMeta)))
-           else Nil) ++
-          affected.map(a => LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
-          adds.map(a => LogEntry(add = Some(a))) ++
-          captureTail(snap.meta, "APPLY_CHANGES", snap.version, {
+        val entries = stageCommit(snap, snap.meta, "APPLY_CHANGES", affected,
+            Some(survivors.unionByName(insAligned)), {
             // this table's OWN feed keeps the four-type fidelity: a key
             // both removed and upserted is an update pair, a key only
             // removed a delete, a key with no prior row an insert. On a
@@ -1392,16 +1345,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         if (snap.meta.cdf && (tracks || snap.meta.identities.nonEmpty))
           staged0.localCheckpoint()
         else staged0
-      val adds = stageWrite(staged, merged)
-      val newMeta = bumpIdentities(
-        if (tracks) bumpWatermark(merged, adds) else merged, adds)
-      val metaEntry =
-        if (newMeta != snap.meta) Seq(LogEntry(meta = Some(newMeta)))
-        else Nil
-      val entries = metaEntry ++
-        doomed.map(a => LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
-        adds.map(a => LogEntry(add = Some(a))) ++
-        captureTail(merged, "OVERWRITE_PARTITION", snap.version, {
+      val entries = stageCommit(snap, merged, "OVERWRITE_PARTITION", doomed,
+          Some(staged), {
           // both capture sides under the MERGED schema: the doomed files
           // may predate an evolution this very load introduces. On a
           // tracked CDF table both sides carry _row_id — the retracted
@@ -3824,49 +3769,83 @@ final class TxTable(spark: SparkSession, rootStr: String) {
 
   /** Write `df` as new immutable files under `data/<uuid>/` and return
     * their add actions: relative path, partition values (from the
-    * directory names), row count and per-column min/max — collected with
-    * ONE aggregation over just the new files (a production engine lifts
-    * these from parquet footers; same numbers, same one-pass cost).
-    */
-  private def stageWrite(df: DataFrame, meta: Meta): Vector[Add] = {
-    val stage = "data/" + java.util.UUID.randomUUID.toString.take(8)
-    val stagePath = new Path(root, stage)
-    // files store PHYSICAL names: a post-rename write lands in the same
-    // column the pre-rename files carry (partition columns are identity-
-    // mapped — rename refuses them)
-    val physDf = df.select(df.columns.map(c =>
-      col(c).as(meta.physicalOf(c))).toIndexedSeq: _*)
-    // ONE Spark action lands the parquet AND returns per-file stats
-    // computed by the writer tasks (round-15: replaces write job +
-    // staging-dir walk + stats read-back aggregation — at 100 TB the
-    // read-back was a second full pass over every staged byte)
+    * directory names), row count and per-column min/max / null count /
+    * string HLL, computed by the writer tasks in ONE Spark action. */
+  private def stageWrite(df: DataFrame, meta: Meta): Vector[Add] =
+    stageWithFeed(df, None, meta)._1
+
+  /** [[stageWrite]] plus, when `changes` is given, the commit's change
+    * rows (table columns + `_change_type`) landed flat under
+    * `_change_data/<uuid>/` IN THE SAME Spark action (Delta's
+    * commit-time CDF design: the committer already has the changed rows
+    * in hand, so every later [[readChanges]] just reads them). Both
+    * sides store PHYSICAL names, so a feed slice written before a
+    * rename reads back under any later logical spelling. Lost-race
+    * restagings orphan their files and [[vacuum]] mops them. */
+  private def stageWithFeed(df: DataFrame, changes: Option[DataFrame],
+      meta: Meta): (Vector[Add], Vector[Cdf]) = {
+    def phys(d: DataFrame) = d.select(d.columns.map(c =>
+      if (c == "_change_type") col(c)
+      else col(c).as(meta.physicalOf(c))).toIndexedSeq: _*)
+    def stageDir(kind: String) = new Path(root,
+      kind + "/" + java.util.UUID.randomUUID.toString.take(8)).toString
     val present = df.schema.fieldNames.toSet
     val statCols = statColsOf(meta, present)
     // root as a URI PATH (scheme-stripped) — [[relPath]]'s spelling, so
     // the returned rel paths match the hit sets deleteWhere/update build
-    val stats = StageWrite.stage(spark, physDf, stagePath.toString,
-      root.toUri.getPath, meta.partitionCols, statCols, TxTable.statHllLgK)
-    val baseAdds = addsFromStats(stats, statCols)
-    withBloomSidecars(baseAdds, meta, present)
+    val rootAbs = root.toUri.getPath
+    val stats = changes match {
+      case None =>
+        StageWrite.stage(spark, phys(df), stageDir("data"), rootAbs,
+          meta.partitionCols, statCols, TxTable.statHllLgK)
+      case Some(ch) =>
+        StageWrite.stageWithCapture(spark, phys(df), phys(ch),
+          stageDir("data"), stageDir("_change_data"), rootAbs,
+          meta.partitionCols, statCols, TxTable.statHllLgK)
+    }
+    val (cdfs, data) = stats.partition(_.cdf)
+    (withBloomSidecars(addsFromStats(data, statCols), meta, present),
+      cdfs.map(c => Cdf(c.rel, c.rows, bytes = Some(c.bytes))))
   }
 
-  /** The stat-column spec a staged write computes per file: physical
-    * name, logical type, stat kind — same selection [[stagedAdds]]'
-    * read-back aggregation uses. */
-  private def statColsOf(meta: Meta, present: Set[String])
-      : Seq[(String, DataType, String)] =
-    meta.schema.fields.toSeq
-      .filterNot(f => meta.partitionCols.contains(f.name))
-      .filter(f => statKind(f.dataType).isDefined)
-      .filter(f => present.contains(f.name))
-      .map(f => (meta.physicalOf(f.name), f.dataType,
-        statKind(f.dataType).get)) ++
-      (if (present.contains(RowIdCol))
-        Seq((RowIdCol, LongType: DataType, "l")) else Nil)
+  /** The one staging kernel behind every row-rewriting DML verb: lands
+    * `rows` (when given) and, on a change-feed table, the `changes`
+    * rows in ONE [[stageWithFeed]] action, then returns the commit's
+    * entries: the meta entry when `meta` (evolved, protocol-stamped, or
+    * watermark-bumped past the landed ids/identities) differs from the
+    * snapshot's, `extra` entries, Removes for `doomed`, Adds, Cdf
+    * actions, and the Info line marked `cdfCaptured` exactly when the
+    * table captures (the marker lets [[readChanges]] trust an empty
+    * capture, a pure rewrite, instead of falling back). Each verb keeps
+    * its own match logic, gates and rebase choice. */
+  private def stageCommit(snap: Snapshot, meta: Meta, op: String,
+      doomed: Seq[Add], rows: Option[DataFrame], changes: => DataFrame,
+      extra: Seq[LogEntry] = Nil): Seq[LogEntry] = {
+    val (adds, cdfs) =
+      if (meta.cdf)
+        stageWithFeed(rows.getOrElse(
+          readFiles(snap, Nil, withRowId = meta.tracksRows)),
+          Some(changes), meta)
+      else (rows.fold(Vector.empty[Add])(stageWrite(_, meta)), Vector.empty)
+    val newMeta = bumpIdentities(
+      if (meta.tracksRows) bumpWatermark(meta, adds) else meta, adds)
+    (if (newMeta != snap.meta) Seq(LogEntry(meta = Some(newMeta))) else Nil) ++
+      extra ++
+      doomed.map(a =>
+        LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
+      adds.map(a => LogEntry(add = Some(a))) ++
+      cdfs.map(c => LogEntry(cdf = Some(c))) :+
+      LogEntry(info = Some(Info(op, snap.version,
+        cdfCaptured = if (meta.cdf) Some(true) else None)))
+  }
 
-  private def addsFromStats(stats: Vector[StagedStat],
+  /** Add actions from writer-computed stats; `statCols` is the spec the
+    * files were staged under ([[TxTable.statColsOf]]). Stats are keyed
+    * by PHYSICAL names: the physical name never changes, so a file's
+    * stats stay addressable through any sequence of renames. */
+  private[lake] def addsFromStats(stats: Vector[StagedStat],
       statCols: Seq[(String, DataType, String)]): Vector[Add] =
-    stats.filterNot(_.cdf).map { s =>
+    stats.map { s =>
       val st = statCols.zipWithIndex.flatMap { case ((p, _, kind), i) =>
         val mn = s.mins(i)
         val mx = s.maxs(i)
@@ -3883,7 +3862,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
   /** Bloom sidecars for indexed columns — the one remaining read-back
     * pass, only on tables that declare bloom indexes (the filter is
     * sized by the LARGEST staged file's rows, unknowable mid-write). */
-  private def withBloomSidecars(baseAdds: Vector[Add], meta: Meta,
+  private[lake] def withBloomSidecars(baseAdds: Vector[Add], meta: Meta,
       present: Set[String]): Vector[Add] = {
     val indexed = meta.bloomCols.filter { case (c, _) =>
       present.contains(c) && !meta.partitionCols.contains(c)
@@ -3904,91 +3883,12 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     }
   }
 
-  /** Add actions for already-staged parquet (a staging DIRECTORY from
-    * [[stageWrite]], or the explicit leaf files a DSv2 streaming-write
-    * task landed): row count, bytes, per-column min/max and bloom
-    * sidecars collected with ONE aggregation over just the new files.
-    *
-    * Stats are computed over — and keyed by — PHYSICAL names: the
-    * physical name never changes, so a file's stats stay addressable
-    * through any sequence of renames (candidateFiles translates).
-    * `_row_id` (never renamed, not in the logical schema) rides along
-    * when present — its max feeds the watermark bump, its min/max
-    * prune row-id point lookups. `present` is the set of LOGICAL (plus
-    * `_row_id`) column names the staged data actually carries — absent
-    * columns get no stats rather than an all-null aggregate.
-    */
-  private[lake] def stagedAdds(paths: Seq[String], meta: Meta,
-      present: Set[String]): Vector[Add] = {
-    val statCols = meta.schema.fields.toSeq
-      .filterNot(f => meta.partitionCols.contains(f.name))
-      .filter(f => statKind(f.dataType).isDefined)
-      .filter(f => present.contains(f.name))
-      .map(f => meta.physicalOf(f.name) -> f.dataType) ++
-      (if (present.contains(RowIdCol))
-        Seq(RowIdCol -> (LongType: DataType)) else Nil)
-    // Explicit-schema read of the staged leaf files: the stats pass
-    // needs no partition columns (their values come from the PATH via
-    // partValues) and the physical data schema is fully known from
-    // `meta` + `present`, so footer schema inference — a Spark job of
-    // its own per commit — is skipped. Absent columns are excluded by
-    // `present`; extra schema fields a file lacks read as null and feed
-    // no aggregate.
-    val readSchema = StructType(
-      meta.schema.fields.toSeq
-        .filterNot(f => meta.partitionCols.contains(f.name))
-        .filter(f => present.contains(f.name))
-        .map(f => f.copy(name = meta.physicalOf(f.name), nullable = true)) ++
-        (if (present.contains(RowIdCol))
-          Seq(StructField(RowIdCol, LongType)) else Nil))
-    val staged = spark.read.schema(readSchema).parquet(paths: _*)
-    // STRING columns also carry a small per-file HLL sketch (lgK=9,
-    // ~300 B base64): sketches UNION exactly across files, so the
-    // catalog's estimateStatistics can report a real distinct-count
-    // for string join keys — integer keys get a span bound instead,
-    // strings have none. Same single aggregation pass.
-    val aggs = count(lit(1L)).as("__rows") +:
-      first(col("_metadata.file_size")).as("__bytes") +:
-      statCols.flatMap { case (p, dt) =>
-        Seq(min(col(p)).cast("string").as(s"__min_$p"),
-          max(col(p)).cast("string").as(s"__max_$p"),
-          sum(when(col(p).isNull, 1L).otherwise(0L)).as(s"__n_$p")) ++
-          (if (statKind(dt).contains("s"))
-            Seq(hll_sketch_agg(col(p), TxTable.statHllLgK)
-              .as(s"__hll_$p"))
-          else Nil)
-      }
-    val baseAdds = staged
-      .groupBy(col("_metadata.file_path").as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-      .map { r =>
-        val rel = relPath(r.getAs[String]("__f"))
-        val stats = statCols.flatMap { case (p, dt) =>
-          val mn = r.getAs[String](s"__min_$p")
-          val mx = r.getAs[String](s"__max_$p")
-          if (mn == null || mx == null) None
-          else Some(p -> Stat(statKind(dt).get, mn, mx,
-            nulls = Some(r.getAs[Long](s"__n_$p")),
-            hll =
-              if (!statKind(dt).contains("s")) None
-              else Option(r.getAs[Array[Byte]](s"__hll_$p"))
-                .map(java.util.Base64.getEncoder.encodeToString)))
-        }.toMap
-        Add(rel, r.getAs[Long]("__rows"), partValues(rel), stats,
-          bytes = Some(r.getAs[Long]("__bytes")))
-      }.toVector
-    // bloom-indexed columns: one extra aggregation pass per indexed
-    // column this load carries, sidecars attached before the commit —
-    // new files are indexed the moment they are live
-    withBloomSidecars(baseAdds, meta, present)
-  }
-
   /** Commit already-staged files as one atomic APPEND under a
     * writer-transaction watermark — the DSv2 streaming sink's commit
-    * half ([[graft.lake.TxStreamingWrite]]): executors landed the
-    * parquet, the driver turns the file list into Add actions
-    * ([[stagedAdds]]) and claims the version. Same optimistic loop as
+    * half ([[graft.lake.TxStreamingWrite]]): executor tasks landed the
+    * parquet through [[StageTaskWriter]] and reported its stats, the
+    * caller built the Add actions from them, and this claims the
+    * version. Same optimistic loop as
     * [[append]]: a replayed (appId, txnVersion) is a log-enforced
     * no-op, a lost race re-checks against the fresh snapshot, staged
     * orphans of an abandoned attempt are vacuum's to reclaim.
@@ -4116,89 +4016,16 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     case None => a.dvPositions
   }
 
-  /** Stage a commit's changed rows (table columns + `_change_type`) as
-    * parquet under `_change_data/<uuid>/` and return their Cdf actions —
-    * Delta's commit-time CDF design: the feed is WRITTEN once by the
-    * committer that already has the changed rows in hand, and every
-    * later [[readChanges]] just reads it, instead of re-reading both
-    * file sets of the commit and diffing them per feed read. Cost is
-    * O(changed rows) at commit; lost-race restagings orphan their files
-    * and [[vacuum]] mops them, like [[stageWrite]]'s.
-    */
-  private def stageCdf(changes: DataFrame, meta: Meta): Vector[Cdf] = {
-    val stage = "_change_data/" + java.util.UUID.randomUUID.toString.take(8)
-    val stagePath = new Path(root, stage)
-    // change data stores PHYSICAL names too, so a feed slice written
-    // before a rename reads back under any later logical spelling
-    val phys = changes.select(changes.columns.map(c =>
-      if (c == "_change_type") col(c)
-      else col(c).as(meta.physicalOf(c))).toIndexedSeq: _*)
-    phys.write.mode("overwrite").parquet(stagePath.toString)
-    // byte size recorded AT CAPTURE (like Add.bytes): the feed planner
-    // splits captured files from log metadata alone — no per-file
-    // driver fs round-trip per micro-batch. The feed needs only
-    // (rows, bytes) per file — both sit in metadata the committer
-    // already has: bytes from the directory listing, rows from the
-    // parquet FOOTER. Below [[TxTable.cdfFooterStatsMaxFilesKey]] files
-    // (default 64) the driver reads the footers directly — no Spark
-    // job at all, ~1 ms/file on local disks; a capture landing more
-    // files (the 100 TB shape) keeps the distributed pass, whose
-    // explicit schema skips footer re-inference. Zero-row files carry
-    // no Cdf action in either path (a row-group-less footer is exactly
-    // the no-group case of the aggregate).
-    val listed = fs.listStatus(stagePath)
-      .filter(_.getPath.getName.endsWith(".parquet")).sortBy(_.getPath.getName)
-    if (listed.length <= TxTable.cdfFooterStatsMaxFiles(spark)) {
-      listed.iterator.map { st =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromStatus(st, spark.sparkContext.hadoopConfiguration)
-        val rows = {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }
-        Cdf(relPath(st.getPath.toString), rows, bytes = Some(st.getLen))
-      }.filter(_.rows > 0L).toVector
-    } else
-      spark.read.schema(phys.schema).parquet(stagePath.toString)
-        .groupBy(col("_metadata.file_path").as("__f"))
-        .agg(count(lit(1L)).as("__rows"),
-          first(col("_metadata.file_size")).as("__bytes"))
-        .collect()
-        .map(r => Cdf(relPath(r.getAs[String]("__f")), r.getAs[Long]("__rows"),
-          bytes = Some(r.getAs[Long]("__bytes"))))
-        .toVector
-  }
-
-  /** The commit-tail entries for a mutating op under optional change
-    * capture: the staged Cdf actions (empty when capture is off or
-    * nothing changed) plus the Info line, marked `cdfCaptured` exactly
-    * when this table captures — the marker is what lets [[readChanges]]
-    * trust an empty capture (pure rewrite) instead of falling back. */
-  private def captureTail(meta: Meta, op: String, readVersion: Long,
-      changes: => DataFrame): Seq[LogEntry] = {
-    val cdfs = if (meta.cdf) stageCdf(changes, meta) else Vector.empty
-    cdfs.map(c => LogEntry(cdf = Some(c))) :+
-      LogEntry(info = Some(Info(op, readVersion,
-        cdfCaptured = if (meta.cdf) Some(true) else None)))
-  }
-
-  private def statKind(dt: DataType): Option[String] = dt match {
-    case ByteType | ShortType | IntegerType | LongType => Some("l")
-    case FloatType | DoubleType                        => Some("d")
-    case StringType                                    => Some("s")
-    case _                                             => None
-  }
-
   /** Relative under this root for own files; pass-through absolute for
     * files a shallow clone references outside it (their Add.path is
     * stored absolute, so the round-trip matches either way). */
-  private def relPath(abs: String): String = {
+  private[lake] def relPath(abs: String): String = {
     val a = new Path(new java.net.URI(abs)).toUri.getPath
     val r = root.toUri.getPath.stripSuffix("/")
     if (a.startsWith(r + "/")) a.stripPrefix(r + "/") else a
   }
 
-  private def partValues(rel: String): Map[String, String] =
+  private[lake] def partValues(rel: String): Map[String, String] =
     rel.split('/').iterator.filter(_.contains('='))
       .map { seg =>
         val i = seg.indexOf('=')
@@ -4230,17 +4057,29 @@ object TxTable {
     * at ~300 base64 bytes per column per file in the log. */
   val statHllLgK = 9
 
-  /** Max change-capture file count for which the committer reads
-    * (rows, bytes) straight from the parquet footers on the driver —
-    * one in-process read per file — instead of running a Spark
-    * aggregation job. Law: the threshold bounds DRIVER work per commit,
-    * not coverage; a capture landing more files (large clusters at
-    * 100 TB) automatically takes the distributed pass. */
-  val cdfFooterStatsMaxFilesKey = "spark.graft.lake.cdfFooterStatsMaxFiles"
-  private[lake] def cdfFooterStatsMaxFiles(
-      spark: org.apache.spark.sql.SparkSession): Int =
-    spark.conf.getOption(cdfFooterStatsMaxFilesKey)
-      .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(64)
+  private[lake] def statKind(dt: DataType): Option[String] = dt match {
+    case ByteType | ShortType | IntegerType | LongType => Some("l")
+    case FloatType | DoubleType                        => Some("d")
+    case StringType                                    => Some("s")
+    case _                                             => None
+  }
+
+  /** The stat-column spec a staged write computes per file: physical
+    * name, logical type, stat kind, for every stat-kinded non-partition
+    * column the staged data carries (`present`: logical names plus
+    * `_row_id`). `_row_id` (never renamed, not in the logical schema)
+    * rides along when present: its max feeds the watermark bump, its
+    * min/max prune row-id point lookups. */
+  private[lake] def statColsOf(meta: TxLog.Meta, present: Set[String])
+      : Seq[(String, DataType, String)] =
+    meta.schema.fields.toSeq
+      .filterNot(f => meta.partitionCols.contains(f.name))
+      .filter(f => statKind(f.dataType).isDefined)
+      .filter(f => present.contains(f.name))
+      .map(f => (meta.physicalOf(f.name), f.dataType,
+        statKind(f.dataType).get)) ++
+      (if (present.contains("_row_id"))
+        Seq(("_row_id", LongType: DataType, "l")) else Nil)
 
   /** Validate a TBLPROPERTIES map WITHOUT touching any table — the
     * shared gate for `SET TBLPROPERTIES` and `CREATE TABLE ...

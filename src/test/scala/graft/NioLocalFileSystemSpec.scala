@@ -115,4 +115,28 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     assert(nio.listStatus(new Path(dir.toUri)).map(_.getPath.getName).toSeq
       === raw.listStatus(new Path(dir.toUri)).map(_.getPath.getName).toSeq)
   }
+
+  test("listStatus keeps a child name holding ':' as one path segment") {
+    val (nio, raw) = fs()
+    val dir = Files.createTempDirectory("nio_fs_colon")
+    Files.write(dir.resolve("a:b.parquet"), Array[Byte](1))
+    val listed = nio.listStatus(new Path(dir.toUri))
+    assert(listed.map(_.getPath.getName).toSeq === Seq("a:b.parquet"))
+    assert(listed.map(_.getPath).toSeq ===
+      raw.listStatus(new Path(dir.toUri)).map(_.getPath).toSeq)
+    // the listed path round-trips to the same file
+    assert(nio.getFileStatus(listed.head.getPath).getLen === 1L)
+  }
+
+  test("getFileStatus under a regular file (ENOTDIR) throws " +
+      "FileNotFoundException") {
+    val (nio, raw) = fs()
+    val dir = Files.createTempDirectory("nio_fs_notdir")
+    val f = dir.resolve("plain")
+    Files.write(f, Array[Byte](1))
+    val p = new Path(new Path(f.toUri), "child")
+    intercept[java.io.FileNotFoundException](raw.getFileStatus(p))
+    intercept[java.io.FileNotFoundException](nio.getFileStatus(p))
+    assert(!nio.exists(p))
+  }
 }
