@@ -149,6 +149,10 @@ object StageWrite {
     val stats = statCols.map { case (phys, dt, kind) =>
       val ord = dataNames.indexOf(phys)
       require(ord >= 0, s"stat column $phys absent from staged schema")
+      // the writer reads each value under `dt`: it must be the staged
+      // column's own type, never a table type the rows were not cast to
+      require(dataTypes(ord) == dt, s"stat column $phys: spec type " +
+        s"${dt.simpleString} != staged ${dataTypes(ord).simpleString}")
       StatSpec(phys, ord, dt, kind)
     }.toArray
     val job = Job.getInstance(spark.sessionState.newHadoopConf())

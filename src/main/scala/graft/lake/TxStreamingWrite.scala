@@ -236,7 +236,7 @@ final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
       f.copy(name = meta.physicalOf(f.name))))
     (phys, parts, (checks ++ genValidators).toArray,
       requiredOrds.toArray, appended,
-      TxTable.statColsOf(meta, augSchema.fieldNames.toSet))
+      TxTable.statColsOf(meta, augSchema))
   }
 
   /** The staged data's LOGICAL schema: the stream's own columns plus

@@ -3790,7 +3790,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     def stageDir(kind: String) = new Path(root,
       kind + "/" + java.util.UUID.randomUUID.toString.take(8)).toString
     val present = df.schema.fieldNames.toSet
-    val statCols = statColsOf(meta, present)
+    val statCols = statColsOf(meta, df.schema)
     // root as a URI PATH (scheme-stripped) — [[relPath]]'s spelling, so
     // the returned rel paths match the hit sets deleteWhere/update build
     val rootAbs = root.toUri.getPath
@@ -4065,21 +4065,23 @@ object TxTable {
   }
 
   /** The stat-column spec a staged write computes per file: physical
-    * name, logical type, stat kind, for every stat-kinded non-partition
-    * column the staged data carries (`present`: logical names plus
-    * `_row_id`). `_row_id` (never renamed, not in the logical schema)
-    * rides along when present: its max feeds the watermark bump, its
-    * min/max prune row-id point lookups. */
-  private[lake] def statColsOf(meta: TxLog.Meta, present: Set[String])
-      : Seq[(String, DataType, String)] =
-    meta.schema.fields.toSeq
-      .filterNot(f => meta.partitionCols.contains(f.name))
-      .filter(f => statKind(f.dataType).isDefined)
-      .filter(f => present.contains(f.name))
-      .map(f => (meta.physicalOf(f.name), f.dataType,
-        statKind(f.dataType).get)) ++
-      (if (present.contains("_row_id"))
-        Seq(("_row_id", LongType: DataType, "l")) else Nil)
+    * name, STAGED type, stat kind, for every stat-kinded non-partition
+    * table column the staged data carries (`staged`: logical names plus
+    * `_row_id`). The type is the staged column's, not the table's: a
+    * stream may land a wider type the commit then evolves the table
+    * to, and the writer reads each value under this type. `_row_id`
+    * (never renamed, not in the logical schema) rides along when
+    * present: its max feeds the watermark bump, its min/max prune
+    * row-id point lookups. */
+  private[lake] def statColsOf(meta: TxLog.Meta, staged: StructType)
+      : Seq[(String, DataType, String)] = {
+    val types = staged.fields.map(f => f.name -> f.dataType).toMap
+    meta.schema.fieldNames.toSeq
+      .filterNot(meta.partitionCols.contains)
+      .flatMap(c => types.get(c).flatMap(dt =>
+        statKind(dt).map(k => (meta.physicalOf(c), dt, k)))) ++
+      types.get("_row_id").map(dt => ("_row_id", dt, "l"))
+  }
 
   /** Validate a TBLPROPERTIES map WITHOUT touching any table — the
     * shared gate for `SET TBLPROPERTIES` and `CREATE TABLE ...

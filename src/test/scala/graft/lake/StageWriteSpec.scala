@@ -320,6 +320,27 @@ class StageWriteSpec extends SparkSpec {
     assert(snap.meta.nextRowId === maxId + 1L)
   }
 
+  test("DSv2 stream epoch Adds equal the read-back reference when the " +
+      "stream lands wider types the commit widens the table to") {
+    val root = Files.createTempDirectory("stage_stream_wide")
+      .resolve("t").toString
+    new TxTable(spark, root).create(Seq((1, 1.5f, "a")).toDF("k", "x", "v"))
+    // long values past Int.MaxValue into an int column, doubles that no
+    // float holds into a float column
+    val big = Int.MaxValue.toLong + 1000L
+    val rows = spark.range(40).select((col("id") + big).as("k"),
+      (col("id") * 1.0e300).as("x"), concat(lit("w"), col("id")).as("v"))
+    val (tab, snap) = streamAndCheck(root, rows, "wide")
+    assert(snap.meta.schema("k").dataType === LongType)
+    assert(snap.meta.schema("x").dataType === DoubleType)
+    val streamed = streamedAdds(root)
+    assert(streamed.map(_.stats("k").max.toLong).max === big + 39L)
+    assert(streamed.map(_.stats("k").min.toLong).min === big)
+    // skipping keeps every file that holds a probed value
+    assert(tab.read().where(col("k") === big + 17L).count() === 1)
+    assert(tab.read().where(col("x") === 39L * 1.0e300).count() === 1)
+  }
+
   test("DSv2 stream epoch Adds equal the read-back reference on the " +
       "first epoch into a table the commit itself creates") {
     val root = Files.createTempDirectory("stage_stream_new")
