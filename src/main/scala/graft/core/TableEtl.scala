@@ -249,7 +249,10 @@ abstract class TableEtl(
     * dynamic-partition-overwrite commit (same-timestamp re-runs replace
     * their own partition, exactly like the parquet path's dynamic mode,
     * but readers can never see a half-written load and the schema rides
-    * in the log, not the sidecar).
+    * in the log, not the sidecar). The load's stamp is read off the
+    * files the commit staged, so a warm load runs the node's transform
+    * once; a load carrying zero or several stamps is refused before it
+    * commits.
     */
   private def writeTx(ds: EtlDataSet): Long = {
     val tab = new graft.lake.TxTable(spark, ds.storagePath)
@@ -257,12 +260,7 @@ abstract class TableEtl(
     else {
       require(ds.partitionKeys.size == 1,
         s"txlog write supports exactly one partition key, got ${ds.partitionKeys}")
-      val k = ds.partitionKeys.head
-      val vals = ds.data.select(col(k).cast("string")).distinct()
-        .collect().map(_.getString(0))
-      require(vals.length == 1,
-        s"one load = one $k stamp; got ${vals.length} distinct values")
-      tab.overwritePartition(k, vals.head, ds.data.hint("rebalance"))
+      tab.overwritePartition(ds.partitionKeys.head, ds.data.hint("rebalance"))
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.lake
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path,
+  RawLocalFileSystem}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s.{Formats, NoTypeHints}
 import org.json4s.jackson.Serialization
@@ -524,35 +525,57 @@ object TxLog {
     * tail commits, so without this a K-commit script re-reads and
     * re-json4s-parses the same files O(K²) times per query (reflection-
     * based parse is the driver-gap cost the round-14 samples caught in
-    * `TxLog.render`/scalap). Keyed by path and guarded by (length,
-    * mtime): a scratch root wiped and re-created at the same path —
+    * `TxLog.render`/scalap). Keyed by path and guarded by the file's
+    * [[Stamp]]: a scratch root wiped and re-created at the same path —
     * every bench re-run does this — misses instead of serving stale
     * entries. Entries are immutable case classes, safe to share.
     * Bounded LRU; ~2k files ≈ a few MB of Adds. */
   private val parsedCache =
-    new java.util.LinkedHashMap[String, (Long, Long, Seq[LogEntry])](
+    new java.util.LinkedHashMap[String, (Stamp, Seq[LogEntry])](
       256, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (Long, Long, Seq[LogEntry])])
+          e: java.util.Map.Entry[String, (Stamp, Seq[LogEntry])])
           : Boolean = size > 2048
     }
+
+  /** A file's identity for [[parsedCache]]: length, mtime and, where the
+    * scheme exposes one, the file key (device + inode on the local
+    * filesystem). A same-length file re-created at the same path within
+    * the mtime granularity differs only in its key. */
+  private final case class Stamp(len: Long, mtime: Long, key: Option[AnyRef])
+
+  private def stampOf(fs: FileSystem, p: Path): Stamp = {
+    val local = fs match {
+      case l: RawLocalFileSystem => Some(l.pathToFile(p))
+      case l: LocalFileSystem => Some(l.pathToFile(p))
+      case _ => None
+    }
+    local match {
+      case Some(f) =>
+        val a =
+          try java.nio.file.Files.readAttributes(f.toPath,
+            classOf[java.nio.file.attribute.BasicFileAttributes])
+          catch { case _: java.nio.file.NoSuchFileException =>
+            throw new java.io.FileNotFoundException(s"File $p does not exist") }
+        Stamp(a.size, a.lastModifiedTime.toMillis, Option(a.fileKey))
+      case None =>
+        val st = fs.getFileStatus(p)
+        Stamp(st.getLen, st.getModificationTime, None)
+    }
+  }
 
   /** Read + parse `p` through [[parsedCache]]. Callers must have
     * established existence (the cache lookup re-stats the file anyway
     * and throws FileNotFoundException like `open` would). */
   private def parseCached(fs: FileSystem, p: Path): Seq[LogEntry] = {
-    val st = fs.getFileStatus(p)
+    val st = stampOf(fs, p)
     val key = p.toString
     parsedCache.synchronized {
       val hit = parsedCache.get(key)
-      if (hit != null && hit._1 == st.getLen &&
-          hit._2 == st.getModificationTime)
-        return hit._3
+      if (hit != null && hit._1 == st) return hit._2
     }
     val es = parse(readString(fs, p))
-    parsedCache.synchronized {
-      parsedCache.put(key, (st.getLen, st.getModificationTime, es)): Unit
-    }
+    parsedCache.synchronized { parsedCache.put(key, (st, es)): Unit }
     es
   }
 

@@ -1286,17 +1286,36 @@ final class TxTable(spark: SparkSession, rootStr: String) {
   }
 
   /** Replace one partition's contents with `df` (dynamic partition
-    * overwrite, the reference's write mode). `df` must carry the
-    * partition column with exactly `value` in every row. Additive schema
+    * overwrite, the reference's write mode). Every row of `df` must
+    * carry exactly `value` in the partition column. The check reads the
+    * partition values of the files the load staged, so no extra scan
+    * runs: a stray row (a null one included) is refused AFTER staging
+    * and before the commit, and the refused load's staged files are
+    * orphans [[vacuum]] reclaims, as after a lost race. Additive schema
     * evolution is accepted like [[append]]'s: a load that gained a
     * column lands the merged schema in the same commit, and older
     * partitions read back with nulls in it.
     */
-  def overwritePartition(partCol: String, value: String, df0: DataFrame): Long = {
+  def overwritePartition(partCol: String, value: String, df0: DataFrame): Long =
+    overwritePartitionOf(partCol, Some(value), df0)
+
+  /** [[overwritePartition]] of the one partition the rows land in —
+    * Spark's `partitionOverwriteMode=dynamic` for a single-stamp load.
+    * The rows must carry exactly one value of `partCol` (zero rows are
+    * refused too). Without the change feed the value comes from the
+    * staged files, so the commit is one staging action; a change-feed
+    * table lands the feed's delete half in that same action, so it
+    * learns the value first with one limit-1 probe.
+    */
+  def overwritePartition(partCol: String, df0: DataFrame): Long =
+    overwritePartitionOf(partCol, None, df0)
+
+  private def overwritePartitionOf(partCol: String, given: Option[String],
+      df0: DataFrame): Long = {
     // generated columns first (create-time-fixed, so the first snapshot's
     // meta is authoritative): the headline use case partitions BY a
     // generated column, so the load may legitimately arrive without it —
-    // compute it before the stray check can even look at it
+    // compute it before staging can route rows by it
     val (first, firstComplete) = metaSnapshot()
     gateWriter(first.meta)
     gateAppendOnly(first.meta, "overwritePartition")
@@ -1304,16 +1323,28 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       s"identity column $c is GENERATED ALWAYS — writers must not " +
         "supply it"))
     val df = applyGenerated(applyDefaults(df0, first.meta), first.meta)
-    val stray = df.where(col(partCol).cast("string") =!= value).limit(1).count()
-    require(stray == 0, s"overwritePartition($partCol=$value) got rows outside the partition")
+    def oneStamp(n: Int) =
+      s"one load = one $partCol stamp; got $n distinct values"
+    var value = given.orElse(
+      if (!first.meta.cdf) None
+      else {
+        val head = df.select(col(partCol).cast("string")).limit(1).collect()
+        require(head.nonEmpty, oneStamp(0))
+        Some(Option(head(0).getString(0))
+          .getOrElse("__HIVE_DEFAULT_PARTITION__"))
+      })
+    def doomedIn(s: Snapshot) =
+      s.adds.filter(_.partitionValues.get(partCol) == value)
     var attempt = 0
     while (true) {
       // above the driver threshold only the target value's files (plus
       // any layout-mismatched file — the refusal below must see them)
-      // are collected; untouched partitions never reach the driver
+      // are collected; untouched partitions never reach the driver. A
+      // value-free load's first attempt there stages against the
+      // meta-only snapshot and plans once the staged files name the value.
       val snap =
         if (attempt == 0 && firstComplete) first
-        else partitionOverwriteSnapshot(partCol, value)
+        else value.fold(first)(partitionOverwriteSnapshot(partCol, _))
       gateWriter(snap.meta)
       require(snap.meta.partitionCols.contains(partCol),
         s"$partCol is not a partition column of $root")
@@ -1323,12 +1354,13 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       // (Exact on the pruned subset too: every layout-mismatched file
       // is collected by construction.)
       val pset = snap.meta.partitionCols.toSet
-      require(snap.adds.forall(_.partitionValues.keySet == pset),
-        s"mixed partition layouts in $root — run repartitionRewrite() " +
-          "before overwritePartition")
+      def homogeneous(s: Snapshot): Unit =
+        require(s.adds.forall(_.partitionValues.keySet == pset),
+          s"mixed partition layouts in $root — run repartitionRewrite() " +
+            "before overwritePartition")
+      homogeneous(snap)
       enforceConstraints(df, snap.meta)
       val merged = evolve(snap.meta, df.schema)
-      val doomed = snap.adds.filter(_.partitionValues.get(partCol).contains(value))
       // a whole-partition replacement is new data — fresh row ids and
       // fresh identity values, from the attempt's watermarks. Under CDF
       // the nondeterministic assignment is MATERIALIZED
@@ -1345,24 +1377,44 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         if (snap.meta.cdf && (tracks || snap.meta.identities.nonEmpty))
           staged0.localCheckpoint()
         else staged0
-      val entries = stageCommit(snap, merged, "OVERWRITE_PARTITION", doomed,
-          Some(staged), {
+      val (adds, cdfs) = stageRows(snap, merged, Some(staged), {
           // both capture sides under the MERGED schema: the doomed files
           // may predate an evolution this very load introduces. On a
           // tracked CDF table both sides carry _row_id — the retracted
-          // rows' identities and the landed rows' fresh ones.
+          // rows' identities and the landed rows' fresh ones. (A
+          // change-feed table knows the value by now: probed above.)
           def aligned(d: DataFrame) =
             d.select(merged.schema.fields.map(f =>
               if (d.columns.contains(f.name)) col(f.name)
               else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq ++
               (if (idFeed) Seq(col(RowIdCol)) else Nil): _*)
-          aligned(readFiles(snap, doomed.map(_.path), withRowId = idFeed))
+          aligned(readFiles(snap, doomedIn(snap).map(_.path),
+              withRowId = idFeed))
             .withColumn("_change_type", lit("delete"))
             .unionAll(aligned(staged)
               .withColumn("_change_type", lit("insert")))
         })
-      val committed = TxLog.tryCommit(fs, root, snap.version + 1, entries)
-      if (committed) return snap.version + 1
+      val landed = adds.flatMap(_.partitionValues.get(partCol)).distinct
+      given match {
+        case Some(v) => require(landed.forall(_ == v),
+          s"overwritePartition($partCol=$v) got rows outside the partition")
+        case None => require(
+          landed.size == 1 && value.forall(_ == landed.head),
+          oneStamp(landed.size))
+      }
+      if (value.isEmpty) value = landed.headOption
+      // only a value-free first attempt above the driver threshold
+      // staged before it could plan: plan now. A commit that slipped in
+      // since the meta-only snapshot holds snap.version + 1, so the
+      // claim below loses the race and the retry restages.
+      val plan =
+        if (firstComplete || (snap ne first)) snap
+        else partitionOverwriteSnapshot(partCol, landed.head)
+      homogeneous(plan)
+      val entries = commitEntries(snap, merged, "OVERWRITE_PARTITION",
+        doomedIn(plan), adds, cdfs)
+      if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
+        return snap.version + 1
       attempt += 1
       require(attempt < maxRetries, s"overwrite in $root lost $maxRetries races")
     }
@@ -3821,12 +3873,24 @@ final class TxTable(spark: SparkSession, rootStr: String) {
   private def stageCommit(snap: Snapshot, meta: Meta, op: String,
       doomed: Seq[Add], rows: Option[DataFrame], changes: => DataFrame,
       extra: Seq[LogEntry] = Nil): Seq[LogEntry] = {
-    val (adds, cdfs) =
-      if (meta.cdf)
-        stageWithFeed(rows.getOrElse(
-          readFiles(snap, Nil, withRowId = meta.tracksRows)),
-          Some(changes), meta)
-      else (rows.fold(Vector.empty[Add])(stageWrite(_, meta)), Vector.empty)
+    val (adds, cdfs) = stageRows(snap, meta, rows, changes)
+    commitEntries(snap, meta, op, doomed, adds, cdfs, extra)
+  }
+
+  /** [[stageCommit]]'s staging half, for a verb that must look at the
+    * staged files before it can name its Removes. */
+  private def stageRows(snap: Snapshot, meta: Meta, rows: Option[DataFrame],
+      changes: => DataFrame): (Vector[Add], Vector[Cdf]) =
+    if (meta.cdf)
+      stageWithFeed(rows.getOrElse(
+        readFiles(snap, Nil, withRowId = meta.tracksRows)),
+        Some(changes), meta)
+    else (rows.fold(Vector.empty[Add])(stageWrite(_, meta)), Vector.empty)
+
+  /** [[stageCommit]]'s entry half: the staged files as one commit. */
+  private def commitEntries(snap: Snapshot, meta: Meta, op: String,
+      doomed: Seq[Add], adds: Vector[Add], cdfs: Vector[Cdf],
+      extra: Seq[LogEntry] = Nil): Seq[LogEntry] = {
     val newMeta = bumpIdentities(
       if (meta.tracksRows) bumpWatermark(meta, adds) else meta, adds)
     (if (newMeta != snap.meta) Seq(LogEntry(meta = Some(newMeta))) else Nil) ++

@@ -133,6 +133,26 @@ class GeneratedColumnsSpec extends SparkSpec {
     }.getMessage.contains("generated column bucket"))
   }
 
+  test("value-free overwritePartition routes by a generated partition " +
+      "column") {
+    val root = freshRoot("ovwdyn")
+    val tab = new TxTable(spark, root)
+    tab.create(rows(4).withColumn("bucket", ($"id" % 2).cast("string")),
+      partitionCols = Seq("bucket"),
+      generatedColumns = Map("bucket" -> "CAST(id % 2 AS STRING)"))
+    // the load arrives without the partition column: the table derives
+    // it, and the staged files name the partition the load replaces
+    tab.overwritePartition("bucket", rows(1, from = 11L))
+    val got = tab.read().select($"id", $"bucket").as[(Long, String)]
+      .collect().toMap
+    assert(got === Map(0L -> "0", 2L -> "0", 11L -> "1"))
+    // a load spanning both buckets carries two stamps
+    assert(intercept[IllegalArgumentException] {
+      tab.overwritePartition("bucket", rows(2, from = 20L))
+    }.getMessage.contains("got 2 distinct values"))
+    assert(tab.version === 1L)
+  }
+
   test("a generated expression containing a newline still guards DDL") {
     val root = freshRoot("nl")
     val tab = new TxTable(spark, root)

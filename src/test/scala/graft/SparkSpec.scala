@@ -9,6 +9,37 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Spark jobs `op` runs, counted between two marker jobs (listener
+    * events arrive in posting order, so the end marker's arrival means
+    * every job of `op` has been seen). */
+  def jobsOf(op: => Unit): Int = {
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    def marker(g: String): Unit = {
+      spark.sparkContext.setJobGroup(g, g)
+      try spark.sparkContext.parallelize(Seq(1), 1).count(): Unit
+      finally spark.sparkContext.clearJobGroup()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      marker("stage-jobs-begin")
+      op
+      marker("stage-jobs-end")
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("stage-jobs-end") &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      val seq = groups.toArray(Array.empty[String]).toSeq
+      assert(seq.contains("stage-jobs-end"), "listener never caught up")
+      seq.indexOf("stage-jobs-end") - seq.indexOf("stage-jobs-begin") - 1
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {

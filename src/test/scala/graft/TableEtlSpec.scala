@@ -73,6 +73,21 @@ class TableEtlSpec extends SparkSpec {
     assert(pinned.data.count() === 2)
   }
 
+  test("a warm txlog load runs as many Spark jobs as an append of the " +
+      "same frame") {
+    val base = Files.createTempDirectory("graft_jobs").toString
+    ordersNode(ctx(t0, base)).run() // day 0 creates the table
+    val second = ordersNode(ctx(t1, base))
+    val ds = second.transformUpstream(second.extractUpstream())
+    val load = jobsOf(second.write(ds): Unit)
+    val ref = new graft.lake.TxTable(spark,
+      Files.createTempDirectory("graft_jobs_ref").resolve("t").toString)
+    ref.create(ds.data.hint("rebalance"), ds.partitionKeys)
+    val append = jobsOf(ref.append(ds.data.hint("rebalance")): Unit)
+    assert(load === append)
+    assert(second.read().data.count() === 2)
+  }
+
   test("validation failure raises InvalidDataException and blocks the write") {
     val base = Files.createTempDirectory("graft_dq").toString
     val dup = ordersDf.union(ordersDf) // duplicate order_ids

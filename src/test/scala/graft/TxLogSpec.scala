@@ -957,6 +957,119 @@ class TxLogSpec extends SparkSpec {
       tab.overwritePartition("lang", "1", docs(3)))
   }
 
+  test("overwritePartition refuses a row whose partition value is null") {
+    val tab = new TxTable(spark, freshRoot("opnull"))
+    tab.create(docs(30), partitionCols = Seq("lang"))
+    val v = tab.version
+    val rows = docs(6).where($"lang" === "1")
+      .union(docs(1).withColumn("lang", lit(null).cast("string")))
+    val err = intercept[IllegalArgumentException](
+      tab.overwritePartition("lang", "1", rows))
+    assert(err.getMessage.contains("got rows outside the partition"))
+    assert(tab.version === v)
+    assert(tab.read().count() === 30)
+  }
+
+  test("value-free overwritePartition replaces the partition the rows " +
+      "land in; zero rows and two stamps are refused") {
+    val tab = new TxTable(spark, freshRoot("opdyn"))
+    tab.create(docs(30), partitionCols = Seq("lang"))
+    assert(tab.overwritePartition("lang",
+      docs(30).where($"lang" === "2").withColumn("text", lit("NEW"))) === 1L)
+    val got = tab.read()
+    assert(got.where($"lang" === "2" && $"text" =!= "NEW").count() === 0)
+    assert(got.where($"text" === "NEW").count() === 10)
+    assert(got.count() === 30)
+    val none = intercept[IllegalArgumentException](
+      tab.overwritePartition("lang", docs(30).where($"id" < 0L)))
+    assert(none.getMessage.contains(
+      "one load = one lang stamp; got 0 distinct values"))
+    val two = intercept[IllegalArgumentException](
+      tab.overwritePartition("lang", docs(2)))
+    assert(two.getMessage.contains(
+      "one load = one lang stamp; got 2 distinct values"))
+    assert(tab.version === 1L)
+    assert(tab.read().count() === 30)
+  }
+
+  test("value-free overwritePartition on a change-feed table: the " +
+      "commit's feed is the version diff") {
+    val tab = new TxTable(spark, freshRoot("opcdf"))
+    tab.create(docs(30), partitionCols = Seq("lang"),
+      enableChangeDataFeed = true)
+    val v = tab.overwritePartition("lang", docs(40)
+      .where($"lang" === "0" && $"id" >= 15L).withColumn("text", lit("NEW")))
+    val before = tab.read(asOf = Some(v - 1))
+    val after = tab.read(asOf = Some(v))
+    val feed = tab.readChanges(v, v)
+    def rows(d: DataFrame) =
+      d.select("id", "text", "lang").as[(Long, String, String)]
+        .collect().toSeq.sorted
+    assert(rows(feed.where($"_change_type" === "delete")) ===
+      rows(before.exceptAll(after)))
+    assert(rows(feed.where($"_change_type" === "insert")) ===
+      rows(after.exceptAll(before)))
+    assert(feed.count() === 10 + 9)
+    // a second stamp is caught after the probe, before the commit
+    intercept[IllegalArgumentException](
+      tab.overwritePartition("lang", docs(3)))
+    assert(tab.version === v)
+  }
+
+  test("value-free overwritePartition: two loads of one stamp race and " +
+      "exactly one load's rows survive") {
+    val tab = new TxTable(spark, freshRoot("oprace"))
+    tab.create(docs(30), partitionCols = Seq("lang"))
+    OverwriteRaceGate.reset()
+    // load A's single staging task waits until load B has committed, so
+    // A's first commit attempt loses the race and A restages
+    val gated = udf { (id: Long) => OverwriteRaceGate.pass(); id }
+    val a = docs(30).coalesce(1).where($"lang" === "1")
+      .withColumn("id", gated($"id") + 1000L)
+    val b = docs(30).where($"lang" === "1").withColumn("id", $"id" + 2000L)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
+    try {
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      val fa = scala.concurrent.Future(tab.overwritePartition("lang", a))
+      assert(OverwriteRaceGate.started.await(60,
+        java.util.concurrent.TimeUnit.SECONDS))
+      assert(tab.overwritePartition("lang", b) === 1L)
+      OverwriteRaceGate.committed.countDown()
+      assert(scala.concurrent.Await.result(fa,
+        scala.concurrent.duration.Duration(120, "s")) === 2L)
+    } finally {
+      OverwriteRaceGate.committed.countDown()
+      pool.shutdown()
+    }
+    val ones = tab.readEquals("lang", "1").select($"id").as[Long]
+      .collect().toSet
+    assert(ones === (1L until 30L by 3L).map(_ + 1000L).toSet)
+    assert(tab.read().count() === 30)
+  }
+
+  test("a commit file re-created at the same path with the same length " +
+      "and mtime misses the parsed-log cache") {
+    val root = freshRoot("pcache")
+    val rootP = new Path(root)
+    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new TxTable(spark, root).create(docs(3))
+    assert(TxLog.tryCommit(fs, rootP, 1L,
+      Seq(TxLog.LogEntry(info = Some(TxLog.Info("AAAA", 0L))))))
+    def op() = TxLog.commitEntries(fs, rootP, 1L).flatMap(_.info).map(_.op)
+    assert(op() === Seq("AAAA"))
+    // a new file (so a new inode) with same-length content and the old
+    // mtime, renamed over the commit
+    val file = java.nio.file.Paths.get(root, "_txlog", f"${1L}%020d.json")
+    val tmp = file.resolveSibling("rewrite.tmp")
+    val text = new String(Files.readAllBytes(file), "UTF-8")
+    Files.write(tmp, text.replace("AAAA", "BBBB").getBytes("UTF-8"))
+    Files.setLastModifiedTime(tmp, Files.getLastModifiedTime(file))
+    Files.move(tmp, file, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    assert(op() === Seq("BBBB"))
+  }
+
   test("deletion vectors: small deletes rewrite NOTHING, reads stay exact, " +
     "vectors merge, the cap falls back to copy-on-write, optimize purges") {
     val root = freshRoot("dv")
@@ -2305,6 +2418,61 @@ class LazySnapshotSpec extends SparkSpec {
     } finally spark.conf.unset(TxLog.driverSnapshotMaxFilesKey)
   }
 
+  test("value-free partition overwrite above the threshold stages, then " +
+      "plans; a commit landing in between is a lost race") {
+    import spark.implicits._
+    val root = freshRoot("owdyn")
+    val tab = new TxTable(spark, root)
+    tab.create(Seq((1L, "a"), (2L, "b")).toDF("id", "load"),
+      partitionCols = Seq("load"))
+    val rootP = new Path(root)
+    val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val real = TxLog.snapshot(fs, rootP)
+    val fakes = (0 until 3000).map(i => Add(s"fake/p$i.parquet", 10L,
+      Map("load" -> s"z$i"), Map.empty, bytes = Some(1L)))
+    val entries = (LogEntry(meta = Some(real.meta)) +:
+      (real.adds ++ fakes).map(a => LogEntry(add = Some(a)))).toSeq
+    val enc = org.apache.spark.sql.Encoders.product[LogEntry]
+    spark.createDataset(entries)(enc).write.mode("overwrite")
+      .parquet(new Path(rootP, f"_txlog/${0L}%020d.checkpoint.parquet")
+        .toString)
+    val o = fs.create(new Path(rootP, "_txlog/_last_checkpoint"), true)
+    try o.write(
+      s"""{"version":0,"entries":${entries.size}}""".getBytes("UTF-8"))
+    finally o.close()
+    spark.conf.set(TxLog.driverSnapshotMaxFilesKey, "1000")
+    assert(tab.overwritePartition("load",
+      Seq((20L, "b")).toDF("id", "load")) === 1L)
+    assert(tab.readEquals("load", "b").select($"id").as[Long]
+      .collect().toSet === Set(20L))
+    OverwriteRaceGate.reset()
+    // the next load's single staging task waits until an append has committed
+    // on top of the meta-only snapshot it staged against
+    val gated = udf { (id: Long) => OverwriteRaceGate.pass(); id }
+    val load = Seq((10L, "a"), (11L, "a")).toDF("id", "load").coalesce(1)
+      .withColumn("id", gated($"id"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
+    try {
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.fromExecutorService(pool)
+      val f = scala.concurrent.Future(tab.overwritePartition("load", load))
+      assert(OverwriteRaceGate.started.await(60,
+        java.util.concurrent.TimeUnit.SECONDS))
+      assert(tab.append(Seq((3L, "b")).toDF("id", "load")) === 2L)
+      OverwriteRaceGate.committed.countDown()
+      assert(scala.concurrent.Await.result(f,
+        scala.concurrent.duration.Duration(120, "s")) === 3L)
+      assert(tab.readEquals("load", "a").select($"id").as[Long]
+        .collect().toSet === Set(10L, 11L))
+      assert(tab.readEquals("load", "b").select($"id").as[Long]
+        .collect().toSet === Set(20L, 3L))
+    } finally {
+      OverwriteRaceGate.committed.countDown()
+      pool.shutdown()
+      spark.conf.unset(TxLog.driverSnapshotMaxFilesKey)
+    }
+  }
+
   test("restore plans distributed above the threshold — the DIFF, not " +
       "two full live sets, reaches the driver") {
     import spark.implicits._
@@ -2377,5 +2545,21 @@ class LazySnapshotSpec extends SparkSpec {
       .as[Long].collect().toSeq
     assert(TxLog.lastResolve.get()._1 === "driver-fold")
     assert(got === (250L to 310L).toSeq)
+  }
+}
+
+/** Cross-thread gate for the overwrite race test: the gated load's
+  * staging task (an executor thread of the local session) opens
+  * `started`, then waits for `committed`. */
+object OverwriteRaceGate {
+  @volatile var started = new java.util.concurrent.CountDownLatch(1)
+  @volatile var committed = new java.util.concurrent.CountDownLatch(1)
+  def reset(): Unit = {
+    started = new java.util.concurrent.CountDownLatch(1)
+    committed = new java.util.concurrent.CountDownLatch(1)
+  }
+  def pass(): Unit = {
+    started.countDown()
+    committed.await(60, java.util.concurrent.TimeUnit.SECONDS): Unit
   }
 }

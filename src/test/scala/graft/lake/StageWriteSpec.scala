@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -118,36 +117,6 @@ class StageWriteSpec extends SparkSpec {
     adds.foreach(a => assert(readBack(a.path) === a,
       s"stream-epoch Add for ${a.path} differs from the read-back"))
     (tab, snap)
-  }
-
-  /** Spark jobs `op` runs, counted between two marker jobs (listener
-    * events arrive in posting order, so the end marker's arrival means
-    * every job of `op` has been seen). */
-  private def jobsOf(op: => Unit): Int = {
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
-    }
-    def marker(g: String): Unit = {
-      spark.sparkContext.setJobGroup(g, g)
-      try spark.sparkContext.parallelize(Seq(1), 1).count(): Unit
-      finally spark.sparkContext.clearJobGroup()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      marker("stage-jobs-begin")
-      op
-      marker("stage-jobs-end")
-      val deadline = System.nanoTime() + 30000000000L
-      while (!groups.contains("stage-jobs-end") &&
-          System.nanoTime() < deadline) Thread.sleep(10)
-      val seq = groups.toArray(Array.empty[String]).toSeq
-      assert(seq.contains("stage-jobs-end"), "listener never caught up")
-      seq.indexOf("stage-jobs-end") - seq.indexOf("stage-jobs-begin") - 1
-    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("write-side stats equal the read-back aggregation: every stat " +
