@@ -720,15 +720,14 @@ object LakeSql {
   }
 
   /** Injected-parser twin of [[detailOverPath]] — the resolved frame's
-    * own logical plan (public API: `queryExecution.logical` on the
-    * classic Dataset, the same surface `df.explain` prints). */
+    * own logical plan (`queryExecution.logical`, the same surface
+    * `df.explain` prints). */
   def detailPlan(sqlText: String): Option[LogicalPlan] =
     if (!sqlText.trim.toUpperCase.startsWith("DESCRIBE")) None
     else SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession)
       .flatMap(s => detailOverPath(s, sqlText))
-      .map(_.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]]
-        .queryExecution.logical)
+      .map(_.queryExecution.logical)
 
   private def attr(name: String, dt: DataType,
       nullable: Boolean = false): Attribute =

@@ -73,8 +73,7 @@ object StageWrite {
       dataSchema: StructType, partCols: Array[String],
       partIdx: Array[Int], partTypes: Array[DataType],
       dataIdx: Array[Int], dataTypes: Array[DataType], zoneId: String,
-      stats: Array[StatSpec], hllLgK: Int, maxOpenWriters: Int,
-      ext: String,
+      stats: Array[StatSpec], hllLgK: Int, ext: String,
       // change-feed routing (all unset for plain staging); the parquet
       // writer takes its schema from the Hadoop conf, so each side
       // carries its own
@@ -83,6 +82,20 @@ object StageWrite {
       cdfTypes: Array[DataType] = null,
       cdfWriters: OutputWriterFactory = null,
       cdfConf: SerializableConfiguration = null)
+
+  /** Cap on parquet writers a task holds open at once across dynamic
+    * partition fragments. Each open writer pins a row-group buffer, so
+    * a task spanning many partition values — a date-partitioned
+    * backfill, a watermark burst — would otherwise grow its memory
+    * with the number of DISTINCT fragments it sees: the executor-OOM
+    * shape Spark's own `FileFormatWriter` guards with a sorted
+    * single-writer fallback. Here the guard is LRU rotation: past the
+    * cap the least-recently-written fragment's file is closed, and a
+    * later row for it opens a fresh file in the same directory (several
+    * files per partition directory is the normal landed shape, so
+    * content is unchanged — unsorted input costs file COUNT, never
+    * memory). */
+  val MaxOpenWriters = 32
 
   private val ChangeType = "_change_type"
   private val Tag = "__txlog_cdf"
@@ -166,7 +179,6 @@ object StageWrite {
       new SerializableConfiguration(job.getConfiguration), dataSchema,
       partCols.toArray, partIdx, partTypes, dataIdx, dataTypes,
       spark.sessionState.conf.sessionLocalTimeZone, stats, hllLgK,
-      TxStreamingWrite.maxOpenWriters(spark),
       writers.getFileExtension(ctx0))
   }
 
@@ -371,9 +383,8 @@ private[lake] final class StageTaskWriter(f: StageWrite.Factory,
 
   // Open writers, least-recently-WRITTEN first (re-inserted on every
   // access so the head is always the coldest fragment), bounded at
-  // f.maxOpenWriters: each open parquet writer pins a row-group buffer,
-  // so an unbounded map is executor-OOM when one task spans many
-  // partition values. Rotated files land in `done` like finished ones.
+  // StageWrite.MaxOpenWriters. Rotated files land in `done` like
+  // finished ones.
   private val open = mutable.LinkedHashMap[String, OpenFile]()
   private val done = mutable.ArrayBuffer[StagedStat]()
   private var fileSeq = 0
@@ -426,7 +437,7 @@ private[lake] final class StageTaskWriter(f: StageWrite.Factory,
           open.put(frag, entry): Unit
           entry
         case None =>
-          if (open.size >= f.maxOpenWriters) {
+          if (open.size >= StageWrite.MaxOpenWriters) {
             // the hot-path shortcut skips the LRU touch, so re-insert
             // the current fragment before picking the coldest victim
             if (lastFrag != null && open.size > 1)

@@ -16,22 +16,21 @@ import org.apache.spark.sql.execution.datasources.{
 import org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{
+  DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
 import TxLog.{Add, Meta}
 
-/** Commit-version offset of the DSv2 lake stream. Serializes as the
-  * bare version number — byte-identical to the V1 source's LongOffset
-  * JSON, so a checkpoint written by `format("txlog-stream")` resumes
-  * under the DSv2 `format("txlog")` read and vice versa. */
+/** Commit-version offset of the lake stream. Serializes as the bare
+  * version number, so checkpoints stay readable across releases. */
 case class TxVersionOffset(version: Long) extends Offset {
   override def json(): String = version.toString
 }
 
 /** The txlog table as a DataSource V2 [[MicroBatchStream]] — the lake's
-  * PUBLIC-API streaming read (no `private[sql]` bridge on this path):
-  * commit versions are the offsets, each micro-batch is the rows the
+  * one streaming read, on Spark's public connector API: commit
+  * versions are the offsets, each micro-batch is the rows the
   * versions in `(start, end]` APPENDED, and the batch is planned as
   * native [[FilePartition]]s straight from the log — executors read the
   * committed parquet through Spark's own vectorized parquet reader
@@ -45,14 +44,14 @@ case class TxVersionOffset(version: Long) extends Offset {
   * all come from the commit JSON, zero filesystem stats — and admit
   * whole versions until the budget is spent (always at least one, so a
   * single oversized commit still progresses). `maxVersionsPerTrigger`
-  * caps the version count itself, the V1 source's pacing knob.
+  * caps the version count itself.
   * [[SupportsTriggerAvailableNow]] pins the backlog end at prepare
   * time: the query drains `(start, target]` under the per-batch limits
   * and stops, Delta's AvailableNow contract.
   *
-  * Semantics match the V1 source exactly: non-append commits REFUSE by
-  * default (`ignoreChanges=true` re-emits rewritten files' rows —
-  * documented at-least-once for touched files), pure rewrites
+  * Non-append commits REFUSE by default (`ignoreChanges=true`
+  * re-emits rewritten files' rows — documented at-least-once for
+  * touched files), pure rewrites
   * (OPTIMIZE and friends, Delta's `dataChange=false`) are skipped,
   * the schema is pinned at stream start and later additive evolution
   * null-fills (parquet's missing-column read), and renamed columns
@@ -60,16 +59,20 @@ case class TxVersionOffset(version: Long) extends Offset {
   * Change-feed mode (`readChangeFeed = true`) plans the feed as FILE
   * reads too ([[planCdfPartitions]]): captured `_change_data` parquet
   * carries `_change_type` as bytes, insert commits constant-fill it
-  * like a partition value, `_commit_version` is a per-file constant —
-  * only a row-changing commit from BEFORE feed enablement (nothing
-  * captured) refuses toward the V1 diff-based source.
+  * like a partition value, `_commit_version` is a per-file constant.
+  * `withRowIds = true` (change-feed mode on a row-tracked table) adds
+  * each change row's stable `_row_id`, read from the same files, so a
+  * downstream [[TxTable.applyChangesById]] loop replicates with no key.
+  * A table without the feed, or a row-changing commit from BEFORE feed
+  * enablement (nothing captured), refuses — Delta's rule.
   */
 final class TxMicroBatchStream(spark: SparkSession, rootStr: String,
     required: StructType, pushed: Array[sources.Filter],
     startingVersion: Long, ignoreChanges: Boolean,
     maxVersionsPerTrigger: Option[Long],
     defaultLimit: ReadLimit,
-    readChangeFeed: Boolean = false) extends MicroBatchStream
+    readChangeFeed: Boolean = false,
+    withRowIds: Boolean = false) extends MicroBatchStream
     with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
   maxVersionsPerTrigger.foreach(n =>
@@ -79,20 +82,24 @@ final class TxMicroBatchStream(spark: SparkSession, rootStr: String,
   private val fs =
     root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Pinned at stream start (the V1 source's rule): physical names are
-    * resolved against THIS meta for the life of the stream — physical
-    * names never change, so later renames don't shift the columns, and
-    * later-added columns simply aren't requested. */
+  /** Pinned at stream start: physical names are resolved against
+    * THIS meta for the life of the stream — physical names never
+    * change, so later renames don't shift the columns, and later-added
+    * columns simply aren't requested. */
   private val pinned: Meta = TxLog.snapshot(fs, root).meta
 
   // change-feed mode plans CAPTURED change data as FilePartitions —
   // commit-time capture is what makes the feed a file read instead of
   // a relational diff, so a table without CDF refuses at stream start
   if (readChangeFeed) require(pinned.cdf,
-    s"txlog DSv2 change-feed stream at $rootStr: the table does not " +
-      "have change data feed enabled (txlog.enableChangeFeed = true) " +
-      "— enable it, or use the V1 source (format(\"txlog-stream\"), " +
-      "readChangeFeed = true), whose feed recomputes relational diffs")
+    s"txlog change-feed stream at $rootStr: the table does not have " +
+      "change data feed enabled (txlog.enableChangeFeed = true) — " +
+      "enable it, then stream from the enablement version on")
+  require(!withRowIds || readChangeFeed,
+    "withRowIds streams the id-carrying CHANGE FEED — set " +
+      "readChangeFeed=true too")
+  require(!withRowIds || pinned.tracksRows,
+    s"row tracking is not enabled on $rootStr (create(enableRowTracking))")
 
   /** Committed floor for the per-trigger probe — keeps latestOffset
     * O(new commits), never O(history). */
@@ -250,11 +257,10 @@ final class TxMicroBatchStream(spark: SparkSession, rootStr: String,
     // Split size follows FileSourceScanExec's law — min(maxPartitionBytes,
     // max(openCostInBytes, totalBytes / parallelism)) — NOT a flat
     // maxPartitionBytes: a flat 128 MB split planned a whole 100+ MB
-    // micro-batch as ONE task while the V1 source fanned the same files
-    // across every core, which is exactly the 1.8× dsv2-vs-V1 sf10 gap
-    // the round-14 pinned-order experiment settled (BASELINE.md). File
-    // lengths come from the log's Add/Cdf bytes; only legacy entries
-    // without them pay one fs stat.
+    // micro-batch as ONE task instead of fanning the files across every
+    // core (a 1.8× sf10 gap, BASELINE.md). File lengths come from the
+    // log's Add/Cdf bytes; only legacy entries without them pay one fs
+    // stat.
     val resolved: Seq[(SliceFiles, Seq[(Path, Long, Map[String, String])])] =
       slices.map { sl =>
         sl -> sl.files.map { case (rel, bytesOpt, pv) =>
@@ -361,7 +367,7 @@ final class TxMicroBatchStream(spark: SparkSession, rootStr: String,
       val entries = commitEntriesCached(v)
       val removed = entries.flatMap(_.remove)
       val op = entries.flatMap(_.info).headOption.map(_.op).getOrElse("?")
-      val pureRewrite = TxStreamSource.pureRewriteOps(op)
+      val pureRewrite = TxMicroBatchStream.pureRewriteOps(op)
       if (removed.nonEmpty && !pureRewrite && !ignoreChanges)
         sys.error(s"txlog stream at $root: commit $v ($op) rewrites " +
           "or removes data files — a streaming read of a non-append " +
@@ -410,15 +416,22 @@ final class TxMicroBatchStream(spark: SparkSession, rootStr: String,
     * file bytes), a plain insert-only commit (its Add files with
     * `_change_type = 'insert'` filled like a partition value), or a
     * pure rewrite (no logical change — skipped). `_commit_version` is
-    * a per-file partition-style constant in both shapes. A
-    * row-changing commit from BEFORE feed enablement has no captured
-    * data and refuses toward the V1 diff-based source. */
+    * a per-file partition-style constant in both shapes, and `_row_id`
+    * (withRowIds) a physical column of both. A row-changing commit
+    * from BEFORE feed enablement has no captured data and refuses. */
   private def planCdfPartitions(from: Long, to: Long)
       : Array[InputPartition] = {
     val wantType = required.fieldNames.contains("_change_type")
     val wantVer = required.fieldNames.contains("_commit_version")
+    val wantId = withRowIds && required.fieldNames.contains("_row_id")
     val tableReq = required.fields.toSeq.filterNot(f =>
-      f.name == "_change_type" || f.name == "_commit_version")
+      f.name == "_change_type" || f.name == "_commit_version" ||
+        (withRowIds && f.name == "_row_id"))
+    // `_row_id` is a physical column of captured and data files alike
+    val rowId = StructField("_row_id", LongType, nullable = true)
+    val idRead = if (wantId) Seq(rowId) else Nil
+    val idFile = if (withRowIds) Seq(rowId) else Nil
+    val idLogical = if (wantId) Seq("_row_id") else Nil
     val capturedFiles =
       Vector.newBuilder[(String, Option[Long], Map[String, String])]
     val insertAdds = Vector.newBuilder[(Add, Long)]
@@ -441,21 +454,19 @@ final class TxMicroBatchStream(spark: SparkSession, rootStr: String,
           capturedFiles += ((c.path, c.bytes,
             Map("_commit_version" -> v.toString)))
         }
-      } else if (TxStreamSource.pureRewriteOps(op)) ()
+      } else if (TxMicroBatchStream.pureRewriteOps(op)) ()
       else if (removes.nonEmpty)
         sys.error(s"txlog change-feed stream at $root: commit $v " +
           s"($op) changed rows before the feed was enabled, so no " +
           "change data was captured — start the stream at or after " +
-          "the enablement version, or use the V1 source (format(" +
-          "\"txlog-stream\"), readChangeFeed = true), whose feed " +
-          "recomputes relational diffs")
+          "the enablement version")
       else adds.foreach(a => insertAdds += ((a, v)))
     }
     val feedConsts: Seq[StructField] =
       (if (wantType) Seq(StructField("_change_type", StringType,
         nullable = true)) else Nil) ++
-        (if (wantVer) Seq(StructField("_commit_version",
-          org.apache.spark.sql.types.LongType, nullable = true))
+        (if (wantVer) Seq(StructField("_commit_version", LongType,
+          nullable = true))
         else Nil)
     val capturedList = capturedFiles.result()
     val capturedSlice =
@@ -466,18 +477,17 @@ final class TxMicroBatchStream(spark: SparkSession, rootStr: String,
         // partition columns included, plus _change_type
         readData = StructType(tableReq
           .map(f => f.copy(name = pinned.physicalOf(f.name),
-            nullable = true)) ++
+            nullable = true)) ++ idRead ++
           (if (wantType) Seq(StructField("_change_type", StringType,
             nullable = true)) else Nil)),
         fileSchema = StructType(pinned.schema.fields
           .map(f => f.copy(name = pinned.physicalOf(f.name),
-            nullable = true)) :+
+            nullable = true)) ++ idFile :+
           StructField("_change_type", StringType, nullable = true)),
-        readLogical = tableReq.map(_.name) ++
+        readLogical = tableReq.map(_.name) ++ idLogical ++
           (if (wantType) Seq("_change_type") else Nil),
         partFields = if (wantVer)
-          Seq(StructField("_commit_version",
-            org.apache.spark.sql.types.LongType, nullable = true))
+          Seq(StructField("_commit_version", LongType, nullable = true))
         else Nil,
         filters = Array.empty,
         files = capturedList))
@@ -490,13 +500,13 @@ final class TxMicroBatchStream(spark: SparkSession, rootStr: String,
           readData = StructType(tableReq
             .filterNot(f => pset.contains(f.name))
             .map(f => f.copy(name = pinned.physicalOf(f.name),
-              nullable = true))),
+              nullable = true)) ++ idRead),
           fileSchema = StructType(pinned.schema.fields
             .filterNot(f => pset.contains(f.name))
             .map(f => f.copy(name = pinned.physicalOf(f.name),
-              nullable = true))),
+              nullable = true)) ++ idFile),
           readLogical = tableReq
-            .filterNot(f => pset.contains(f.name)).map(_.name),
+            .filterNot(f => pset.contains(f.name)).map(_.name) ++ idLogical,
           partFields = tableReq.filter(f => pset.contains(f.name))
             .map(_.copy(nullable = true)) ++ feedConsts,
           filters = Array.empty,
@@ -521,6 +531,11 @@ final class TxMicroBatchStream(spark: SparkSession, rootStr: String,
 }
 
 object TxMicroBatchStream {
+
+  /** Operations whose commits move bytes but change no logical row —
+    * skipped by the stream like Delta's dataChange=false adds. */
+  private[lake] val pureRewriteOps: Set[String] =
+    Set("OPTIMIZE", "REPARTITION_REWRITE", "ADD_BLOOM_INDEX")
 
   /** A partition tuple's directory values as an InternalRow under
     * `partFields` — decoded with Catalyst's own Cast, null for
@@ -610,7 +625,7 @@ final class TxStreamReaderFactory(slices: Array[TxSliceReaders])
     }
 
   /** COLUMNAR reads (the sf10 lesson: the row-based delegate read a
-    * plain backlog 1.47× slower than the V1 path): hand Spark the
+    * plain backlog 1.47× slower than a columnar scan): hand Spark the
     * parquet factory's own vectorized ColumnarBatch reader and let
     * ColumnarToRow consume it codegen-side. A slice whose reader
     * output order differs from the pinned order (a partition column

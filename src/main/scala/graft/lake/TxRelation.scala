@@ -174,7 +174,16 @@ final class TxBaseRelation(ctx: SQLContext, path: String,
   * `load(...)` on engines that prefer V1. A REGISTERED table whose log
   * is missing is materialized empty from the catalog's stored schema on
   * first touch ([[getTable]]) — that is the vanilla-session CREATE
-  * TABLE flow, where the catalog stores only metadata. */
+  * TABLE flow, where the catalog stores only metadata.
+  *
+  * Streams go through the V2 face alone: `readStream.format("txlog")`
+  * plans micro-batches with [[TxMicroBatchStream]] (options
+  * `startingVersion` / `startingTimestamp`, `ignoreChanges`,
+  * `readChangeFeed`, `withRowIds`, `maxVersionsPerTrigger` and the
+  * `max{Files,Rows,Bytes}PerTrigger` admission limits), and
+  * `writeStream.format("txlog")` commits through [[TxStreamingWrite]].
+  * Either side names its table by `path` or by `table` (a catalog
+  * identifier, resolved the way the SQL surface resolves one). */
 class TxLogProvider extends RelationProvider
     with CreatableRelationProvider with DataSourceRegister
     with org.apache.spark.sql.connector.catalog.TableProvider {
@@ -200,34 +209,42 @@ class TxLogProvider extends RelationProvider
       case (None, None) => None
     }
 
+  private def flag(get: String => String, key: String): Boolean =
+    Option(get(key)).exists(_.toBoolean)
+
   // catalog resolution hands the table location under "location";
-  // explicit format("txlog").load(...) under "path"
+  // explicit format("txlog").load(...) under "path"; a by-name stream
+  // under "table"
   private def pathFrom(get: String => String): String =
-    Option(get("path")).orElse(Option(get("location"))).getOrElse(
-      sys.error("txlog needs a path"))
+    Option(get("path")).orElse(Option(get("location")))
+      .orElse(Option(get("table")).map(id =>
+        LakeSql.identPath(id).getOrElse(sys.error(
+          s"${shortName()}: '$id' does not resolve to a lake table " +
+            "through any registered catalog"))))
+      .getOrElse(sys.error(
+        s"${shortName()} needs a path or .option(\"table\", <identifier>)"))
 
   override def inferSchema(
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap)
       : StructType = {
     val spark = SparkSession.active
     val path = pathFrom(options.get)
-    val base =
-      new TxTable(spark, path).read(asOfOf(options.get, path, spark)).schema
-    // a change-feed resolution carries the feed's tag columns
-    if (Option(options.get("readChangeFeed")).exists(_.toBoolean))
-      StructType(base.fields ++ graft.lake.catalog.TxLakeTable.cdfFields)
-    else base
+    graft.lake.catalog.TxLakeTable.feedSchema(
+      new TxTable(spark, path).read(asOfOf(options.get, path, spark)).schema,
+      flag(options.get, "readChangeFeed"), flag(options.get, "withRowIds"))
   }
 
+  /** No log yet (a stream sink's first contact) = no partitioning. */
   override def inferPartitioning(
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap)
       : Array[org.apache.spark.sql.connector.expressions.Transform] = {
     val spark = SparkSession.active
     val path = pathFrom(options.get)
     val p = new org.apache.hadoop.fs.Path(path)
-    TxLog.snapshot(
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
-      asOfOf(options.get, path, spark)).meta.partitionCols
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (TxLog.latestVersion(fs, p) < 0) Array.empty
+    else TxLog.snapshot(fs, p, asOfOf(options.get, path, spark))
+      .meta.partitionCols
       .map(org.apache.spark.sql.connector.expressions.Expressions.identity)
       .toArray
   }
@@ -245,8 +262,8 @@ class TxLogProvider extends RelationProvider
       providedSchema = if (schema.isEmpty) None else Some(schema),
       providedPartitioning =
         partitioning.map(graft.lake.catalog.TxCatalog.identityColumn).toSeq,
-      cdfRead =
-        Option(properties.get("readChangeFeed")).exists(_.toBoolean))
+      cdfRead = flag(properties.get, "readChangeFeed"),
+      rowIds = flag(properties.get, "withRowIds"))
   }
 
   // ---- V1 face ----
@@ -294,4 +311,11 @@ class TxLogProvider extends RelationProvider
     }
     new TxBaseRelation(ctx, path, None)
   }
+}
+
+/** `format("txlog-stream")`: the name streams used before the lake had
+  * one streaming face. Same provider, same offsets, so a checkpoint
+  * written under either name resumes under the other. */
+class TxLogStreamProvider extends TxLogProvider {
+  override def shortName(): String = "txlog-stream"
 }

@@ -27,8 +27,16 @@ import TxLog.Txn
   * aborted epoch's staged files are never referenced (vacuum reclaims
   * them, like any lost-race staging), and the idempotence key is the
   * STREAMING QUERY ID Spark persists in the checkpoint — stable across
-  * restarts, never shared across queries (the exact contract the V1
-  * sink derives from its checkpoint-dir marker).
+  * restarts, never shared across queries, and gone with a wiped
+  * checkpoint (a reprocessing restart lands its batches again).
+  *
+  * A missing table is created by the first epoch's commit from the
+  * stream schema, unpartitioned (Spark hands a path-addressed sink no
+  * partitioning): create a partitioned destination before streaming.
+  * Staged files carry PHYSICAL names fixed at query start by the same
+  * evolution the commit applies, so a column dropped and then re-added
+  * lands under a fresh physical name and the dropped bytes never
+  * resurrect (batch append's rule).
   *
   * Scope: CHECK / NOT NULL constraints ENFORCE here, executor-side —
   * they validate rows without rewriting them, so each expression is
@@ -55,7 +63,7 @@ import TxLog.Txn
   * the logical schema), its staged max bumps `rowIdWatermark` in the
   * same commit, and the change feed stays consistent because the
   * sink's commits are insert-only — the inserted rows' ids live in
-  * the data files the feed reads. Nothing refuses toward V1 anymore.
+  * the data files the feed reads.
   */
 final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
     streamSchema: StructType, queryId: String) extends StreamingWrite {
@@ -94,7 +102,7 @@ final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
   // gate refusals (failure locality: a refused table fails .start(),
   // not the Nth micro-batch)
   private val (physSchema, partCols, checkRows, notNullOrdinals,
-      appendedCols, statCols) = {
+      appendedCols, statCols, physicalNames) = {
     val tx = new TxTable(spark, rootStr)
     val metaOpt =
       if (tx.exists) {
@@ -156,19 +164,18 @@ final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
       appended.map { case (n, dt, _) =>
         org.apache.spark.sql.types.StructField(n, dt, nullable = true) })
     // CHECK / NOT NULL are pure VALIDATION (no row rewriting), so the
-    // DSv2 sink enforces them EXECUTOR-SIDE instead of refusing toward
-    // V1: each constraint is resolved through the FULL ANALYZER
-    // against an empty frame of the stream schema — the exact
-    // analysis the batch path's expr(sql) gets, so function calls
-    // resolve and implicit type coercion runs (a name-only bind would
-    // leave UnresolvedFunction / uncoerced literal comparisons that
-    // throw in every task) — then the resolved attributes bind to
-    // stream ordinals. Analysis or bind failure refuses at .start()
-    // (failure locality), not the Nth batch. NULL passes a CHECK
-    // (SQL's rule, the batch path's semantics); a violating row fails
-    // its task — the epoch never commits, staged files are
-    // vacuum-reclaimable orphans, exactly the abort contract every
-    // other failure has.
+    // sink enforces them EXECUTOR-SIDE: each constraint is resolved
+    // through the FULL ANALYZER against an empty frame of the stream
+    // schema — the exact analysis the batch path's expr(sql) gets, so
+    // function calls resolve and implicit type coercion runs (a
+    // name-only bind would leave UnresolvedFunction / uncoerced literal
+    // comparisons that throw in every task) — then the resolved
+    // attributes bind to stream ordinals. Analysis or bind failure
+    // refuses at .start() (failure locality), not the Nth batch. NULL
+    // passes a CHECK (SQL's rule, the batch path's semantics); a
+    // violating row fails its task — the epoch never commits, staged
+    // files are vacuum-reclaimable orphans, exactly the abort contract
+    // every other failure has.
     // validators bind against the AUGMENTED schema (a CHECK may
     // reference a generated column the projection appends)
     def bindPredicate(sql: String, what: String)
@@ -228,15 +235,20 @@ final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
     parts.foreach(c => require(augSchema.fieldNames.contains(c),
       s"partition column $c is not in the stream schema " +
         s"(${augSchema.fieldNames.mkString(", ")})"))
-    // the meta the commit lands under: the table's, or the one the
-    // first epoch's commit creates from the stream schema
-    val meta = metaOpt.getOrElse(TxLog.Meta(streamSchema.json, parts.toList))
+    // the meta the commit lands under: the table's evolved by the
+    // stream's columns (a re-added column gets its fresh physical name
+    // HERE, and the commit reuses it), or the one the first epoch's
+    // commit creates from the stream schema
+    val logical = StructType(augSchema.fields.filterNot(_.name == "_row_id"))
+    val meta = metaOpt.fold(TxLog.Meta(streamSchema.json, parts.toList))(
+      tx.evolve(_, logical))
     // rows arrive in augmented order; files store PHYSICAL names
     val phys = StructType(augSchema.fields.map(f =>
       f.copy(name = meta.physicalOf(f.name))))
     (phys, parts, (checks ++ genValidators).toArray,
       requiredOrds.toArray, appended,
-      TxTable.statColsOf(meta, augSchema))
+      TxTable.statColsOf(meta, augSchema),
+      logical.fieldNames.map(n => n -> meta.physicalOf(n)).toMap)
   }
 
   /** The staged data's LOGICAL schema: the stream's own columns plus
@@ -310,7 +322,7 @@ final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
       augLogical.fields.filterNot(_.name == "_row_id"))
     // empty batches still advance the watermark: a replay of this
     // epoch after a restart must no-op even if it held no rows
-    tx.commitStagedAppend(logical, adds,
+    tx.commitStagedAppend(logical, physicalNames, adds,
       Txn(s"dsv2:$queryId", epochId)): Unit
   }
 
@@ -327,29 +339,6 @@ final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
   }
 
   override def toString: String = s"TxStreamingWrite[$rootStr]"
-}
-
-object TxStreamingWrite {
-  /** Cap on parquet writers a task holds open at once across dynamic
-    * partition fragments. Each open writer pins a row-group buffer
-    * (~128 MB default page budget), so an epoch spanning many
-    * partition values — a date-partitioned backfill, a watermark
-    * burst — would otherwise grow per-task memory with the number of
-    * DISTINCT fragments it sees: the executor-OOM shape Spark's own
-    * `FileFormatWriter` guards with a sorted single-writer fallback.
-    * Here the guard is LRU rotation: past the cap the least-recently-
-    * written fragment's file is closed; a later row for it opens a
-    * fresh file in the same directory (multiple files per partition
-    * dir is the normal landed shape, so content is unchanged — the
-    * cost of unsorted input is file COUNT, never memory). */
-  val maxOpenWritersKey = "spark.graft.lake.streamMaxOpenWriters"
-  val maxOpenWritersDefault = 32
-
-  def maxOpenWriters(spark: SparkSession): Int =
-    spark.conf.getOption(maxOpenWritersKey)
-      .flatMap(v => scala.util.Try(v.toInt).toOption)
-      .filter(_ > 0)
-      .getOrElse(maxOpenWritersDefault)
 }
 
 /** Files one task landed (root-relative, partition dirs included) with

@@ -1290,11 +1290,10 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * carry exactly `value` in the partition column. The check reads the
     * partition values of the files the load staged, so no extra scan
     * runs: a stray row (a null one included) is refused AFTER staging
-    * and before the commit, and the refused load's staged files are
-    * orphans [[vacuum]] reclaims, as after a lost race. Additive schema
-    * evolution is accepted like [[append]]'s: a load that gained a
-    * column lands the merged schema in the same commit, and older
-    * partitions read back with nulls in it.
+    * and before the commit, and the refused load deletes the files it
+    * staged. Additive schema evolution is accepted like [[append]]'s: a
+    * load that gained a column lands the merged schema in the same
+    * commit, and older partitions read back with nulls in it.
     */
   def overwritePartition(partCol: String, value: String, df0: DataFrame): Long =
     overwritePartitionOf(partCol, Some(value), df0)
@@ -1395,22 +1394,29 @@ final class TxTable(spark: SparkSession, rootStr: String) {
               .withColumn("_change_type", lit("insert")))
         })
       val landed = adds.flatMap(_.partitionValues.get(partCol)).distinct
-      given match {
-        case Some(v) => require(landed.forall(_ == v),
-          s"overwritePartition($partCol=$v) got rows outside the partition")
-        case None => require(
-          landed.size == 1 && value.forall(_ == landed.head),
-          oneStamp(landed.size))
+      // a refused load deletes what it staged: nothing references it
+      val plan = try {
+        given match {
+          case Some(v) => require(landed.forall(_ == v),
+            s"overwritePartition($partCol=$v) got rows outside the partition")
+          case None => require(
+            landed.size == 1 && value.forall(_ == landed.head),
+            oneStamp(landed.size))
+        }
+        // only a value-free first attempt above the driver threshold
+        // staged before it could plan: plan now. A commit that slipped
+        // in since the meta-only snapshot holds snap.version + 1, so the
+        // claim below loses the race and the retry restages.
+        val p =
+          if (firstComplete || (snap ne first)) snap
+          else partitionOverwriteSnapshot(partCol, landed.head)
+        homogeneous(p)
+        p
+      } catch { case e: IllegalArgumentException =>
+        discardStaged(adds, cdfs)
+        throw e
       }
       if (value.isEmpty) value = landed.headOption
-      // only a value-free first attempt above the driver threshold
-      // staged before it could plan: plan now. A commit that slipped in
-      // since the meta-only snapshot holds snap.version + 1, so the
-      // claim below loses the race and the retry restages.
-      val plan =
-        if (firstComplete || (snap ne first)) snap
-        else partitionOverwriteSnapshot(partCol, landed.head)
-      homogeneous(plan)
       val entries = commitEntries(snap, merged, "OVERWRITE_PARTITION",
         doomedIn(plan), adds, cdfs)
       if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
@@ -3670,16 +3676,6 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     drop.foldLeft(out)(_ drop _)
   }
 
-  /** The rows one commit ADDED, read under that commit's own snapshot
-    * metadata (column mapping, partition values, native scan) — the
-    * per-version micro-batch of [[TxStreamSource]]. Fresh adds never
-    * carry deletion vectors, so this is always a clean file read. */
-  private[lake] def readCommitAdds(v: Long): DataFrame = {
-    val snap = TxLog.snapshot(fs, root, Some(v))
-    val added = TxLog.commitEntries(fs, root, v).flatMap(_.add).map(_.path)
-    readFiles(snap, added)
-  }
-
   /** One deletion-vectored file's LIVE rows, with [[FileCol]]/[[PosCol]]
     * attached (callers that don't want them drop them): live rows =
     * physical rows minus the vector, a broadcast anti-join on position
@@ -3760,7 +3756,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       case _ => false
     }
 
-  private def evolve(meta: Meta, incoming: StructType,
+  private[lake] def evolve(meta: Meta, incoming: StructType,
       preassigned: Map[String, String] = Map.empty): Meta = {
     val cur = meta.schema
     val curNames = cur.fieldNames.toSet
@@ -3887,6 +3883,14 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         Some(changes), meta)
     else (rows.fold(Vector.empty[Add])(stageWrite(_, meta)), Vector.empty)
 
+  /** Best-effort delete of staged files no commit will reference (data,
+    * their bloom sidecars, change data) — a refused attempt's debris,
+    * reclaimed now instead of at the next [[vacuum]]. */
+  private def discardStaged(adds: Seq[Add], cdfs: Seq[Cdf]): Unit =
+    (adds.flatMap(a => a.path +: a.bloom.toSeq.flatMap(_.values)) ++
+      cdfs.map(_.path)).foreach(p =>
+      scala.util.Try(fs.delete(new Path(root, p), false)): Unit)
+
   /** [[stageCommit]]'s entry half: the staged files as one commit. */
   private def commitEntries(snap: Snapshot, meta: Meta, op: String,
       doomed: Seq[Add], adds: Vector[Add], cdfs: Vector[Cdf],
@@ -3960,34 +3964,37 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * `stagedSchema` carries the staged data's LOGICAL names — additive
     * columns evolve the schema exactly like a DataFrame append
     * (`_row_id` must NOT appear in it: the sink strips it, the
-    * watermark bump reads it from the adds' stats instead). The
+    * watermark bump reads it from the adds' stats instead), and
+    * `physical` the name each column was staged under: a re-added
+    * column keeps the fresh physical name the caller's own
+    * [[evolve]] gave it ([[append]]'s `preassigned` rule). A column
+    * whose mapping moved since staging (dropped, or re-added by
+    * another writer) refuses instead of landing unreadable bytes. The
     * caller enforces the row-level ingest gates (constraints,
     * generated / identity / default / row-id allocation) in its own
     * writer tasks BEFORE any file is staged.
     */
   private[lake] def commitStagedAppend(stagedSchema: StructType,
-      adds: Vector[Add], txn: Txn): Long = {
+      physical: Map[String, String], adds: Vector[Add], txn: Txn): Long = {
     var attempt = 0
     while (attempt < maxRetries) {
       val snap = metaSnapshot()._1
       gateWriter(snap.meta)
       if (snap.txns.get(txn.appId).exists(_ >= txn.version))
         return snap.version
-      stagedSchema.fields
-        .filterNot(f => snap.meta.schema.fieldNames.contains(f.name))
-        .foreach { f =>
-          require(!snap.meta.retired.contains(f.name),
-            s"column ${f.name} was dropped and re-added — the staged " +
-              "stream files carry it under its identity name, which a " +
-              "re-add must not resurrect; use the txlog-stream V1 " +
-              "sink, which re-stages per batch under a fresh mapping")
-        }
+      val evolved = evolve(snap.meta, stagedSchema, preassigned = physical)
+      stagedSchema.fieldNames.foreach { n =>
+        val p = physical.getOrElse(n, n)
+        require(evolved.physicalOf(n) == p && !snap.meta.retired.contains(p),
+          s"column $n was staged as $p, but the table at $root now " +
+            s"stores it as ${evolved.physicalOf(n)} (dropped or re-added " +
+            "since the query started) — restart the query")
+      }
       // identity and row-id watermarks move past the staged max (from
       // the files' own stats — the DSv2 sink allocates identity values
       // and `_row_id`s in its writer tasks, and the NEXT epoch's
       // factory reads this bump)
-      val merged = bumpWatermark(
-        bumpIdentities(evolve(snap.meta, stagedSchema), adds), adds)
+      val merged = bumpWatermark(bumpIdentities(evolved, adds), adds)
       val metaEntry =
         if (merged != snap.meta) Seq(LogEntry(meta = Some(merged)))
         else Nil

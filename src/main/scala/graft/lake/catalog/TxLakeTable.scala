@@ -16,7 +16,8 @@ import org.apache.spark.sql.connector.write.{
   WriteBuilder}
 import org.apache.spark.sql.sources.{
   AlwaysTrue, BaseRelation, EqualTo, Filter, InsertableRelation, TableScan}
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{
+  LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.lake.{FilterSql, TxLog, TxRelation, TxTable}
@@ -50,7 +51,7 @@ import graft.lake.{FilterSql, TxLog, TxRelation, TxTable}
 final class TxLakeTable(val path: String, val asOf: Option[Long],
     ident: String, providedSchema: Option[StructType] = None,
     providedPartitioning: Seq[String] = Nil,
-    cdfRead: Boolean = false) extends Table
+    cdfRead: Boolean = false, rowIds: Boolean = false) extends Table
     with SupportsRead with SupportsWrite with SupportsDelete
     with org.apache.spark.sql.connector.catalog
       .SupportsPartitionManagement {
@@ -90,10 +91,7 @@ final class TxLakeTable(val path: String, val asOf: Option[Long],
     // a change-feed table resolution (option("readChangeFeed", true)
     // on the format route) carries the feed columns so the stream's
     // relation exposes them
-    if (cdfRead &&
-        !base.fieldNames.contains("_change_type"))
-      StructType(base.fields ++ TxLakeTable.cdfFields)
-    else base
+    TxLakeTable.feedSchema(base, cdfRead, rowIds)
   }
 
   private def partitionColumnNames: Seq[String] =
@@ -126,11 +124,9 @@ final class TxLakeTable(val path: String, val asOf: Option[Long],
     // covers a scan over a plainly-resolved table); the STREAM plans
     // captured change data as FilePartitions
     // ([[graft.lake.TxMicroBatchStream]] CDF mode)
-    val base =
-      if (Option(options.get("readChangeFeed")).exists(_.toBoolean) &&
-          !schema().fieldNames.contains("_change_type"))
-        StructType(schema().fields ++ TxLakeTable.cdfFields)
-      else schema()
+    val base = TxLakeTable.feedSchema(schema(),
+      Option(options.get("readChangeFeed")).exists(_.toBoolean),
+      Option(options.get("withRowIds")).exists(_.toBoolean))
     new TxScanBuilder(path, asOf, base, resolvedSnap, options)
   }
 
@@ -430,7 +426,8 @@ private[catalog] final class TxScanBuilder(path: String,
           Option(options.get("maxVersionsPerTrigger")).map(_.toLong),
         defaultLimit = defaultLimit,
         readChangeFeed =
-          Option(options.get("readChangeFeed")).exists(_.toBoolean))
+          Option(options.get("readChangeFeed")).exists(_.toBoolean),
+        withRowIds = Option(options.get("withRowIds")).exists(_.toBoolean))
     }
     override def description(): String =
       s"txlog $path${asOf.map(v => s" @v$v").getOrElse("")}"
@@ -534,11 +531,17 @@ private[catalog] final class TxWriteBuilder(path: String,
 }
 
 object TxLakeTable {
-  /** The change feed's tag columns — the exact pair
-    * [[graft.lake.TxTable.readChanges]] emits. */
-  val cdfFields: Array[StructField] = Array(
-    StructField("_change_type", org.apache.spark.sql.types.StringType,
-      nullable = true),
-    StructField("_commit_version", org.apache.spark.sql.types.LongType,
-      nullable = true))
+  /** A change-feed read's schema: the table's columns, then `_row_id`
+    * when the id-carrying feed is asked for, then the feed's tag columns
+    * — the columns and order [[graft.lake.TxTable.readChanges]] emits.
+    * Anything else (or a schema that already carries the tags) is
+    * `base` unchanged. */
+  def feedSchema(base: StructType, changeFeed: Boolean,
+      rowIds: Boolean): StructType =
+    if (!changeFeed || base.fieldNames.contains("_change_type")) base
+    else StructType(base.fields ++
+      (if (rowIds) Seq(StructField("_row_id", LongType, nullable = true))
+      else Nil) ++
+      Seq(StructField("_change_type", StringType, nullable = true),
+        StructField("_commit_version", LongType, nullable = true)))
 }

@@ -264,8 +264,8 @@ object LakeQueries {
            |            ELSE NULL END AS o_orderpriority
            |FROM orders ORDER BY o_orderkey""".stripMargin))
 
-  /** The lake as a STREAMING SOURCE ([[graft.lake.TxStreamSource]] —
-    * Delta's streaming-source design): `readStream` over a TxTable
+  /** The lake as a STREAMING SOURCE ([[graft.lake.TxMicroBatchStream]]
+    * — Delta's streaming-source design): `readStream` over a TxTable
     * tails the transaction log, commit versions are the offsets, and
     * each append commit's rows arrive as one micro-batch, exactly
     * once — lost-race orphan files under `data/` are invisible because
@@ -286,7 +286,7 @@ object LakeQueries {
       val tab = new TxTable(s, scratch("lake_src", dir))
       tab.create(orders.where($"o_orderkey" % 4 === 0))
       val name = "stream_lake_src_" + math.abs(dir.hashCode).toString
-      val q = s.readStream.format("graft.lake.TxLogStreamProvider")
+      val q = s.readStream.format("txlog")
         .option("path", scratch("lake_src", dir)).load()
         .writeStream.outputMode("append")
         .format("memory").queryName(name).start()
@@ -305,15 +305,13 @@ object LakeQueries {
 
   /** The DSv2 STREAMING READ ([[graft.lake.TxMicroBatchStream]] —
     * round-12 verdict item 2): the same commit-version tailing as
-    * `ext_stream_lake_source`, but through the PUBLIC connector API —
+    * `ext_stream_lake_source`, with the batch split REQUIREd in-query —
     * `readStream.format("txlog")` resolves the lake table's
     * MICRO_BATCH_READ capability, each batch is planned as native
     * FilePartitions straight from the log, and executors read the
-    * committed parquet through Spark's own vectorized reader. No
-    * `private[sql]` bridge anywhere on this path. Offsets are
-    * byte-compatible with the V1 source (TxMicroBatchSpec pins the
-    * checkpoint handover); content parity with the oracle proves the
-    * file-level planning delivers exactly the appended rows.
+    * committed parquet through Spark's own vectorized reader. Content
+    * parity with the oracle proves the file-level planning delivers
+    * exactly the appended rows.
     */
   val extStreamDsv2Source = Q(
     "ext_stream_dsv2_source",
@@ -703,8 +701,8 @@ object LakeQueries {
            |FROM orders ORDER BY o_orderkey""".stripMargin))
 
   /** ROW TRACKING on the DSv2 streaming sink
-    * ([[graft.lake.TxStreamingWrite]], round-13 verdict item 4 — the
-    * last feature that refused toward V1): `writeStream` onto a
+    * ([[graft.lake.TxStreamingWrite]], round-13 verdict item 4):
+    * `writeStream` onto a
     * row-tracked table allocates `_row_id`s per EPOCH from the logged
     * watermark (the identity-column pattern: the factory re-reads the
     * watermark each epoch, the commit's staged stats bump it), the ids
@@ -779,12 +777,12 @@ object LakeQueries {
            |FROM orders WHERE o_orderkey % 7 IN (1, 2)
            |ORDER BY o_orderkey""".stripMargin))
 
-  /** The lake as a STREAMING SINK ([[graft.lake.TxStreamSink]] —
+  /** The lake as a STREAMING SINK ([[graft.lake.TxStreamingWrite]] —
     * Delta's DeltaSink shape): a lake-to-lake copy wired PURELY
-    * through formats (`readStream.format("txlog-stream")` →
-    * `writeStream.format("txlog-stream")`), no foreachBatch — every
+    * through formats (`readStream.format("txlog")` →
+    * `writeStream.format("txlog")`), no foreachBatch — every
     * micro-batch lands as one atomic append commit under the
-    * (appId, batchId) writer-transaction watermark, so replays are
+    * (queryId, epochId) writer-transaction watermark, so replays are
     * log-enforced no-ops. The query scripts create + append with a
     * drain between, then compares the DESTINATION table against the
     * source's relational content: a duplicated batch (broken
@@ -808,9 +806,9 @@ object LakeQueries {
         .delete(dstP, true)
       val src = new TxTable(s, srcRoot)
       src.create(orders.where($"o_orderkey" % 2 === 0))
-      val q = s.readStream.format("graft.lake.TxLogStreamProvider")
+      val q = s.readStream.format("txlog")
         .option("path", srcRoot).load()
-        .writeStream.format("graft.lake.TxLogStreamProvider")
+        .writeStream.format("txlog")
         .option("path", dstRoot)
         .option("checkpointLocation", ckpt)
         .outputMode("append").start()
@@ -825,7 +823,7 @@ object LakeQueries {
            |FROM orders ORDER BY o_orderkey""".stripMargin))
 
   /** LAKE→LAKE STREAMING MEDALLION: bronze TxTable as the streaming
-    * SOURCE ([[graft.lake.TxStreamSource]]), a per-customer running
+    * SOURCE ([[graft.lake.TxMicroBatchStream]]), a per-customer running
     * aggregate maintained INCREMENTALLY in foreachBatch, MERGEd into a
     * silver TxTable under the batch-id writer transaction — the whole
     * production loop (stream the lake, fold the delta, commit
@@ -855,7 +853,7 @@ object LakeQueries {
           StructField("o_custkey", LongType),
           StructField("n_orders", LongType),
           StructField("revenue", DecimalType(18, 2))))))
-      val q = s.readStream.format("graft.lake.TxLogStreamProvider")
+      val q = s.readStream.format("txlog")
         .option("path", bronzeDir).load()
         .writeStream.outputMode("append")
         .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -1621,7 +1619,8 @@ object LakeQueries {
            |ORDER BY _commit_version, _change_type, o_orderkey""".stripMargin))
 
   /** `startingTimestamp` on the streaming source
-    * ([[graft.lake.TxStreamSource]] — Delta's wall-clock stream start):
+    * ([[graft.lake.TxMicroBatchStream]] — Delta's wall-clock stream
+    * start):
     * a four-commit backlog is streamed from v1's in-commit stamp, so
     * the sink must hold EXACTLY the three appends — v0's rows predate
     * the instant and never stream. In-query REQUIRE pins that a future
@@ -1648,7 +1647,7 @@ object LakeQueries {
         catch { case _: IllegalArgumentException => true }
       require(refused, "a future startingTimestamp must refuse")
       val name = "stream_lake_sts_" + math.abs(dir.hashCode).toString
-      val q = s.readStream.format("graft.lake.TxLogStreamProvider")
+      val q = s.readStream.format("txlog")
         .option("path", root)
         .option("startingTimestamp",
           tab.commitTimestamp(1L).get.toString).load()

@@ -1016,6 +1016,45 @@ class TxLogSpec extends SparkSpec {
     assert(tab.version === v)
   }
 
+  test("a refused overwritePartition deletes what it staged: every " +
+      "parquet file under the table is one the log references") {
+    def unreferenced(root: String): Seq[String] = {
+      val p = new Path(root)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val logged = (0L to TxLog.latestVersion(fs, p)).flatMap { v =>
+        TxLog.commitEntries(fs, p, v).flatMap(e =>
+          e.add.map(_.path) ++ e.remove.map(_.path) ++ e.cdf.map(_.path))
+      }.toSet
+      val onDisk = Files.walk(java.nio.file.Paths.get(root)).toArray
+        .map(_.toString).filter(_.endsWith(".parquet"))
+        .map(_.stripPrefix(root + "/")).filterNot(_.startsWith("_txlog/"))
+      onDisk.filterNot(logged).toSeq
+    }
+    val plain = freshRoot("oporph")
+    val tab = new TxTable(spark, plain)
+    tab.create(docs(30), partitionCols = Seq("lang"))
+    intercept[IllegalArgumentException](      // a stray row
+      tab.overwritePartition("lang", "1", docs(3)))
+    assert(unreferenced(plain) === Nil)
+    intercept[IllegalArgumentException](      // zero stamps
+      tab.overwritePartition("lang", docs(30).where($"id" < 0L)))
+    intercept[IllegalArgumentException](      // two stamps
+      tab.overwritePartition("lang", docs(2)))
+    assert(unreferenced(plain) === Nil)
+    assert(tab.version === 0L)
+    // a change-feed table stages its feed in the same action: both go
+    val feed = freshRoot("oporphcdf")
+    val ftab = new TxTable(spark, feed)
+    ftab.create(docs(30), partitionCols = Seq("lang"),
+      enableChangeDataFeed = true)
+    intercept[IllegalArgumentException](
+      ftab.overwritePartition("lang", docs(3)))
+    intercept[IllegalArgumentException](
+      ftab.overwritePartition("lang", "2", docs(3)))
+    assert(unreferenced(feed) === Nil)
+    assert(ftab.read().count() === 30)
+  }
+
   test("value-free overwritePartition: two loads of one stamp race and " +
       "exactly one load's rows survive") {
     val tab = new TxTable(spark, freshRoot("oprace"))

@@ -200,7 +200,7 @@ class TxRowTrackingSpec extends SparkSpec {
       enableRowTracking = true)
     val replica = new TxTable(spark, freshRoot("streamrep"))
     replica.create(docs(0).coalesce(1), enableRowTracking = true)
-    val q = spark.readStream.format("graft.lake.TxLogStreamProvider")
+    val q = spark.readStream.format("txlog")
       .option("path", upDir).option("readChangeFeed", "true")
       .option("withRowIds", "true").load()
       .writeStream.outputMode("append")

@@ -8,10 +8,11 @@ import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.lake.TxTable
 
-/** [[graft.lake.TxStreamSource]] — the txlog table as a Structured
-  * Streaming source: version-offset batching, exactly-once across a
-  * checkpoint restart, refusal of non-append history, and the
-  * ignoreChanges opt-in. Content parity with the oracle is
+/** `readStream.format("txlog")` ([[graft.lake.TxMicroBatchStream]]) —
+  * the txlog table as a Structured Streaming source: version-offset
+  * batching, exactly-once across a checkpoint restart, refusal of
+  * non-append history, and the ignoreChanges opt-in; plus the
+  * `writeStream.format("txlog")` sink ([[graft.lake.TxStreamingWrite]]). Content parity with the oracle is
   * ext_stream_lake_source's job; this suite pins the offset and
   * recovery behavior the oracle cannot see.
   */
@@ -29,7 +30,7 @@ class TxStreamSourceSpec extends SparkSpec {
     val root = freshRoot("mb")
     val tab = new TxTable(spark, root)
     tab.create(docs(10))
-    val q = spark.readStream.format("graft.lake.TxLogStreamProvider")
+    val q = spark.readStream.format("txlog")
       .option("path", root).load()
       .writeStream.outputMode("append")
       .format("memory").queryName("txsrc_mb").start()
@@ -56,7 +57,7 @@ class TxStreamSourceSpec extends SparkSpec {
     val tab = new TxTable(spark, root)
     tab.create(docs(10))
     def launch() = spark.readStream
-      .format("graft.lake.TxLogStreamProvider")
+      .format("txlog")
       .option("path", root).load()
       .writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", ckpt).start()
@@ -78,7 +79,7 @@ class TxStreamSourceSpec extends SparkSpec {
     // 9 survivors (ignoreChanges re-emits only TOUCHED files' rows)
     tab.create(docs(10).coalesce(1))
     tab.deleteWhere($"id" === 3L) // copy-on-write rewrite
-    val q = spark.readStream.format("graft.lake.TxLogStreamProvider")
+    val q = spark.readStream.format("txlog")
       .option("path", root).load()
       .writeStream.outputMode("append")
       .format("memory").queryName("txsrc_rw").start()
@@ -90,7 +91,7 @@ class TxStreamSourceSpec extends SparkSpec {
       Option(err.getCause).exists(_.getMessage.contains("rewrites")))
     // ignoreChanges: the rewrite's surviving rows re-emit (documented
     // at-least-once for touched files — Delta's relaxed mode)
-    val q2 = spark.readStream.format("graft.lake.TxLogStreamProvider")
+    val q2 = spark.readStream.format("txlog")
       .option("path", root).option("ignoreChanges", "true").load()
       .writeStream.outputMode("append")
       .format("memory").queryName("txsrc_rw2").start()
@@ -107,7 +108,7 @@ class TxStreamSourceSpec extends SparkSpec {
     val root = freshRoot("opt")
     val tab = new TxTable(spark, root)
     tab.create(docs(10))
-    val q = spark.readStream.format("graft.lake.TxLogStreamProvider")
+    val q = spark.readStream.format("txlog")
       .option("path", root).load()
       .writeStream.outputMode("append")
       .format("memory").queryName("txsrc_opt").start()
@@ -129,7 +130,7 @@ class TxStreamSourceSpec extends SparkSpec {
     val tab = new TxTable(spark, root)
     tab.create(docs(10))             // v0: uncaptured — fallback inserts
     tab.enableChangeDataFeed()       // v1: no rows
-    val q = spark.readStream.format("graft.lake.TxLogStreamProvider")
+    val q = spark.readStream.format("txlog")
       .option("path", root).option("readChangeFeed", "true").load()
       .writeStream.outputMode("append")
       .format("memory").queryName("txsrc_cdf").start()
@@ -160,7 +161,7 @@ class TxStreamSourceSpec extends SparkSpec {
     tab.create(docs(10))
     tab.enableChangeDataFeed()
     def launch() = spark.readStream
-      .format("graft.lake.TxLogStreamProvider")
+      .format("txlog")
       .option("path", root).option("readChangeFeed", "true").load()
       .writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", ckpt).start()
@@ -183,7 +184,7 @@ class TxStreamSourceSpec extends SparkSpec {
     tab.append(docs(4, from = 100L))          // v1
     tab.append(docs(4, from = 200L))          // v2
     tab.append(docs(4, from = 300L))          // v3: backlog of 4 versions
-    val q = spark.readStream.format("graft.lake.TxLogStreamProvider")
+    val q = spark.readStream.format("txlog")
       .option("path", root)
       .option("maxVersionsPerTrigger", "1").load()
       .writeStream.outputMode("append")
@@ -207,7 +208,7 @@ class TxStreamSourceSpec extends SparkSpec {
     val tab = new TxTable(spark, root)
     tab.create(docs(6))
     def launch() = spark.readStream
-      .format("graft.lake.TxLogStreamProvider")
+      .format("txlog")
       .option("path", root).option("maxVersionsPerTrigger", "1").load()
       .writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", ckpt).start()
@@ -231,7 +232,7 @@ class TxStreamSourceSpec extends SparkSpec {
     tab.append(docs(5, from = 100L))          // v1
     tab.append(docs(5, from = 200L))          // v2
     val ts1 = tab.commitTimestamp(1L).get
-    val q = spark.readStream.format("graft.lake.TxLogStreamProvider")
+    val q = spark.readStream.format("txlog")
       .option("path", root)
       .option("startingTimestamp", ts1.toString).load()
       .writeStream.outputMode("append")
@@ -253,7 +254,7 @@ class TxStreamSourceSpec extends SparkSpec {
         tab.commitTimestamp(2L).get + 3600L * 1000))
     // both start options at once refuse
     val both = intercept[Exception] {
-      spark.readStream.format("graft.lake.TxLogStreamProvider")
+      spark.readStream.format("txlog")
         .option("path", root)
         .option("startingVersion", "1")
         .option("startingTimestamp", ts1.toString).load()
@@ -278,8 +279,8 @@ class TxStreamSourceSpec extends SparkSpec {
     val tabS = new TxTable(spark, src)
     tabS.create(docs(10))
     def start() = spark.readStream
-      .format("graft.lake.TxLogStreamProvider").option("path", src).load()
-      .writeStream.format("graft.lake.TxLogStreamProvider")
+      .format("txlog").option("path", src).load()
+      .writeStream.format("txlog")
       .option("path", dst)
       .option("checkpointLocation", ckpt)
       .outputMode("append").start()
@@ -300,10 +301,10 @@ class TxStreamSourceSpec extends SparkSpec {
     assert(ops.count(_ == "CREATE") === 1)
     // complete mode refuses loudly
     val err = intercept[Exception] {
-      spark.readStream.format("graft.lake.TxLogStreamProvider")
+      spark.readStream.format("txlog")
         .option("path", src).load()
         .groupBy($"id" % 2).count()
-        .writeStream.format("graft.lake.TxLogStreamProvider")
+        .writeStream.format("txlog")
         .option("path", freshRoot("sinkbad"))
         .option("checkpointLocation",
           Files.createTempDirectory("sink_ckpt_bad").toString)
@@ -319,11 +320,15 @@ class TxStreamSourceSpec extends SparkSpec {
     val src = freshRoot("sinkpsrc")
     val dst = freshRoot("sinkpdst")
     val tabS = new TxTable(spark, src)
-    tabS.create(docs(30)) // lang column = id % 3 via docs()? no — add one
+    tabS.create(docs(30))
+    // a stream sink creates a missing table unpartitioned: the
+    // partitioned destination is created first
+    new TxTable(spark, dst).create(
+      docs(0).withColumn("bucket", lit("")), partitionCols = Seq("bucket"))
     val q = spark.readStream
-      .format("graft.lake.TxLogStreamProvider").option("path", src).load()
+      .format("txlog").option("path", src).load()
       .withColumn("bucket", ($"id" % 3L).cast("string"))
-      .writeStream.format("graft.lake.TxLogStreamProvider")
+      .writeStream.format("txlog")
       .option("path", dst)
       .option("checkpointLocation",
         Files.createTempDirectory("sinkp_ckpt").toString)
@@ -350,7 +355,7 @@ class TxStreamSourceSpec extends SparkSpec {
     // the staging debris a lost race leaves behind
     docs(99, from = 900L).coalesce(1).write.mode("overwrite")
       .parquet(root + "/data/orphan_stage")
-    val q = spark.readStream.format("graft.lake.TxLogStreamProvider")
+    val q = spark.readStream.format("txlog")
       .option("path", root).load()
       .writeStream.outputMode("append")
       .format("memory").queryName("txsrc_orph").start()

@@ -30,9 +30,24 @@ class TxAutoCompactSpec extends SparkSpec {
     spark.conf.set(TxTable.autoCompactKey, "true")
     spark.conf.set(TxTable.autoCompactMinFilesKey, "4")
     try {
-      val sink = new TxStreamSink(spark, root, Nil, Some("app"), None)
-      (0 until 12).foreach(b => sink.addBatch(b.toLong,
-        spark.range(b * 10L, b * 10L + 10L).selectExpr("id AS k").toDF()))
+      // 12 real sink triggers: one source commit per micro-batch
+      val srcRoot = fresh("sinksrc")
+      val src = new TxTable(spark, srcRoot)
+      def batch(b: Int) =
+        spark.range(b * 10L, b * 10L + 10L).selectExpr("id AS k").coalesce(1)
+      src.create(batch(0))
+      val q = spark.readStream.format("txlog").option("path", srcRoot)
+        .load().writeStream.format("txlog").option("path", root)
+        .option("checkpointLocation",
+          Files.createTempDirectory("txauto_ckpt").toString)
+        .outputMode("append").start()
+      try {
+        q.processAllAvailable()
+        (1 until 12).foreach { b =>
+          src.append(batch(b))
+          q.processAllAvailable()
+        }
+      } finally q.stop()
       assert(liveFiles(root) < 12,
         s"12 tiny batches must converge below 12 files, " +
           s"got ${liveFiles(root)}")

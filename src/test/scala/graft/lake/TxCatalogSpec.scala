@@ -410,7 +410,7 @@ class TxCatalogSpec extends SparkSpec {
     tab.enableChangeDataFeed()
     spark.sql("INSERT INTO tcat.cdfs.t VALUES (1, 'a'), (2, 'b')")
     spark.sql("DELETE FROM tcat.cdfs.t WHERE k = 1")
-    val q = spark.readStream.format("txlog-stream")
+    val q = spark.readStream.format("txlog")
       .option("table", "tcat.cdfs.t")
       .option("readChangeFeed", "true").load()
       .writeStream.outputMode("append")
@@ -425,7 +425,7 @@ class TxCatalogSpec extends SparkSpec {
       s"the delete must surface in the by-name change stream: $types")
     // an unresolvable identifier refuses loudly
     val err = intercept[Exception] {
-      spark.readStream.format("txlog-stream")
+      spark.readStream.format("txlog")
         .option("table", "tcat.cdfs.missing")
         .option("readChangeFeed", "true").load()
     }

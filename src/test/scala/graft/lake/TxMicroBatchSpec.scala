@@ -12,8 +12,8 @@ import graft.SparkSpec
   * item 2): append-mode micro-batches planned as native FilePartitions
   * straight from the log through the PUBLIC connector API (no
   * `private[sql]` bridge on this path), admission control from log
-  * metadata, Trigger.AvailableNow, streaming BY TABLE NAME, and offset
-  * interchange with the V1 source's checkpoints.
+  * metadata, Trigger.AvailableNow, streaming BY TABLE NAME, and
+  * checkpoints written under the `txlog-stream` alias resuming.
   */
 class TxMicroBatchSpec extends SparkSpec {
   import spark.implicits._
@@ -210,7 +210,8 @@ class TxMicroBatchSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("txmb_ckpt").toString
     val tab = new TxTable(spark, root)
     tab.create(docs(10))
-    val q1 = spark.readStream.format("graft.lake.TxLogStreamProvider")
+    // written under the `txlog-stream` alias, the name V1 streams used
+    val q1 = spark.readStream.format("txlog-stream")
       .option("path", root).load()
       .writeStream.outputMode("append").format("parquet")
       .option("path", out).option("checkpointLocation", ckpt).start()

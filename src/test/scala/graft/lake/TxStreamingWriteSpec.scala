@@ -13,8 +13,8 @@ import graft.SparkSpec
   * .toTable` by catalog name, partitioned routing byte-compatible
   * with DataFrame.write, restart exactly-once, and the full row-
   * feature surface (constraints validate, generated/default/identity
-  * columns rewrite, row tracking allocates) executor-side — nothing
-  * refuses toward the V1 DataFrame sink anymore.
+  * columns rewrite, row tracking allocates) executor-side, and a
+  * dropped-then-re-added column lands under a fresh physical name.
   */
 class TxStreamingWriteSpec extends SparkSpec {
   import spark.implicits._
@@ -169,27 +169,21 @@ class TxStreamingWriteSpec extends SparkSpec {
       partitionCols = Seq("frag"))
     val srcRoot = fresh("lrusrc")
     // one source file read as one split → the sink task sees rows in
-    // file order: a dominated a b a c a b a c ... interleave
-    val pattern = (0 until 80).map { i =>
-      val frag = (i % 4: @unchecked) match {
-        case 0 | 2 => "a"
-        case 1 => "b"
-        case 3 => "c"
-      }
-      (frag, i.toLong)
-    }
+    // file order: an `a`-dominated a a b0 a a b1 ... interleave over
+    // more fragments than StageWrite.MaxOpenWriters, twice round
+    val others = StageWrite.MaxOpenWriters + 8
+    val pattern = (0 until 2 * others).flatMap { j =>
+      Seq("a", "a", s"b${j % others}")
+    }.zipWithIndex.map { case (frag, i) => (frag, i.toLong) }
     new TxTable(spark, srcRoot).create(
       spark.createDataFrame(pattern).toDF("frag", "v").coalesce(1))
     val ckpt = Files.createTempDirectory("txsw_lru").toString
-    spark.conf.set(TxStreamingWrite.maxOpenWritersKey, "2")
-    try {
-      val q = spark.readStream.format("txlog")
-        .option("path", srcRoot).load()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("txlog").option("path", root).start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.unset(TxStreamingWrite.maxOpenWritersKey)
+    val q = spark.readStream.format("txlog")
+      .option("path", srcRoot).load()
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .format("txlog").option("path", root).start()
+    try q.processAllAvailable() finally q.stop()
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
     val adds = TxLog.snapshot(fs,
@@ -198,7 +192,7 @@ class TxStreamingWriteSpec extends SparkSpec {
       .view.mapValues(_.size).toMap
     assert(perFrag("a") === 1,
       s"the dominant fragment must keep ONE open writer, got $perFrag")
-    assert(tab.read().count() === 80)
+    assert(tab.read().count() === pattern.size)
   }
 
   test("GENERATED / DEFAULT columns the stream omits are computed " +
@@ -473,43 +467,41 @@ class TxStreamingWriteSpec extends SparkSpec {
   test("dynamic-partition writers are BOUNDED: an epoch spanning many " +
       "interleaved partition values rotates files past the cap and " +
       "lands every row") {
-    spark.conf.set(TxStreamingWrite.maxOpenWritersKey, "2")
-    try {
-      val root = fresh("cap")
-      val tab = new TxTable(spark, root)
-      tab.create(
-        spark.range(0).select($"id".as("k"),
-          lit("b").as("bucket")),
-        partitionCols = Seq("bucket"))
-      val srcRoot = fresh("capsrc")
-      // 24 rows cycling through 6 bucket values in one source file →
-      // one task sees interleaved fragments, far past the cap of 2
-      val rows = spark.range(24).repartition(1).select($"id".as("k"),
-        concat(lit("b"), ($"id" % 6)).as("bucket"))
-      new TxTable(spark, srcRoot).create(rows)
-      val ckpt = Files.createTempDirectory("txsw_capck").toString
-      val q = spark.readStream.format("txlog")
-        .option("path", srcRoot).load()
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .format("txlog").option("path", root).start()
-      try q.processAllAvailable() finally q.stop()
-      // every row lands, correctly routed
-      val got = tab.read()
-      assert(got.count() === 24)
-      assert(got.where($"bucket" === "b3").select($"k").as[Long]
-        .collect().sorted.toSeq === Seq(3L, 9L, 15L, 21L))
-      // rotation happened: more landed files than distinct fragments
-      // (an unbounded writer map would land exactly one per fragment
-      // per task)
-      val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val snap = TxLog.snapshot(fs, new org.apache.hadoop.fs.Path(root))
-      assert(snap.adds.size > 6,
-        s"cap=2 over 6 interleaved fragments must rotate, " +
-          s"got ${snap.adds.size} files")
-      assert(snap.adds.map(_.partitionValues("bucket")).toSet.size === 6)
-    } finally spark.conf.unset(TxStreamingWrite.maxOpenWritersKey)
+    val root = fresh("cap")
+    val tab = new TxTable(spark, root)
+    tab.create(
+      spark.range(0).select($"id".as("k"),
+        lit("b").as("bucket")),
+      partitionCols = Seq("bucket"))
+    val srcRoot = fresh("capsrc")
+    // 160 rows cycling through 40 bucket values in one source file →
+    // one task sees interleaved fragments, past the cap of 32
+    val frags = StageWrite.MaxOpenWriters + 8
+    val rows = spark.range(4L * frags).repartition(1)
+      .select($"id".as("k"), concat(lit("b"), ($"id" % frags)).as("bucket"))
+    new TxTable(spark, srcRoot).create(rows)
+    val ckpt = Files.createTempDirectory("txsw_capck").toString
+    val q = spark.readStream.format("txlog")
+      .option("path", srcRoot).load()
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .format("txlog").option("path", root).start()
+    try q.processAllAvailable() finally q.stop()
+    // every row lands, correctly routed
+    val got = tab.read()
+    assert(got.count() === 4L * frags)
+    assert(got.where($"bucket" === "b3").select($"k").as[Long]
+      .collect().sorted.toSeq === (0 until 4).map(i => 3L + i * frags))
+    // rotation happened: more landed files than distinct fragments
+    // (an unbounded writer map would land exactly one per fragment
+    // per task)
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    val snap = TxLog.snapshot(fs, new org.apache.hadoop.fs.Path(root))
+    assert(snap.adds.size > frags,
+      s"cap=${StageWrite.MaxOpenWriters} over $frags interleaved " +
+        s"fragments must rotate, got ${snap.adds.size} files")
+    assert(snap.adds.map(_.partitionValues("bucket")).toSet.size === frags)
   }
 
   test("Complete output mode refuses (append-only sink)") {
@@ -553,5 +545,31 @@ class TxStreamingWriteSpec extends SparkSpec {
     assert(out.columns.toSeq === Seq("k", "v", "extra"))
     assert(out.where($"extra".isNull).count() === 2) // old rows null-fill
     assert(out.count() === 4)
+  }
+
+  test("a dropped column streamed again lands under a fresh physical " +
+      "name: old bytes read null, new values are visible") {
+    val dst = fresh("readd")
+    val tab = new TxTable(spark, dst)
+    tab.create(feed(3).coalesce(1))
+    tab.dropColumn("v")
+    val srcRoot = fresh("readdsrc")
+    new TxTable(spark, srcRoot).create(feed(2, from = 10L))
+    val ckpt = Files.createTempDirectory("txsw_rack").toString
+    val q = spark.readStream.format("txlog")
+      .option("path", srcRoot).load()
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .format("txlog").option("path", dst).start()
+    try q.processAllAvailable() finally q.stop()
+    val rows = tab.read().orderBy("k").select($"k", $"v")
+      .as[(Long, String)].collect().toSeq
+    assert(rows === Seq((0L, null), (1L, null), (2L, null),
+      (10L, "v-10"), (11L, "v-11")))
+    val p = new org.apache.hadoop.fs.Path(dst)
+    val meta = TxLog.snapshot(
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration), p).meta
+    assert(meta.physicalOf("v") !== "v",
+      "the re-added column must not reuse the dropped physical name")
   }
 }
