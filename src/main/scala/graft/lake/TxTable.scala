@@ -233,49 +233,27 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     val first = TxLog.snapshot(fs, root)
     gateWriter(first.meta)
     gateAppendOnly(first.meta, "overwrite")
-    first.meta.identities.keys.foreach(c =>
-      require(!df0.columns.contains(c),
-        s"identity column $c is GENERATED ALWAYS — writers must not " +
-          "supply it"))
+    refuseIdentityValues(df0, first.meta)
     val df = applyGenerated(applyDefaults(df0, first.meta), first.meta)
-    var attempt = 0
-    while (true) {
+    retrying("overwrite") { attempt =>
       val snap = if (attempt == 0) first else TxLog.snapshot(fs, root)
       gateWriter(snap.meta)
       enforceConstraints(df, snap.meta)
       val merged = evolve(snap.meta, df.schema)
       val doomed = snap.adds
-      val tracks = snap.meta.tracksRows
-      val idFeed = tracks && snap.meta.cdf
-      // fresh ids/identities are per-attempt (watermark-dependent);
-      // under CDF the nondeterministic assignment is materialized so
-      // the staged files and captured feed record identical values
-      val staged0 = applyIdentities(
-        if (tracks) assignRowIds(df, snap.meta.nextRowId) else df,
-        snap.meta)
-      val staged =
-        if (snap.meta.cdf && (tracks || snap.meta.identities.nonEmpty))
-          staged0.localCheckpoint()
-        else staged0
+      val idFeed = snap.meta.tracksRows && snap.meta.cdf
+      // fresh ids/identities are per-attempt (watermark-dependent)
+      val staged = freshRows(df, snap.meta)
       val entries = stageCommit(snap, merged, "OVERWRITE", doomed,
           Some(staged), {
-          def aligned(d: DataFrame) =
-            d.select(merged.schema.fields.map(f =>
-              if (d.columns.contains(f.name)) col(f.name)
-              else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq ++
-              (if (idFeed) Seq(col(RowIdCol)) else Nil): _*)
-          aligned(readFiles(snap, doomed.map(_.path), withRowId = idFeed))
+          aligned(merged, readFiles(snap, doomed.map(_.path),
+              withRowId = idFeed))
             .withColumn("_change_type", lit("delete"))
-            .unionAll(aligned(staged)
+            .unionAll(aligned(merged, staged)
               .withColumn("_change_type", lit("insert")))
         })
-      if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
-        return snap.version + 1
-      attempt += 1
-      require(attempt < maxRetries,
-        s"overwrite of $root lost $maxRetries races")
+      tryClaim(snap.version, entries)
     }
-    sys.error("unreachable")
   }
 
   /** CONVERT (Delta's CONVERT TO DELTA): adopt an existing plain
@@ -402,17 +380,12 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     // a blind append to a million-file table is O(tail) on the driver.
     val first = metaSnapshot()._1
     gateWriter(first.meta)
-    txn.foreach { t =>
-      if (first.txns.get(t.appId).exists(_ >= t.version))
-        return first.version
-    }
+    if (absorbed(first, txn)) return first.version
     // defaults fill absent columns, then generated columns compute —
     // both fixed at CREATE, so the first snapshot's sets are
     // authoritative for the whole retry loop. Explicit identity values
     // refuse up front (GENERATED ALWAYS).
-    first.meta.identities.keys.foreach(c => require(!df0.columns.contains(c),
-      s"identity column $c is GENERATED ALWAYS — writers must not " +
-        "supply it"))
+    refuseIdentityValues(df0, first.meta)
     val df = applyGenerated(applyDefaults(df0, first.meta), first.meta)
     enforceConstraints(df, first.meta)
     var checked = first.meta.checkExprs.toSet
@@ -429,58 +402,51 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     val perAttempt = tracks || first.meta.identities.nonEmpty
     val stagedOnce =
       if (perAttempt) Vector.empty[Add] else stageWrite(df, stagedMeta)
-    var attempt = 0
-    while (attempt < maxRetries) {
+    retrying("append") { attempt =>
       val snap = if (attempt == 0) first else metaSnapshot()._1
       gateWriter(snap.meta)
       // the duplicate check re-runs against every fresh snapshot: a
       // concurrent twin that won the race turns this attempt into the
       // no-op (the staged orphans are vacuum's to reclaim, like any
       // lost-race staging)
-      txn.foreach { t =>
-        if (snap.txns.get(t.appId).exists(_ >= t.version))
-          return snap.version
+      if (absorbed(snap, txn)) Some(snap.version)
+      else {
+        // a concurrent ADD_CONSTRAINT must bind this append too
+        val fresh = snap.meta.checkExprs.filterNot(checked)
+        if (fresh.nonEmpty) {
+          enforceConstraints(df,
+            snap.meta.copy(constraints = Some(fresh)))
+          checked ++= fresh
+        }
+        val merged = evolve(snap.meta, df.schema,
+          preassigned = stagedMeta.columnMapping.getOrElse(Map.empty))
+        val adds =
+          if (perAttempt) {
+            val withIds =
+              if (tracks) assignRowIds(df, snap.meta.nextRowId) else df
+            stageWrite(applyIdentities(withIds, snap.meta), merged)
+          } else stagedOnce
+        val newMeta = bumpIdentities(
+          if (tracks) bumpWatermark(merged, adds) else merged, adds)
+        val metaEntry =
+          if (newMeta != snap.meta) Seq(LogEntry(meta = Some(newMeta)))
+          else Nil
+        val entries = metaEntry ++ adds.map(a => LogEntry(add = Some(a))) ++
+          txn.map(t => LogEntry(txn = Some(t))).toSeq :+
+          LogEntry(info = Some(Info("APPEND", snap.version)))
+        val v = tryClaim(snap.version, entries)
+        v.foreach(_ => maybeAutoCompact(newMeta))
+        v
       }
-      // a concurrent ADD_CONSTRAINT must bind this append too
-      val fresh = snap.meta.checkExprs.filterNot(checked)
-      if (fresh.nonEmpty) {
-        enforceConstraints(df,
-          snap.meta.copy(constraints = Some(fresh)))
-        checked ++= fresh
-      }
-      val merged = evolve(snap.meta, df.schema,
-        preassigned = stagedMeta.columnMapping.getOrElse(Map.empty))
-      val adds =
-        if (perAttempt) {
-          val withIds =
-            if (tracks) assignRowIds(df, snap.meta.nextRowId) else df
-          stageWrite(applyIdentities(withIds, snap.meta), merged)
-        } else stagedOnce
-      val newMeta = bumpIdentities(
-        if (tracks) bumpWatermark(merged, adds) else merged, adds)
-      val metaEntry =
-        if (newMeta != snap.meta) Seq(LogEntry(meta = Some(newMeta)))
-        else Nil
-      val entries = metaEntry ++ adds.map(a => LogEntry(add = Some(a))) ++
-        txn.map(t => LogEntry(txn = Some(t))).toSeq :+
-        LogEntry(info = Some(Info("APPEND", snap.version)))
-      val v = snap.version + 1
-      if (TxLog.tryCommit(fs, root, v, entries)) {
-        maybeAutoCompact(newMeta)
-        return v
-      }
-      attempt += 1
     }
-    sys.error(s"append to $root lost $maxRetries races")
   }
 
   /** Delete matching rows, copy-on-write: only files that actually hold
     * a matching row are rewritten; a lost race redoes the filter against
     * the fresh snapshot (serializable against concurrent appends).
     */
-  def deleteWhere(cond: Column): Long = {
-    var attempt = 0
-    while (true) {
+  def deleteWhere(cond: Column): Long =
+    retrying("delete") { _ =>
       val snap = mutationSnapshot(cond)
       gateWriter(snap.meta)
       gateAppendOnly(snap.meta, "DELETE")
@@ -494,22 +460,20 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       val hit = cur.where(cond)
         .select(col(FileCol).as("f")).distinct()
         .collect().map(r => relPath(r.getString(0))).toSet
-      if (hit.isEmpty) return snap.version // nothing to do, no commit
-      val affected = snap.adds.filter(a => hit(a.path))
-      // NULL-predicate rows are NOT matches and must survive the rewrite
-      // (row ids ride through verbatim on a tracked table).
-      val survivors = readFiles(snap, affected.map(_.path),
-          withRowId = snap.meta.tracksRows)
-        .where(!coalesce(cond, lit(false)))
-      val entries = stageCommit(snap, snap.meta, "DELETE", affected,
-        Some(survivors), cur.where(cond).drop(FileCol)
-          .withColumn("_change_type", lit("delete")))
-      commitRebasing(snap, entries, cond).foreach(v => return v)
-      attempt += 1
-      require(attempt < maxRetries, s"delete in $root lost $maxRetries races")
+      if (hit.isEmpty) Some(snap.version) // nothing to do, no commit
+      else {
+        val affected = snap.adds.filter(a => hit(a.path))
+        // NULL-predicate rows are NOT matches and must survive the rewrite
+        // (row ids ride through verbatim on a tracked table).
+        val survivors = readFiles(snap, affected.map(_.path),
+            withRowId = snap.meta.tracksRows)
+          .where(!coalesce(cond, lit(false)))
+        val entries = stageCommit(snap, snap.meta, "DELETE", affected,
+          Some(survivors), cur.where(cond).drop(FileCol)
+            .withColumn("_change_type", lit("delete")))
+        commitRebasing(snap, entries, cond)
+      }
     }
-    sys.error("unreachable")
-  }
 
   /** Predicate-scoped atomic OVERWRITE (Delta's `replaceWhere`): in ONE
     * commit, rows matching `cond` are replaced by `df0` — the
@@ -530,10 +494,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     val first = metaSnapshot()._1
     gateWriter(first.meta)
     gateAppendOnly(first.meta, "replaceWhere")
-    first.meta.identities.keys.foreach(c =>
-      require(!df0.columns.contains(c),
-        s"identity column $c is GENERATED ALWAYS — writers must not " +
-          "supply it"))
+    refuseIdentityValues(df0, first.meta)
     require(first.meta.identities.isEmpty,
       s"replaceWhere into $root: identity-column tables cannot replace " +
         "slices (allocation for replaced rows is ambiguous) — use " +
@@ -543,8 +504,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     require(stray == 0,
       "replaceWhere: incoming rows fall OUTSIDE the predicate scope — " +
         "a slice overwrite must only land rows inside its slice")
-    var attempt = 0
-    while (true) {
+    retrying("replaceWhere") { _ =>
       val snap = mutationSnapshot(cond)
       gateWriter(snap.meta)
       enforceConstraints(df, snap.meta)
@@ -576,12 +536,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
             .withColumn("_change_type", lit("insert"))
           dels.unionByName(ins, allowMissingColumns = true)
         })
-      commitRebasing(snap, entries, cond).foreach(v => return v)
-      attempt += 1
-      require(attempt < maxRetries,
-        s"replaceWhere in $root lost $maxRetries races")
+      commitRebasing(snap, entries, cond)
     }
-    sys.error("unreachable")
   }
 
   /** DELETE, merge-on-read (Delta's deletion vectors): files where the
@@ -601,9 +557,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * old live set against the new one.
     */
   def deleteWhereMergeOnRead(cond: Column,
-      maxPositionsPerFile: Int = 10000): Long = {
-    var attempt = 0
-    while (true) {
+      maxPositionsPerFile: Int = 10000): Long =
+    retrying("merge-on-read delete") { _ =>
       val snap = mutationSnapshot(cond)
       gateWriter(snap.meta)
       gateAppendOnly(snap.meta, "DELETE (merge-on-read)")
@@ -618,61 +573,58 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         .agg(collect_list(col(PosCol)).as("pos"))
         .collect()
         .map(r => relPath(r.getString(0)) -> r.getSeq[Long](1))
-      if (hits.isEmpty) return snap.version // nothing to do, no commit
-      // The cap bounds the MERGED vector (existing positions + this
-      // delete's new hits — disjoint sets, since vectored rows are
-      // already invisible to the match scan): repeated sparse deletes
-      // must not grow a vector past the cap — the sidecar keeps the LOG
-      // O(1) regardless, but the read-side broadcast anti-join is sized
-      // by the cap.
-      val (dvHits, cowHits) = hits.partition { case (p, pos) =>
-        addByPath(p).dvSize + pos.size <= maxPositionsPerFile
-      }
-      val dvEntries = dvHits.toSeq.flatMap { case (p, pos) =>
-        val a = addByPath(p)
-        val live = a.rows - pos.size
-        val rm = LogEntry(remove = Some(Remove(p, Some(a.rows), a.bytes)))
-        if (live <= 0) Seq(rm) // vector would cover the whole file
-        else {
-          // merged vector into a NEW immutable sidecar; the log entry
-          // carries only its path + cardinality (O(1) however sparse or
-          // wide the vector), old sidecars age out via vacuum
-          val merged = (dvPositionsOf(a) ++ pos).distinct.sorted
-          val rel = writeDvSidecar(merged)
-          Seq(rm, LogEntry(add = Some(a.copy(rows = live, dv = None,
-            dvFile = Some(rel), dvCount = Some(merged.size.toLong)))))
+      if (hits.isEmpty) Some(snap.version) // nothing to do, no commit
+      else {
+        // The cap bounds the MERGED vector (existing positions + this
+        // delete's new hits — disjoint sets, since vectored rows are
+        // already invisible to the match scan): repeated sparse deletes
+        // must not grow a vector past the cap — the sidecar keeps the LOG
+        // O(1) regardless, but the read-side broadcast anti-join is sized
+        // by the cap.
+        val (dvHits, cowHits) = hits.partition { case (p, pos) =>
+          addByPath(p).dvSize + pos.size <= maxPositionsPerFile
         }
+        val dvEntries = dvHits.toSeq.flatMap { case (p, pos) =>
+          val a = addByPath(p)
+          val live = a.rows - pos.size
+          val rm = LogEntry(remove = Some(Remove(p, Some(a.rows), a.bytes)))
+          if (live <= 0) Seq(rm) // vector would cover the whole file
+          else {
+            // merged vector into a NEW immutable sidecar; the log entry
+            // carries only its path + cardinality (O(1) however sparse or
+            // wide the vector), old sidecars age out via vacuum
+            val merged = (dvPositionsOf(a) ++ pos).distinct.sorted
+            val rel = writeDvSidecar(merged)
+            Seq(rm, LogEntry(add = Some(a.copy(rows = live, dv = None,
+              dvFile = Some(rel), dvCount = Some(merged.size.toLong)))))
+          }
+        }
+        val cowAffected = cowHits.map(h => addByPath(h._1)).toSeq
+        // the first vectored file makes naive readers WRONG (they would
+        // return deleted rows) and naive WRITERS destructive (a rewrite
+        // ignoring the vector resurrects them) — stamp both protocol
+        // halves in the same commit so a version-skewed client refuses
+        // instead of misreading or corrupting
+        val meta =
+          if (dvEntries.exists(_.add.exists(_.dvFile.isDefined)) &&
+              (!snap.meta.features.contains("deletionVectors") ||
+               !snap.meta.writerFeats.contains("deletionVectors")))
+            snap.meta.withReaderFeature("deletionVectors")
+              .withWriterFeature("deletionVectors")
+          else snap.meta
+        // the copy-on-write fallback's survivors (none when every hit
+        // file took a vector: then only the capture is staged)
+        val cowRows =
+          if (cowAffected.isEmpty) None
+          else Some(readFiles(snap, cowAffected.map(_.path),
+              withRowId = snap.meta.tracksRows)
+            .where(!coalesce(cond, lit(false))))
+        val entries = stageCommit(snap, meta, "DELETE_DV", cowAffected,
+          cowRows, cur.where(cond).drop(FileCol, PosCol)
+            .withColumn("_change_type", lit("delete")), dvEntries)
+        commitRebasing(snap, entries, cond)
       }
-      val cowAffected = cowHits.map(h => addByPath(h._1)).toSeq
-      // the first vectored file makes naive readers WRONG (they would
-      // return deleted rows) and naive WRITERS destructive (a rewrite
-      // ignoring the vector resurrects them) — stamp both protocol
-      // halves in the same commit so a version-skewed client refuses
-      // instead of misreading or corrupting
-      val meta =
-        if (dvEntries.exists(_.add.exists(_.dvFile.isDefined)) &&
-            (!snap.meta.features.contains("deletionVectors") ||
-             !snap.meta.writerFeats.contains("deletionVectors")))
-          snap.meta.withReaderFeature("deletionVectors")
-            .withWriterFeature("deletionVectors")
-        else snap.meta
-      // the copy-on-write fallback's survivors (none when every hit
-      // file took a vector: then only the capture is staged)
-      val cowRows =
-        if (cowAffected.isEmpty) None
-        else Some(readFiles(snap, cowAffected.map(_.path),
-            withRowId = snap.meta.tracksRows)
-          .where(!coalesce(cond, lit(false))))
-      val entries = stageCommit(snap, meta, "DELETE_DV", cowAffected,
-        cowRows, cur.where(cond).drop(FileCol, PosCol)
-          .withColumn("_change_type", lit("delete")), dvEntries)
-      commitRebasing(snap, entries, cond).foreach(v => return v)
-      attempt += 1
-      require(attempt < maxRetries,
-        s"merge-on-read delete in $root lost $maxRetries races")
     }
-    sys.error("unreachable")
-  }
 
   /** UPDATE ... SET: rows matching `cond` get the `set` expressions
     * applied; everything else is untouched. Copy-on-write like
@@ -686,8 +638,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     */
   def update(cond: Column, set: Map[String, Column]): Long = {
     require(set.nonEmpty, "update needs at least one SET column")
-    var attempt = 0
-    while (true) {
+    retrying("update") { _ =>
       val snap = mutationSnapshot(cond)
       gateWriter(snap.meta)
       gateAppendOnly(snap.meta, "UPDATE")
@@ -711,54 +662,61 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       val hit = cur.where(matched)
         .select(col(FileCol).as("f")).distinct()
         .collect().map(r => relPath(r.getString(0))).toSet
-      if (hit.isEmpty) return snap.version // nothing matches, no commit
-      val affected = snap.adds.filter(a => hit(a.path))
-      // the match flag is computed on the OLD row, before any SET lands
-      // (a SET that flips its own predicate must not re-evaluate)
-      val flag = "__txlog_upd"
-      val rewritten = readFiles(snap, affected.map(_.path),
-          withRowId = tracks)
-        .withColumn(flag, matched)
-        .select(schema.fieldNames.map { c =>
-          set.get(c) match {
-            case Some(e) =>
-              when(col(flag), e.cast(schema(c).dataType)).otherwise(col(c)).as(c)
-            case None => col(c)
-          }
-        } ++ (if (tracks) Seq(col(RowIdCol)) else Nil) :+ col(flag): _*)
-      // constraints need probing only on the transformed rows — the
-      // copied-verbatim neighbours already passed at their own write
-      enforceConstraints(
-        rewritten.where(col(flag)).drop(flag, RowIdCol), snap.meta)
-      // an UPDATE's feed is the pre/postimage pair per matched row
-      // (Delta's four change types — downstream consumers can tell an
-      // update from a coincidental delete+insert of the same key in one
-      // commit); both sides already in hand (old = the match scan, new
-      // = the transformed half of the rewrite). On a tracked CDF table
-      // both images carry the row's _row_id — UPDATE preserves identity,
-      // so the pair is id-joinable with no key assumptions.
-      val entries = stageCommit(snap, snap.meta, "UPDATE", affected,
-        Some(rewritten.drop(flag)), cur.where(matched).drop(FileCol)
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(rewritten.where(col(flag))
-            .drop((flag +: (if (idFeed) Nil else Seq(RowIdCol))): _*)
-            .withColumn("_change_type", lit("update_postimage"))))
-      commitRebasing(snap, entries, cond).foreach(v => return v)
-      attempt += 1
-      require(attempt < maxRetries, s"update in $root lost $maxRetries races")
+      if (hit.isEmpty) Some(snap.version) // nothing matches, no commit
+      else {
+        val affected = snap.adds.filter(a => hit(a.path))
+        // the match flag is computed on the OLD row, before any SET lands
+        // (a SET that flips its own predicate must not re-evaluate)
+        val flag = "__txlog_upd"
+        val rewritten = readFiles(snap, affected.map(_.path),
+            withRowId = tracks)
+          .withColumn(flag, matched)
+          .select(schema.fieldNames.map { c =>
+            set.get(c) match {
+              case Some(e) =>
+                when(col(flag), e.cast(schema(c).dataType)).otherwise(col(c)).as(c)
+              case None => col(c)
+            }
+          } ++ (if (tracks) Seq(col(RowIdCol)) else Nil) :+ col(flag): _*)
+        // constraints need probing only on the transformed rows — the
+        // copied-verbatim neighbours already passed at their own write
+        enforceConstraints(
+          rewritten.where(col(flag)).drop(flag, RowIdCol), snap.meta)
+        // an UPDATE's feed is the pre/postimage pair per matched row
+        // (Delta's four change types — downstream consumers can tell an
+        // update from a coincidental delete+insert of the same key in one
+        // commit); both sides already in hand (old = the match scan, new
+        // = the transformed half of the rewrite). On a tracked CDF table
+        // both images carry the row's _row_id — UPDATE preserves identity,
+        // so the pair is id-joinable with no key assumptions.
+        val entries = stageCommit(snap, snap.meta, "UPDATE", affected,
+          Some(rewritten.drop(flag)), cur.where(matched).drop(FileCol)
+            .withColumn("_change_type", lit("update_preimage"))
+            .unionByName(rewritten.where(col(flag))
+              .drop((flag +: (if (idFeed) Nil else Seq(RowIdCol))): _*)
+              .withColumn("_change_type", lit("update_postimage"))))
+        commitRebasing(snap, entries, cond)
+      }
     }
-    sys.error("unreachable")
   }
 
-  /** MERGE (whole-row upsert): rows of `source` replace current rows
-    * sharing their key; unmatched source rows insert. Copy-on-write on
-    * exactly the files holding a matched key — the unmatched bulk of
+  /** MERGE (whole-row upsert): rows of `source` replace every current
+    * row sharing their key; unmatched source rows insert. Copy-on-write
+    * on exactly the files holding a matched key — the unmatched bulk of
     * the table is never rewritten (the lakehouse MERGE contract).
-    * `source` must be unique per key (ambiguous merges are an error,
-    * as in Delta). Conflicts retry against the fresh snapshot, like
-    * [[deleteWhere]].
-    */
-  /** `schemaEvolution = true` is Delta's
+    * `source` must be unique per key (ambiguous merges are an error, as
+    * in Delta). Keys match with plain equality: a null key never
+    * matches (SQL MERGE's rule). The feed is Delta's four change types:
+    * every replaced row is an update preimage and its replacement the
+    * postimage (the pair surfaces even when the replacement is
+    * byte-identical — Delta's behavior); source rows with no matched
+    * key are plain inserts. An appendOnly table refuses only a merge
+    * that would rewrite target files: one hitting no key is a pure
+    * append (Delta's commit-time rule). Planned by [[keyedReplace]].
+    *
+    * `txn = Some((appId, version))` is the idempotence watermark
+    * (foreachBatch exactly-once): an already absorbed pair is a no-op
+    * returning the current version. `schemaEvolution = true` is Delta's
     * `spark.databricks.delta.schema.autoMerge`: source columns the
     * target lacks are ADDED (additive evolution) in the same commit —
     * surviving rows null-fill, and older files read back with nulls
@@ -768,141 +726,10 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     */
   def merge(source: DataFrame, keyCols: Seq[String],
       txn: Option[(String, Long)] = None,
-      schemaEvolution: Boolean = false): Long = {
-    require(keyCols.nonEmpty, "merge needs at least one key column")
-    // generated columns are create-time-fixed: compute/validate them on
-    // the source once, against the FIRST snapshot — which then also
-    // serves attempt 0 of the retry loop, so the common no-conflict
-    // merge replays the log exactly once. Above the driver threshold
-    // that first resolution collects NO Adds (meta/version/txns only)
-    // and each attempt plans its candidates distributed.
-    val (first, firstComplete) = metaSnapshot()
-    gateWriter(first.meta)
-    require(first.meta.identities.isEmpty,
-      s"MERGE into $root: identity-column tables do not support keyed " +
-        "upserts (allocation for a replaced row is ambiguous) — use " +
-        "append/overwritePartition")
-    val src = applyGenerated(applyDefaults(source, first.meta),
-      first.meta).cache()
-    try {
-      // the ambiguous-source gate (duplicate keys) rides the hit-file
-      // collect below — applyChanges' shape: one action instead of two
-      // per merge (and a streaming foreachBatch merges EVERY batch);
-      // both subtrees execute under the same collect, the union's first
-      // column tags which one a row came from
-      val dupProbe = src.groupBy(keyCols.map(col): _*)
-        .count().where(col("count") > 1).limit(1)
-        .select(lit("dup").as("__k"), lit("").as("__v"))
-      var attempt = 0
-      while (true) {
-        val snap =
-          if (attempt == 0 && firstComplete) first
-          else keyedMutationSnapshot(keyCols,
-            src.select(keyCols.map(col): _*), nullSafe = false)
-        gateWriter(snap.meta)
-        // idempotence watermark (foreachBatch exactly-once): an already
-        // absorbed (appId, version) skips — checked per attempt, so a
-        // concurrent duplicate that wins the race is honored
-        // (snap.txns is complete on BOTH resolution paths)
-        txn.foreach { case (app, tv) =>
-          if (snap.txns.get(app).exists(_ >= tv)) return snap.version
-        }
-        enforceConstraints(src.select(
-          snap.meta.schema.fieldNames.filter(src.columns.contains).map(col): _*),
-          snap.meta)
-        val meta =
-          if (schemaEvolution) evolve(snap.meta, src.schema) else snap.meta
-        val keys = src.select(keyCols.map(col): _*)
-        val cur = readFiles(snap,
-          keyScanPaths(snap, keyCols, keys, nullSafe = false),
-          withFileCol = true)
-        val probed = cur.join(keys, keyCols, "left_semi")
-          .select(lit("f").as("__k"), col(FileCol).as("__v")).distinct()
-          .unionByName(dupProbe)
-          .collect()
-        require(!probed.exists(_.getString(0) == "dup"),
-          s"merge source has duplicate keys on ${keyCols.mkString(",")}")
-        val hit = probed.iterator.filter(_.getString(0) == "f")
-          .map(r => relPath(r.getString(1))).toSet
-        val affected = snap.adds.filter(a => hit(a.path))
-        if (affected.nonEmpty) gateAppendOnly(snap.meta, "MERGE")
-        // survivors: rows of affected files whose key is NOT in source.
-        // Staged together with the source rows — one write job + one
-        // stats pass instead of two of each. Under evolution both sides
-        // align to the MERGED schema (survivors null-fill new columns).
-        def aligned(df: DataFrame): DataFrame =
-          df.select(meta.schema.fields.map(f =>
-            if (df.columns.contains(f.name)) col(f.name)
-            else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq ++
-            (if (df.columns.contains(RowIdCol)) Seq(col(RowIdCol))
-             else Nil): _*)
-        val tracks = snap.meta.tracksRows
-        val idFeed = tracks && snap.meta.cdf
-        val tgt = readFiles(snap, affected.map(_.path), withRowId = tracks)
-        val survivors = aligned(tgt.join(keys, keyCols, "left_anti"))
-        val srcAligned0 = src.select(meta.schema.fieldNames.map(col): _*)
-        // row identity survives the upsert: a source row replacing a
-        // matched key INHERITS that row's id (Delta's merge-update
-        // semantics); unmatched source rows draw fresh ids
-        // the id lookup is PRE-AGGREGATED per key: a target legally
-        // holding duplicate rows for a key (appended twice) must not
-        // fan the joined source row out into N staged copies — the
-        // contract is "source replaces current rows sharing their
-        // key", one row out, inheriting the smallest id (same rule as
-        // applyChanges)
-        val srcAligned0b =
-          if (!tracks) srcAligned0
-          else srcAligned0.join(
-            tgt.groupBy(keyCols.map(col): _*)
-              .agg(min(col(RowIdCol)).as("__old_rid")),
-            keyCols, "left")
-            .withColumn(RowIdCol, coalesce(col("__old_rid"),
-              lit(snap.meta.nextRowId) + monotonically_increasing_id()))
-            .drop("__old_rid")
-        // an id-carrying feed must record the SAME fresh ids the write
-        // lands: MATERIALIZE the id assignment (localCheckpoint — a
-        // best-effort cache could silently recompute different
-        // monotonically_increasing_id values into the capture job; a
-        // lost checkpoint block fails loudly instead)
-        val srcAligned =
-          if (idFeed) srcAligned0b.localCheckpoint() else srcAligned0b
-        // MERGE feed, Delta's four change types: every replaced row is
-        // an update PREIMAGE and its replacement the POSTIMAGE (the
-        // pair surfaces even when the replacement is byte-identical —
-        // Delta's behavior); source rows with no matched key are plain
-        // inserts
-        val entries = stageCommit(snap, meta, "MERGE", affected,
-            Some(survivors.unionByName(srcAligned)), {
-            // on a tracked CDF table every image carries its _row_id
-            // (preimages from the files, postimages/inserts from the
-            // materialized assignment above); untracked feeds carry
-            // table columns only
-            val tgtF = readFiles(snap, affected.map(_.path),
-              withRowId = idFeed)
-            val tgtKeys = tgtF.select(keyCols.map(col): _*)
-            val srcCap = if (idFeed) srcAligned else srcAligned0
-            aligned(tgtF.join(keys, keyCols, "left_semi"))
-              .withColumn("_change_type", lit("update_preimage"))
-              .unionByName(srcCap.join(tgtKeys, keyCols, "left_semi")
-                .withColumn("_change_type", lit("update_postimage")))
-              .unionByName(srcCap.join(tgtKeys, keyCols, "left_anti")
-                .withColumn("_change_type", lit("insert")))
-          }, txn.map { case (app, tv) => LogEntry(txn = Some(Txn(app, tv))) }
-            .toSeq)
-        // lost-race rebase on the SOURCE KEY ranges: a winner blind
-        // append whose files cannot hold any source key cannot change
-        // what this merge replaces
-        commitRebasingOn(snap, entries,
-          keyCols.filter(keyPrunable(snap.meta, _)).flatMap { k =>
-            keyRange(keys, k, nullSafe = false)
-              .map { case (lo, hi) => (k, Option(lo), Option(hi)) } })
-          .foreach(v => return v)
-        attempt += 1
-        require(attempt < maxRetries, s"merge into $root lost $maxRetries races")
-      }
-      sys.error("unreachable")
-    } finally src.unpersist()
-  }
+      schemaEvolution: Boolean = false): Long =
+    cachedFor(source)(src => keyedReplace("merge", "MERGE", keyCols, src,
+      None, nullSafe = false, txn.map { case (app, v) => Txn(app, v) },
+      schemaEvolution))
 
   /** Delta's FULL conditional MERGE surface as a builder:
     * `mergeInto(source, keys).whenMatchedDelete(...).whenMatchedUpdate(...)
@@ -911,12 +738,14 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * match class) whose condition holds wins; a row no clause claims is
     * kept unchanged (matched / target-only) or dropped (source-only),
     * exactly Delta's semantics. Conditions and SET expressions reference
-    * the two sides as `t.<col>` / `s.<col>`.
+    * the two sides as `t.<col>` / `s.<col>`. Unlike [[merge]], a matched
+    * clause acts on EACH matched target row.
     *
     * Scale posture: without BY SOURCE clauses only files holding a
-    * source key are rewritten (the same one-metadata-aggregation prune
-    * as [[merge]]); BY SOURCE clauses must scan every live file — that
-    * is Delta's cost too, and it is the caller's explicit opt-in.
+    * source key are rewritten (the keyed match scan of
+    * [[keyedReplace]], [[hitFiles]]); BY SOURCE clauses must scan every
+    * live file — that is Delta's cost too, and it is the caller's
+    * explicit opt-in.
     */
   def mergeInto(source: DataFrame, keyCols: Seq[String]): MergeInto =
     new MergeInto(source, keyCols)
@@ -965,30 +794,20 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       require(keyCols.nonEmpty, "mergeInto needs at least one key column")
       require(matchedCls.nonEmpty || bySourceCls.nonEmpty ||
         insertCls.nonEmpty, "MERGE needs at least one clause")
-      val src0 = source.cache()
-      try {
-        // ambiguous-source gate: in the keyed shape it rides the
-        // hit-file collect (merge's one-action pattern); the by-source
-        // shape has no hit collect to ride — it pays its own action
-        val dupProbe = src0.groupBy(keyCols.map(col): _*)
-          .count().where(col("count") > 1).limit(1)
-          .select(lit("dup").as("__k"), lit("").as("__v"))
-        val dupMsg =
-          s"merge source has duplicate keys on ${keyCols.mkString(",")}"
-        if (bySourceCls.nonEmpty)
-          require(dupProbe.limit(1).count() == 0, dupMsg)
-        var attempt = 0
-        while (true) {
+      cachedFor(source) { src0 =>
+        val srcKeys = src0.select(keyCols.map(col): _*)
+        // the by-source shape has no hit collect for the duplicate-key
+        // gate to ride: it pays its own action
+        if (bySourceCls.nonEmpty) requireUniqueKeys("mergeInto", keyCols,
+          dupProbe(src0, keyCols).count() > 0)
+        retrying("mergeInto") { _ =>
           // a by-source clause touches EVERY target row, so only the
           // keyed shape can plan its candidates distributed
           val snap =
             if (bySourceCls.nonEmpty) TxLog.snapshot(fs, root)
-            else keyedMutationSnapshot(keyCols,
-              src0.select(keyCols.map(col): _*), nullSafe = false)
+            else keyedMutationSnapshot(keyCols, srcKeys, nullSafe = false)
           gateWriter(snap.meta)
-          require(snap.meta.identities.isEmpty,
-            s"MERGE into $root: identity-column tables do not support " +
-              "keyed upserts — use append/overwritePartition")
+          require(snap.meta.identities.isEmpty, identityRefusal("mergeInto"))
           val fields = snap.meta.schema.fields.toSeq
           // files holding a source key are loaded even for insert-only
           // merges: a source row matching an existing key must classify
@@ -996,22 +815,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
           // seeing the target row
           val affected =
             if (bySourceCls.nonEmpty) snap.adds
-            else {
-              val srcKeys = src0.select(keyCols.map(col): _*)
-              val cur = readFiles(snap,
-                keyScanPaths(snap, keyCols, srcKeys, nullSafe = false),
-                withFileCol = true)
-              val probed = cur
-                .join(srcKeys, keyCols, "left_semi")
-                .select(lit("f").as("__k"), col(FileCol).as("__v"))
-                .distinct()
-                .unionByName(dupProbe)
-                .collect()
-              require(!probed.exists(_.getString(0) == "dup"), dupMsg)
-              val hit = probed.iterator.filter(_.getString(0) == "f")
-                .map(r => relPath(r.getString(1))).toSet
-              snap.adds.filter(a => hit(a.path))
-            }
+            else hitFiles(snap, keyCols, srcKeys, nullSafe = false, src0,
+              "mergeInto")
           if (affected.nonEmpty) gateAppendOnly(snap.meta, "MERGE INTO")
           val tracks = snap.meta.tracksRows
           val t = readFiles(snap, affected.map(_.path), withRowId = tracks)
@@ -1110,22 +915,11 @@ final class TxTable(spark: SparkSession, rootStr: String) {
           // lost-race rebase — but NEVER with BY SOURCE clauses: those
           // claim target rows regardless of source keys, so a winner's
           // appended rows would be in their scope
-          (if (bySourceCls.nonEmpty) {
-             if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
-               Some(snap.version + 1)
-             else None
-           } else commitRebasingOn(snap, entries,
-             keyCols.filter(keyPrunable(snap.meta, _)).flatMap { k =>
-               keyRange(src0.select(keyCols.map(col): _*), k,
-                 nullSafe = false)
-                 .map { case (lo, hi) => (k, Option(lo), Option(hi)) } }))
-            .foreach(v => return v)
-          attempt += 1
-          require(attempt < maxRetries,
-            s"mergeInto $root lost $maxRetries races")
+          if (bySourceCls.nonEmpty) tryClaim(snap.version, entries)
+          else commitRebasingOnKeys(snap, entries, keyCols, srcKeys,
+            nullSafe = false)
         }
-        sys.error("unreachable")
-      } finally { src0.unpersist(); () }
+      }
     }
   }
 
@@ -1134,12 +928,16 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * keyed by `keyCols` — the incremental materialized-view primitive:
     * a downstream table stays in sync with an upstream's commits by
     * folding each version's feed in, touching only the files that hold
-    * affected keys, never recomputing itself. Deletes and update
-    * preimages remove their keys, inserts and update postimages upsert
-    * theirs, one atomic commit — an update's pre/post pair is one keyed
-    * migration, and a legacy delete+insert pair of the same key
-    * collapses to the insert identically. Upserted rows must be unique
-    * per key, like [[merge]].
+    * affected keys, never recomputing itself. Every key in the slice
+    * retracts its current rows, and the slice's inserts and update
+    * postimages upsert theirs, in one atomic commit — an update's
+    * pre/post pair is one keyed migration, and a legacy delete+insert
+    * pair of the same key collapses to the insert identically. Upserted
+    * rows must be unique per key, like [[merge]]. The table's own feed
+    * keeps the four types: a key both retracted and upserted is an
+    * update pair, a key only retracted a delete, a key with no prior row
+    * an insert. An appendOnly table refuses every slice up front, an
+    * insert-only one too. Planned by [[keyedReplace]].
     *
     * Keys match NULL-SAFELY (`<=>`, SQL's IS NOT DISTINCT FROM): a
     * maintained state table legitimately holds NULL group keys
@@ -1149,10 +947,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * instead. [[merge]] deliberately keeps SQL MERGE's
     * null-never-matches comparison; replica maintenance must not.
     */
-  def applyChanges(changes: DataFrame, keyCols: Seq[String]): Long = {
-    require(keyCols.nonEmpty, "applyChanges needs at least one key column")
-    applyChangesCore(changes, keyCols, byId = false)
-  }
+  def applyChanges(changes: DataFrame, keyCols: Seq[String]): Long =
+    applySlice("applyChanges", changes, keyCols)
 
   /** [[applyChanges]] keyed by ROW IDENTITY instead of caller-supplied
     * key columns — the keyless replica primitive row tracking exists
@@ -1166,123 +962,156 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * so local appends never collide with replicated identities.
     */
   def applyChangesById(changes: DataFrame): Long =
-    applyChangesCore(changes, Seq(RowIdCol), byId = true)
+    applySlice("applyChangesById", changes, Seq(RowIdCol))
 
-  private def applyChangesCore(changes: DataFrame, keyCols: Seq[String],
-      byId: Boolean): Long = {
-    val slice = changes.cache()
-    try {
-      // generated columns are create-time-fixed: a slice lacking one is
-      // COMPUTED, a slice carrying a diverging value is REFUSED — ingest
-      // via the feed upholds the same invariant as append/merge
-      val (first, firstComplete) = metaSnapshot()
-      gateWriter(first.meta)
-      gateAppendOnly(first.meta, "applyChanges")
-      require(!byId || first.meta.tracksRows,
-        s"applyChangesById needs row tracking on $root " +
-          "(create(enableRowTracking))")
-      require(first.meta.identities.isEmpty,
-        s"applyChanges on $root: identity-column tables do not support " +
-          "keyed upserts (allocation for a replaced row is ambiguous)")
-      val ins = applyGenerated(applyDefaults(
-        slice.where(col("_change_type").isin("insert", "update_postimage"))
-          .drop("_change_type", "_commit_version"), first.meta), first.meta)
-      // the duplicate-inserted-keys gate rides the hit-file job below —
-      // one action instead of two per fold (both subtrees execute under
-      // the same collect; the union's first column tags which one a row
-      // came from)
-      val dupProbe = ins.groupBy(keyCols.map(col): _*)
-        .count().where(col("count") > 1).limit(1)
-        .select(lit("dup").as("__k"), lit("").as("__v"))
-      val touched = slice.select(keyCols.map(col): _*).distinct()
-      var attempt = 0
-      while (true) {
-        val snap =
-          if (attempt == 0 && firstComplete) first
-          else keyedMutationSnapshot(keyCols, touched, nullSafe = true)
-        gateWriter(snap.meta)
-        enforceConstraints(ins.select(
-          snap.meta.schema.fieldNames.filter(ins.columns.contains).map(col): _*),
-          snap.meta)
-        val cur = readFiles(snap,
-          keyScanPaths(snap, keyCols, touched, nullSafe = true),
-          withFileCol = true, withRowId = byId)
-        val probed = nullSafeKeyJoin(cur, touched, keyCols, "left_semi")
-          .select(lit("f").as("__k"), col(FileCol).as("__v")).distinct()
-          .unionByName(dupProbe)
-          .collect()
-        require(!probed.exists(_.getString(0) == "dup"),
-          s"change slice has duplicate inserted keys on ${keyCols.mkString(",")}")
-        val hit = probed.iterator.filter(_.getString(0) == "f")
-          .map(r => relPath(r.getString(1))).toSet
-        val affected = snap.adds.filter(a => hit(a.path))
+  private def applySlice(verb: String, changes: DataFrame,
+      keyCols: Seq[String]): Long =
+    cachedFor(changes)(slice => keyedReplace(verb, "APPLY_CHANGES", keyCols,
+      slice.where(col("_change_type").isin("insert", "update_postimage"))
+        .drop("_change_type", "_commit_version"),
+      Some(slice.select(keyCols.map(col): _*).distinct()), nullSafe = true))
+
+  /** The keyed-replace kernel behind [[merge]], [[applyChanges]] and
+    * [[applyChangesById]]: one commit removes every live row whose key
+    * is in `retract` and lands the `upserts`, which must be unique per
+    * key. `retract = None` is merge's case: the retract set is the
+    * upserts' own keys, so no row is deleted outright and the feed plans
+    * no delete half. `nullSafe` matches keys with `<=>` instead of `===`.
+    *
+    * Only the files holding a retracted key are read and rewritten
+    * ([[hitFiles]]). An upserted row replacing a key inherits the
+    * smallest old `_row_id` of that key — one row out however many the
+    * target held, and re-applying a slice reproduces the same ids; a new
+    * key draws a fresh id. Keyed on `_row_id` itself, the upserts' ids
+    * land verbatim. A lost race rebases on the retract set's key ranges
+    * ([[commitRebasingOnKeys]]).
+    */
+  private def keyedReplace(verb: String, op: String, keyCols: Seq[String],
+      upserts: DataFrame, retract: Option[DataFrame], nullSafe: Boolean,
+      txn: Option[Txn] = None, schemaEvolution: Boolean = false): Long = {
+    require(keyCols.nonEmpty, s"$verb needs at least one key column")
+    val byId = keyCols == Seq(RowIdCol)
+    // generated columns are create-time-fixed: compute/validate them on
+    // the upserts once, against the FIRST snapshot — which then also
+    // serves attempt 0, so the common no-conflict commit replays the log
+    // exactly once. Above the driver threshold that first resolution
+    // collects NO Adds (meta/version/txns only) and each attempt plans
+    // its candidates distributed.
+    val (first, firstComplete) = metaSnapshot()
+    gateWriter(first.meta)
+    require(first.meta.identities.isEmpty, identityRefusal(verb))
+    require(!byId || first.meta.tracksRows,
+      s"$verb needs row tracking on $root (create(enableRowTracking))")
+    if (retract.isDefined) gateAppendOnly(first.meta, verb)
+    val ups = applyGenerated(applyDefaults(upserts, first.meta), first.meta)
+    val upKeys = ups.select(keyCols.map(col): _*)
+    val keys = retract.getOrElse(upKeys)
+    def join(l: DataFrame, r: DataFrame, how: String) =
+      keyJoin(l, r, keyCols, nullSafe, how)
+    retrying(verb) { attempt =>
+      val snap =
+        if (attempt == 0 && firstComplete) first
+        else keyedMutationSnapshot(keyCols, keys, nullSafe)
+      gateWriter(snap.meta)
+      // checked per attempt, so a concurrent duplicate that wins the
+      // race is honored (snap.txns is complete on both resolution paths)
+      if (absorbed(snap, txn)) Some(snap.version)
+      else {
+        enforceConstraints(ups.select(snap.meta.schema.fieldNames
+          .filter(ups.columns.contains).map(col): _*), snap.meta)
+        val meta =
+          if (schemaEvolution) evolve(snap.meta, ups.schema) else snap.meta
+        val affected = hitFiles(snap, keyCols, keys, nullSafe, ups, verb)
+        if (affected.nonEmpty) gateAppendOnly(snap.meta, verb)
         val tracks = snap.meta.tracksRows
         val idFeed = tracks && snap.meta.cdf
-        val oldRows = readFiles(snap, affected.map(_.path),
-          withRowId = tracks)
-        val survivors = nullSafeKeyJoin(oldRows, touched, keyCols, "left_anti")
-        val insAligned0 = ins.select(snap.meta.schema.fieldNames.map(col): _*)
-        // keyed mode: an upsert replacing a key INHERITS that row's id
-        // (idempotent replica maintenance — re-applying a slice
-        // reproduces the same ids), brand-new keys draw fresh ids.
-        // id mode: the slice's OWN ids land verbatim — identity is the
-        // key, so there is nothing to look up.
-        val insAligned0b =
-          if (byId) ins.select((snap.meta.schema.fieldNames.toSeq :+
-            RowIdCol).map(col): _*)
-          else if (!tracks) insAligned0
-          else nullSafeKeyJoin(insAligned0,
-            oldRows.groupBy(keyCols.map(col): _*)
-              .agg(min(col(RowIdCol)).as("__old_rid")),
-            keyCols, "left")
+        val old = readFiles(snap, affected.map(_.path), withRowId = tracks)
+        // survivors and upserts are staged together — one write job and
+        // one stats pass; under evolution both align to the merged schema
+        val survivors = aligned(meta, join(old, keys, "left_anti"))
+        val landed0 = ups.select(meta.schema.fieldNames.map(col): _*)
+        val landed1 =
+          if (byId)
+            ups.select((meta.schema.fieldNames.toSeq :+ RowIdCol).map(col): _*)
+          else if (!tracks) landed0
+          else join(landed0, old.groupBy(keyCols.map(col): _*)
+              .agg(min(col(RowIdCol)).as("__old_rid")), "left")
             .withColumn(RowIdCol, coalesce(col("__old_rid"),
               lit(snap.meta.nextRowId) + monotonically_increasing_id()))
             .drop("__old_rid")
         // an id-carrying feed must record the SAME fresh ids the write
-        // lands — MATERIALIZE the keyed-mode assignment
-        // (localCheckpoint, not best-effort cache: a recompute would
-        // land different ids in the feed than the files; byId slices
-        // carry explicit ids and are already deterministic)
-        val insAligned =
-          if (idFeed && !byId) insAligned0b.localCheckpoint()
-          else insAligned0b
-        val entries = stageCommit(snap, snap.meta, "APPLY_CHANGES", affected,
-            Some(survivors.unionByName(insAligned)), {
-            // this table's OWN feed keeps the four-type fidelity: a key
-            // both removed and upserted is an update pair, a key only
-            // removed a delete, a key with no prior row an insert. On a
-            // tracked CDF table every image carries its _row_id.
-            val old = nullSafeKeyJoin(
-              readFiles(snap, affected.map(_.path), withRowId = idFeed),
-              touched, keyCols, "left_semi")
-            val insCap = if (idFeed) insAligned else insAligned0
-            val insKeys = ins.select(keyCols.map(col): _*).distinct()
-            val oldKeys = old.select(keyCols.map(col): _*).distinct()
-            nullSafeKeyJoin(old, insKeys, keyCols, "left_semi")
-              .withColumn("_change_type", lit("update_preimage"))
-              .unionByName(nullSafeKeyJoin(old, insKeys, keyCols,
-                  "left_anti")
-                .withColumn("_change_type", lit("delete")))
-              .unionByName(nullSafeKeyJoin(insCap, oldKeys, keyCols,
-                  "left_semi")
-                .withColumn("_change_type", lit("update_postimage")))
-              .unionByName(nullSafeKeyJoin(insCap, oldKeys, keyCols,
-                  "left_anti")
-                .withColumn("_change_type", lit("insert")))
-          })
-        // lost-race rebase on the slice's key ranges (null-safe keyed:
-        // any null key yields no constraint and falls back to recompute)
-        commitRebasingOn(snap, entries,
-          keyCols.filter(keyPrunable(snap.meta, _)).flatMap { k =>
-            keyRange(touched, k, nullSafe = true)
-              .map { case (lo, hi) => (k, Option(lo), Option(hi)) } })
-          .foreach(v => return v)
-        attempt += 1
-        require(attempt < maxRetries,
-          s"applyChanges on $root lost $maxRetries races")
+        // lands: MATERIALIZE the assignment (localCheckpoint — a
+        // best-effort cache could silently recompute different
+        // monotonically_increasing_id values into the capture job; a
+        // lost checkpoint block fails loudly instead)
+        val landed =
+          if (idFeed && !byId) landed1.localCheckpoint() else landed1
+        val entries = stageCommit(snap, meta, op, affected,
+            Some(survivors.unionByName(landed)), {
+            // on a tracked CDF table every image carries its _row_id
+            val tgt = readFiles(snap, affected.map(_.path),
+              withRowId = idFeed)
+            val tgtKeys = tgt.select(keyCols.map(col): _*)
+            val gone = aligned(meta, join(tgt, keys, "left_semi"))
+            val cap = if (idFeed) landed else landed0
+            def typed(df: DataFrame, t: String) =
+              df.withColumn("_change_type", lit(t))
+            val pre = retract.fold(gone)(_ => join(gone, upKeys, "left_semi"))
+            val deletes = retract.map(_ =>
+              typed(join(gone, upKeys, "left_anti"), "delete"))
+            (Seq(typed(pre, "update_preimage")) ++ deletes ++ Seq(
+              typed(join(cap, tgtKeys, "left_semi"), "update_postimage"),
+              typed(join(cap, tgtKeys, "left_anti"), "insert")))
+              .reduce(_ unionByName _)
+          }, txn.map(t => LogEntry(txn = Some(t))).toSeq)
+        commitRebasingOnKeys(snap, entries, keyCols, keys, nullSafe)
       }
-      sys.error("unreachable")
-    } finally { slice.unpersist(); () }
+    }
+  }
+
+  /** The keyed match scan shared by [[keyedReplace]] and the keyed
+    * [[MergeInto]]: the live files holding a row whose key is in `keys`,
+    * read through [[keyScanPaths]]. The duplicate-key gate on `upserts`
+    * rides the same collect — one action instead of two; the union's
+    * first column tags which subtree a row came from. */
+  private def hitFiles(snap: Snapshot, keyCols: Seq[String],
+      keys: DataFrame, nullSafe: Boolean, upserts: DataFrame,
+      verb: String): Vector[Add] = {
+    val cur = readFiles(snap, keyScanPaths(snap, keyCols, keys, nullSafe),
+      withFileCol = true, withRowId = keyCols.contains(RowIdCol))
+    val probed = keyJoin(cur, keys, keyCols, nullSafe, "left_semi")
+      .select(lit("f").as("__k"), col(FileCol).as("__v")).distinct()
+      .unionByName(dupProbe(upserts, keyCols))
+      .collect()
+    requireUniqueKeys(verb, keyCols, probed.exists(_.getString(0) == "dup"))
+    val hit = probed.iterator.filter(_.getString(0) == "f")
+      .map(r => relPath(r.getString(1))).toSet
+    snap.adds.filter(a => hit(a.path))
+  }
+
+  /** At most one row, tagged "dup", when `upserts` holds a key twice. */
+  private def dupProbe(upserts: DataFrame, keyCols: Seq[String]): DataFrame =
+    upserts.groupBy(keyCols.map(col): _*)
+      .count().where(col("count") > 1).limit(1)
+      .select(lit("dup").as("__k"), lit("").as("__v"))
+
+  /** The ambiguous-upsert refusal (Delta's): which upsert row replaces
+    * a key held twice is undefined. */
+  private def requireUniqueKeys(verb: String, keyCols: Seq[String],
+      dup: Boolean): Unit =
+    require(!dup, s"$verb: upsert rows have duplicate keys on " +
+      keyCols.mkString(","))
+
+  private def identityRefusal(verb: String): String =
+    s"$verb on $root: identity-column tables do not support keyed " +
+      "upserts (allocation for a replaced row is ambiguous) — use " +
+      "append/overwritePartition"
+
+  /** `f` over `df` cached for its duration: a verb's input frame feeds
+    * several jobs per attempt. */
+  private def cachedFor[T](df: DataFrame)(f: DataFrame => T): T = {
+    val c = df.cache()
+    try f(c) finally { c.unpersist(); () }
   }
 
   /** Replace one partition's contents with `df` (dynamic partition
@@ -1318,9 +1147,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     val (first, firstComplete) = metaSnapshot()
     gateWriter(first.meta)
     gateAppendOnly(first.meta, "overwritePartition")
-    first.meta.identities.keys.foreach(c => require(!df0.columns.contains(c),
-      s"identity column $c is GENERATED ALWAYS — writers must not " +
-        "supply it"))
+    refuseIdentityValues(df0, first.meta)
     val df = applyGenerated(applyDefaults(df0, first.meta), first.meta)
     def oneStamp(n: Int) =
       s"one load = one $partCol stamp; got $n distinct values"
@@ -1334,8 +1161,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       })
     def doomedIn(s: Snapshot) =
       s.adds.filter(_.partitionValues.get(partCol) == value)
-    var attempt = 0
-    while (true) {
+    retrying("overwritePartition") { attempt =>
       // above the driver threshold only the target value's files (plus
       // any layout-mismatched file — the refusal below must see them)
       // are collected; untouched partitions never reach the driver. A
@@ -1361,36 +1187,19 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       enforceConstraints(df, snap.meta)
       val merged = evolve(snap.meta, df.schema)
       // a whole-partition replacement is new data — fresh row ids and
-      // fresh identity values, from the attempt's watermarks. Under CDF
-      // the nondeterministic assignment is MATERIALIZED
-      // (localCheckpoint) so the staged files and the captured feed
-      // record identical values — unlike a best-effort cache, a lost
-      // block fails the job instead of recomputing different ids into
-      // the feed.
-      val tracks = snap.meta.tracksRows
-      val idFeed = tracks && snap.meta.cdf
-      val staged0 = applyIdentities(
-        if (tracks) assignRowIds(df, snap.meta.nextRowId) else df,
-        snap.meta)
-      val staged =
-        if (snap.meta.cdf && (tracks || snap.meta.identities.nonEmpty))
-          staged0.localCheckpoint()
-        else staged0
+      // fresh identity values, from the attempt's watermarks
+      val idFeed = snap.meta.tracksRows && snap.meta.cdf
+      val staged = freshRows(df, snap.meta)
       val (adds, cdfs) = stageRows(snap, merged, Some(staged), {
           // both capture sides under the MERGED schema: the doomed files
           // may predate an evolution this very load introduces. On a
           // tracked CDF table both sides carry _row_id — the retracted
           // rows' identities and the landed rows' fresh ones. (A
           // change-feed table knows the value by now: probed above.)
-          def aligned(d: DataFrame) =
-            d.select(merged.schema.fields.map(f =>
-              if (d.columns.contains(f.name)) col(f.name)
-              else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq ++
-              (if (idFeed) Seq(col(RowIdCol)) else Nil): _*)
-          aligned(readFiles(snap, doomedIn(snap).map(_.path),
+          aligned(merged, readFiles(snap, doomedIn(snap).map(_.path),
               withRowId = idFeed))
             .withColumn("_change_type", lit("delete"))
-            .unionAll(aligned(staged)
+            .unionAll(aligned(merged, staged)
               .withColumn("_change_type", lit("insert")))
         })
       val landed = adds.flatMap(_.partitionValues.get(partCol)).distinct
@@ -1419,12 +1228,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       if (value.isEmpty) value = landed.headOption
       val entries = commitEntries(snap, merged, "OVERWRITE_PARTITION",
         doomedIn(plan), adds, cdfs)
-      if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
-        return snap.version + 1
-      attempt += 1
-      require(attempt < maxRetries, s"overwrite in $root lost $maxRetries races")
+      tryClaim(snap.version, entries)
     }
-    sys.error("unreachable")
   }
 
   /** OPTIMIZE: bin-pack small files into fewer larger ones as ONE
@@ -1474,9 +1279,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       zorderBy: Option[(String, String)] = None,
       zPartitions: Int = 8, zBits: Int = 10,
       dvFraction: Double = graft.ScaleConfig.dvRewriteFraction,
-      minCubeRows: Long = graft.ScaleConfig.minCubeRows): Long = {
-    var attempt = 0
-    while (true) {
+      minCubeRows: Long = graft.ScaleConfig.minCubeRows): Long =
+    retrying("optimize") { _ =>
       // bin-packing plans only files that could possibly be doomed
       // (small, or vector-carrying) — a routine OPTIMIZE of a mostly
       // compact million-file table collects its stragglers, not its
@@ -1527,45 +1331,43 @@ final class TxTable(spark: SparkSession, rootStr: String) {
             val dvHeavy = snap.adds.filter(dvHeavyAdd)
             (small ++ dvHeavy).toVector.distinctBy(_.path)
         }
-      if (doomed.isEmpty) return snap.version // already compact
       // convergence: a lone undersized cube with nothing to merge INTO
       // it and no vectors to purge is as merged as the data allows —
       // rewriting it would change nothing and never terminate
-      if (incremental && doomed.forall(a => a.zcube.isDefined &&
-          !dvHeavyAdd(a)) && doomed.flatMap(_.zcube).distinct.size == 1)
-        return snap.version
-      // a pure rewrite must carry row identity through verbatim
-      val packed = zCols match {
-        case Some(cs) => graft.ext.ZOrderLayout.zOrderedN(
-          readFiles(snap, doomed.map(_.path),
-            withRowId = snap.meta.tracksRows), cs, zBits, zPartitions)
-        case None => readFiles(snap, doomed.map(_.path),
-          withRowId = snap.meta.tracksRows).hint("rebalance")
+      if (doomed.isEmpty || (incremental && doomed.forall(a =>
+          a.zcube.isDefined && !dvHeavyAdd(a)) &&
+          doomed.flatMap(_.zcube).distinct.size == 1))
+        Some(snap.version) // already compact
+      else {
+        // a pure rewrite must carry row identity through verbatim
+        val packed = zCols match {
+          case Some(cs) => graft.ext.ZOrderLayout.zOrderedN(
+            readFiles(snap, doomed.map(_.path),
+              withRowId = snap.meta.tracksRows), cs, zBits, zPartitions)
+          case None => readFiles(snap, doomed.map(_.path),
+            withRowId = snap.meta.tracksRows).hint("rebalance")
+        }
+        val adds0 = stageWrite(packed, snap.meta)
+        // a stored-cluster pass stamps its outputs so the NEXT pass
+        // leaves them alone; ad-hoc ZORDER BY columns may differ from the
+        // stored spec, so those outputs stay unstamped
+        val adds =
+          if (incremental) {
+            val cube = java.util.UUID.randomUUID.toString.take(8)
+            adds0.map(_.copy(zcube = Some(cube)))
+          } else adds0
+        // a pure rewrite changes no row: an EMPTY capture (marked in the
+        // Info line) tells readChanges to emit nothing for this commit
+        // instead of diffing the whole rewritten file set
+        val entries = doomed.map(a => LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
+          adds.map(a => LogEntry(add = Some(a))) :+
+          LogEntry(info = Some(Info("OPTIMIZE", snap.version,
+            cdfCaptured = if (snap.meta.cdf) Some(true) else None)))
+        // pure rewrite: ANY pure blind append rebases — the new files
+        // simply stay candidates for the next maintenance pass
+        commitRebasingWhere(snap, entries, _ => true)
       }
-      val adds0 = stageWrite(packed, snap.meta)
-      // a stored-cluster pass stamps its outputs so the NEXT pass
-      // leaves them alone; ad-hoc ZORDER BY columns may differ from the
-      // stored spec, so those outputs stay unstamped
-      val adds =
-        if (incremental) {
-          val cube = java.util.UUID.randomUUID.toString.take(8)
-          adds0.map(_.copy(zcube = Some(cube)))
-        } else adds0
-      // a pure rewrite changes no row: an EMPTY capture (marked in the
-      // Info line) tells readChanges to emit nothing for this commit
-      // instead of diffing the whole rewritten file set
-      val entries = doomed.map(a => LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
-        adds.map(a => LogEntry(add = Some(a))) :+
-        LogEntry(info = Some(Info("OPTIMIZE", snap.version,
-          cdfCaptured = if (snap.meta.cdf) Some(true) else None)))
-      // pure rewrite: ANY pure blind append rebases — the new files
-      // simply stay candidates for the next maintenance pass
-      commitRebasingWhere(snap, entries, _ => true).foreach(v => return v)
-      attempt += 1
-      require(attempt < maxRetries, s"optimize of $root lost $maxRetries races")
     }
-    sys.error("unreachable")
-  }
 
   /** REORG ... APPLY (PURGE) (Delta's REORG TABLE): materialize
     * deletion vectors — rewrite EXACTLY the DV-carrying files to their
@@ -1580,29 +1382,25 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * so a lost race against ANY blind append rebases, and the change
     * feed records nothing.
     */
-  def reorgPurge(): Long = {
-    var attempt = 0
-    while (true) {
+  def reorgPurge(): Long =
+    retrying("reorgPurge") { _ =>
       val snap = TxLog.prunedSnapshot(fs, root, None, _ =>
         col("dvFile").isNotNull || col("dv").isNotNull)
       gateWriter(snap.meta)
       val doomed = snap.adds.filter(_.hasDv)
-      if (doomed.isEmpty) return snap.version // nothing shadowed
-      val survivors = readFiles(snap, doomed.map(_.path),
-        withRowId = snap.meta.tracksRows)
-      val adds = stageWrite(survivors, snap.meta)
-      val entries =
-        doomed.map(a => LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
-        adds.map(a => LogEntry(add = Some(a))) :+
-        LogEntry(info = Some(Info("REORG_PURGE", snap.version,
-          cdfCaptured = if (snap.meta.cdf) Some(true) else None)))
-      commitRebasingWhere(snap, entries, _ => true).foreach(v => return v)
-      attempt += 1
-      require(attempt < maxRetries,
-        s"reorgPurge of $root lost $maxRetries races")
+      if (doomed.isEmpty) Some(snap.version) // nothing shadowed
+      else {
+        val survivors = readFiles(snap, doomed.map(_.path),
+          withRowId = snap.meta.tracksRows)
+        val adds = stageWrite(survivors, snap.meta)
+        val entries =
+          doomed.map(a => LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
+          adds.map(a => LogEntry(add = Some(a))) :+
+          LogEntry(info = Some(Info("REORG_PURGE", snap.version,
+            cdfCaptured = if (snap.meta.cdf) Some(true) else None)))
+        commitRebasingWhere(snap, entries, _ => true)
+      }
     }
-    sys.error("unreachable")
-  }
 
   /** Validate table state against the commit's stored checksum
     * ([[TxLog.Crc]], Delta's `.crc` VersionChecksum). Resolves the full
@@ -1764,9 +1562,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * reason (a file live in the CURRENT version cannot have been
     * vacuumed).
     */
-  def restore(toVersion: Long): Long = {
-    var attempt = 0
-    while (true) {
+  def restore(toVersion: Long): Long =
+    retrying("restore") { _ =>
       val resolved
           : Option[(Long, TxLog.Meta, TxLog.Meta, Seq[TxLog.Remove], Vector[Add])] =
         TxLog.liveAddsFrame(fs, root, None).flatMap {
@@ -1819,13 +1616,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         removed.map(r => LogEntry(remove = Some(r))) ++
         addedBack.map(a => LogEntry(add = Some(a))) :+
         LogEntry(info = Some(Info("RESTORE", curVersion)))
-      if (TxLog.tryCommit(fs, root, curVersion + 1, entries))
-        return curVersion + 1
-      attempt += 1
-      require(attempt < maxRetries, s"restore of $root lost $maxRetries races")
+      tryClaim(curVersion, entries)
     }
-    sys.error("unreachable")
-  }
 
   /** ADD CONSTRAINT: a SQL CHECK expression every future write must
     * satisfy (NULL passes, SQL's CHECK rule). Existing rows are
@@ -1834,27 +1626,16 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * every writer (including one that opened the table later) enforces
     * it from its snapshot.
     */
-  def addConstraint(checkExpr: String): Long = {
-    var attempt = 0
-    while (true) {
-      val snap = TxLog.snapshot(fs, root)
-      gateWriter(snap.meta)
+  def addConstraint(checkExpr: String): Long =
+    alterMeta("ADD_CONSTRAINT", withFiles = true) { snap =>
       val bad = readSnapshot(snap)
         .where(!coalesce(expr(checkExpr), lit(true))).limit(1).count()
       require(bad == 0,
         s"existing rows violate CHECK ($checkExpr) — constraint refused")
-      val meta = snap.meta.copy(
+      Some(snap.meta.copy(
         constraints = Some(snap.meta.checkExprs :+ checkExpr))
-        .withWriterFeature("checkConstraints")
-      val entries = Seq(LogEntry(meta = Some(meta)),
-        LogEntry(info = Some(Info("ADD_CONSTRAINT", snap.version))))
-      if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
-        return snap.version + 1
-      attempt += 1
-      require(attempt < maxRetries, s"addConstraint on $root lost $maxRetries races")
+        .withWriterFeature("checkConstraints"))
     }
-    sys.error("unreachable")
-  }
 
   /** ALTER ... ADD COLUMN (Delta's additive evolution as an explicit
     * DDL commit): METADATA-ONLY — the new nullable column lands in the
@@ -1863,23 +1644,12 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * files null-fill on read. Zero data IO at any table size. */
   def addColumn(colName: String, typeDdl: String): Long = {
     val dt = DataType.fromDDL(typeDdl)
-    var attempt = 0
-    while (true) {
-      val snap = metaSnapshot()._1
-      gateWriter(snap.meta)
+    alterMeta("ADD_COLUMN") { snap =>
       require(!snap.meta.schema.fieldNames.contains(colName),
         s"column $colName already exists on $root")
-      val meta = evolve(snap.meta, StructType(snap.meta.schema.fields :+
-        StructField(colName, dt, nullable = true)))
-      val entries = Seq(LogEntry(meta = Some(meta)),
-        LogEntry(info = Some(Info("ADD_COLUMN", snap.version))))
-      if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
-        return snap.version + 1
-      attempt += 1
-      require(attempt < maxRetries,
-        s"addColumn on $root lost $maxRetries races")
+      Some(evolve(snap.meta, StructType(snap.meta.schema.fields :+
+        StructField(colName, dt, nullable = true))))
     }
-    sys.error("unreachable")
   }
 
   /** ALTER ... ALTER COLUMN ... TYPE (Delta's typeWidening feature as
@@ -1893,53 +1663,29 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * message; same-type is idempotent. */
   def widenColumnType(colName: String, typeDdl: String): Long = {
     val to = DataType.fromDDL(typeDdl)
-    var attempt = 0
-    while (true) {
-      val snap = metaSnapshot()._1
-      gateWriter(snap.meta)
+    alterMeta("WIDEN_COLUMN") { snap =>
       val cur = snap.meta.schema
       require(cur.fieldNames.contains(colName),
         s"no column $colName in $root")
-      if (cur(colName).dataType == to) return snap.version
-      val incoming = StructType(cur.fields.map(f =>
-        if (f.name == colName) f.copy(dataType = to) else f))
-      val meta = evolve(snap.meta, incoming)
-      val entries = Seq(LogEntry(meta = Some(meta)),
-        LogEntry(info = Some(Info("WIDEN_COLUMN", snap.version))))
-      if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
-        return snap.version + 1
-      attempt += 1
-      require(attempt < maxRetries,
-        s"widenColumnType on $root lost $maxRetries races")
+      Option.when(cur(colName).dataType != to)(evolve(snap.meta,
+        StructType(cur.fields.map(f =>
+          if (f.name == colName) f.copy(dataType = to) else f))))
     }
-    sys.error("unreachable")
   }
 
   /** ALTER ... ALTER COLUMN ... COMMENT — metadata-only; the comment
     * rides the schema field's metadata (where DESCRIBE reads it),
     * preserving every other metadata key (column-mapping physical
     * names, identity/generated specs). */
-  def setColumnComment(colName: String, comment: String): Long = {
-    var attempt = 0
-    while (true) {
-      val snap = metaSnapshot()._1
-      gateWriter(snap.meta)
+  def setColumnComment(colName: String, comment: String): Long =
+    alterMeta("COMMENT_COLUMN") { snap =>
       val cur = snap.meta.schema
       require(cur.fieldNames.contains(colName),
         s"no column $colName in $root")
       val updated = StructType(cur.fields.map(f =>
         if (f.name == colName) f.withComment(comment) else f))
-      val meta = snap.meta.copy(schemaJson = updated.json)
-      val entries = Seq(LogEntry(meta = Some(meta)),
-        LogEntry(info = Some(Info("COMMENT_COLUMN", snap.version))))
-      if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
-        return snap.version + 1
-      attempt += 1
-      require(attempt < maxRetries,
-        s"setColumnComment on $root lost $maxRetries races")
+      Some(snap.meta.copy(schemaJson = updated.json))
     }
-    sys.error("unreachable")
-  }
 
   /** NOT NULL constraint (Delta's column invariant): every future
     * write must carry the column, non-null in every row — the one
@@ -1948,52 +1694,27 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * `notNullConstraints` WRITER feature stamps so a version-skewed
     * writer that doesn't know to refuse nulls refuses the table
     * instead. Idempotent. */
-  def addNotNull(colName: String): Long = {
-    var attempt = 0
-    while (true) {
-      val snap = TxLog.snapshot(fs, root)
-      gateWriter(snap.meta)
+  def addNotNull(colName: String): Long =
+    alterMeta("ADD_NOT_NULL", withFiles = true) { snap =>
       require(snap.meta.schema.fieldNames.contains(colName),
         s"no column $colName in $root")
-      if (snap.meta.requiredCols.contains(colName)) return snap.version
-      val bad = readSnapshot(snap).where(col(colName).isNull)
-        .limit(1).count()
-      require(bad == 0,
-        s"existing rows hold NULL in $colName — NOT NULL refused")
-      val meta = snap.meta.copy(
-        notNullCols = Some(snap.meta.requiredCols :+ colName))
-        .withWriterFeature("notNullConstraints")
-      val entries = Seq(LogEntry(meta = Some(meta)),
-        LogEntry(info = Some(Info("ADD_NOT_NULL", snap.version))))
-      if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
-        return snap.version + 1
-      attempt += 1
-      require(attempt < maxRetries,
-        s"addNotNull on $root lost $maxRetries races")
+      Option.when(!snap.meta.requiredCols.contains(colName)) {
+        val bad = readSnapshot(snap).where(col(colName).isNull)
+          .limit(1).count()
+        require(bad == 0,
+          s"existing rows hold NULL in $colName — NOT NULL refused")
+        snap.meta.copy(notNullCols = Some(snap.meta.requiredCols :+ colName))
+          .withWriterFeature("notNullConstraints")
+      }
     }
-    sys.error("unreachable")
-  }
 
   /** Lift a NOT NULL constraint — metadata-only, idempotent. */
-  def dropNotNull(colName: String): Long = {
-    var attempt = 0
-    while (true) {
-      val snap = TxLog.snapshot(fs, root)
-      gateWriter(snap.meta)
-      if (!snap.meta.requiredCols.contains(colName)) return snap.version
+  def dropNotNull(colName: String): Long =
+    alterMeta("DROP_NOT_NULL", withFiles = true) { snap =>
       val left = snap.meta.requiredCols.filterNot(_ == colName)
-      val meta = snap.meta.copy(
-        notNullCols = if (left.isEmpty) None else Some(left))
-      val entries = Seq(LogEntry(meta = Some(meta)),
-        LogEntry(info = Some(Info("DROP_NOT_NULL", snap.version))))
-      if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
-        return snap.version + 1
-      attempt += 1
-      require(attempt < maxRetries,
-        s"dropNotNull on $root lost $maxRetries races")
+      Option.when(snap.meta.requiredCols.contains(colName))(snap.meta.copy(
+        notNullCols = if (left.isEmpty) None else Some(left)))
     }
-    sys.error("unreachable")
-  }
 
   /** TABLE PROPERTIES (Delta's `ALTER TABLE ... SET TBLPROPERTIES` /
     * `Metadata.configuration`): a METADATA-ONLY commit merging `props`
@@ -2016,10 +1737,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       .exists(_.trim.toBoolean)
     val wantsCdf = props.get(TxLog.propEnableCdf)
       .exists(_.trim.toBoolean)
-    var attempt = 0
-    while (true) {
-      val snap = metaSnapshot()._1
-      gateWriter(snap.meta)
+    alterMeta("SET_TBLPROPERTIES") { snap =>
       val merged = snap.meta.config ++ props
       val base0 = snap.meta.copy(configuration =
         if (merged.isEmpty) None else Some(merged))
@@ -2030,16 +1748,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         else base0
       val meta =
         if (wantsAppendOnly) base.withWriterFeature("appendOnly") else base
-      if (meta == snap.meta) return snap.version // idempotent no-op
-      val entries = Seq(LogEntry(meta = Some(meta)),
-        LogEntry(info = Some(Info("SET_TBLPROPERTIES", snap.version))))
-      if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
-        return snap.version + 1
-      attempt += 1
-      require(attempt < maxRetries,
-        s"setTblProperties on $root lost $maxRetries races")
+      Option.when(meta != snap.meta)(meta) // idempotent no-op
     }
-    sys.error("unreachable")
   }
 
   /** Remove table properties — metadata-only, idempotent. Absent keys
@@ -2052,23 +1762,11 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * for). */
   def unsetTblProperties(keys: Seq[String]): Long = {
     require(keys.nonEmpty, "UNSET TBLPROPERTIES needs at least one key")
-    var attempt = 0
-    while (true) {
-      val snap = metaSnapshot()._1
-      gateWriter(snap.meta)
+    alterMeta("UNSET_TBLPROPERTIES") { snap =>
       val left = snap.meta.config -- keys
-      if (left == snap.meta.config) return snap.version
-      val meta = snap.meta.copy(configuration =
-        if (left.isEmpty) None else Some(left))
-      val entries = Seq(LogEntry(meta = Some(meta)),
-        LogEntry(info = Some(Info("UNSET_TBLPROPERTIES", snap.version))))
-      if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
-        return snap.version + 1
-      attempt += 1
-      require(attempt < maxRetries,
-        s"unsetTblProperties on $root lost $maxRetries races")
+      Option.when(left != snap.meta.config)(snap.meta.copy(configuration =
+        if (left.isEmpty) None else Some(left)))
     }
-    sys.error("unreachable")
   }
 
   /** RENAME COLUMN — a METADATA-ONLY commit (Delta's column-mapping
@@ -2082,11 +1780,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * CHECK constraint references (the stored expression text would
     * silently stop binding).
     */
-  def renameColumn(oldName: String, newName: String): Long = {
-    var attempt = 0
-    while (true) {
-      val snap = metaSnapshot()._1 // metadata-only commit
-      gateWriter(snap.meta)
+  def renameColumn(oldName: String, newName: String): Long =
+    alterMeta("RENAME_COLUMN") { snap =>
       val schema = snap.meta.schema
       require(schema.fieldNames.contains(oldName),
         s"RENAME: no column $oldName in $root")
@@ -2108,23 +1803,14 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         if (f.name == oldName) f.copy(name = newName) else f))
       val mapping = snap.meta.columnMapping.getOrElse(Map.empty) -
         oldName + (newName -> snap.meta.physicalOf(oldName))
-      val meta = snap.meta.copy(schemaJson = renamed.json,
+      Some(snap.meta.copy(schemaJson = renamed.json,
         columnMapping = Some(mapping),
         // a NOT NULL constraint follows its column through the rename
         notNullCols = snap.meta.notNullCols.map(_.map(c =>
           if (c == oldName) newName else c)))
         .withReaderFeature("columnMapping")
-        .withWriterFeature("columnMapping")
-      val entries = Seq(LogEntry(meta = Some(meta)),
-        LogEntry(info = Some(Info("RENAME_COLUMN", snap.version))))
-      if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
-        return snap.version + 1
-      attempt += 1
-      require(attempt < maxRetries,
-        s"renameColumn on $root lost $maxRetries races")
+        .withWriterFeature("columnMapping"))
     }
-    sys.error("unreachable")
-  }
 
   /** DROP COLUMN — a METADATA-ONLY commit, the column-mapping twin of
     * [[renameColumn]]: the field leaves the logical schema, the
@@ -2138,11 +1824,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * columns, constraint-referenced columns (same grounds as rename),
     * and the last remaining column.
     */
-  def dropColumn(name: String): Long = {
-    var attempt = 0
-    while (true) {
-      val snap = metaSnapshot()._1 // metadata-only commit
-      gateWriter(snap.meta)
+  def dropColumn(name: String): Long =
+    alterMeta("DROP_COLUMN") { snap =>
       val schema = snap.meta.schema
       require(schema.fieldNames.contains(name),
         s"DROP: no column $name in $root")
@@ -2161,7 +1844,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         s"DROP: $name is an identity/DEFAULT column — drop would " +
           "orphan its declaration")
       val dropped = StructType(schema.fields.filterNot(_.name == name))
-      val meta = snap.meta.copy(
+      Some(snap.meta.copy(
         notNullCols = snap.meta.notNullCols
           .map(_.filterNot(_ == name)).filter(_.nonEmpty),
         schemaJson = dropped.json,
@@ -2169,17 +1852,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         retiredPhysical =
           Some((snap.meta.retired :+ snap.meta.physicalOf(name)).distinct))
         .withReaderFeature("columnMapping")
-        .withWriterFeature("columnMapping")
-      val entries = Seq(LogEntry(meta = Some(meta)),
-        LogEntry(info = Some(Info("DROP_COLUMN", snap.version))))
-      if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
-        return snap.version + 1
-      attempt += 1
-      require(attempt < maxRetries,
-        s"dropColumn on $root lost $maxRetries races")
+        .withWriterFeature("columnMapping"))
     }
-    sys.error("unreachable")
-  }
 
   /** PARTITION EVOLUTION (Iceberg's flagship metadata operation — Delta
     * has no equivalent): change the table's partition spec as a
@@ -2200,11 +1874,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * and [[readLatestPartition]]/[[partitionValueMax]] see only files
     * whose layout carries the column.
     */
-  def repartitionBy(newPartitionCols: Seq[String]): Long = {
-    var attempt = 0
-    while (true) {
-      val snap = metaSnapshot()._1 // metadata-only commit
-      gateWriter(snap.meta)
+  def repartitionBy(newPartitionCols: Seq[String]): Long =
+    alterMeta("REPARTITION") { snap =>
       newPartitionCols.foreach { c =>
         require(snap.meta.schema.fieldNames.contains(c),
           s"REPARTITION: no column $c in $root")
@@ -2212,19 +1883,10 @@ final class TxTable(spark: SparkSession, rootStr: String) {
           s"REPARTITION: $c is renamed (logical != physical) — directory " +
             "values would carry a colliding spelling")
       }
-      if (snap.meta.partitionCols == newPartitionCols.toList)
-        return snap.version // already this spec: no commit
-      val meta = snap.meta.copy(partitionCols = newPartitionCols.toList)
-      val entries = Seq(LogEntry(meta = Some(meta)),
-        LogEntry(info = Some(Info("REPARTITION", snap.version))))
-      if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
-        return snap.version + 1
-      attempt += 1
-      require(attempt < maxRetries,
-        s"repartitionBy on $root lost $maxRetries races")
+      // already this spec: no commit
+      Option.when(snap.meta.partitionCols != newPartitionCols.toList)(
+        snap.meta.copy(partitionCols = newPartitionCols.toList))
     }
-    sys.error("unreachable")
-  }
 
   /** Migrate every file NOT in the current partition spec to it — one
     * atomic commit rewriting only the stale-layout files (a no-op on a
@@ -2233,9 +1895,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * table. Under CDF the commit marks a pure rewrite (no logical
     * change, empty feed).
     */
-  def repartitionRewrite(): Long = {
-    var attempt = 0
-    while (true) {
+  def repartitionRewrite(): Long =
+    retrying("repartitionRewrite") { _ =>
       // only stale-layout files are candidates — collected exactly
       val snap = TxLog.prunedSnapshot(fs, root, None, m =>
         sort_array(map_keys(col("partitionValues"))) =!=
@@ -2243,25 +1904,21 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       gateWriter(snap.meta)
       val target = snap.meta.partitionCols.toSet
       val stale = snap.adds.filter(_.partitionValues.keySet != target)
-      if (stale.isEmpty) return snap.version
-      val adds = stageWrite(readFiles(snap, stale.map(_.path),
-        withRowId = snap.meta.tracksRows), snap.meta)
-      val entries = stale.map(a => LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
-        adds.map(a => LogEntry(add = Some(a))) :+
-        LogEntry(info = Some(Info("REPARTITION_REWRITE", snap.version,
-          cdfCaptured = if (snap.meta.cdf) Some(true) else None)))
-      // pure rewrite — but homogeneity is this op's POST-CONDITION, so
-      // only a winner already in the current layout may rebase; an
-      // old-layout straggler forces the recompute that sweeps it up
-      commitRebasingWhere(snap, entries,
-        _.partitionValues.keySet == snap.meta.partitionCols.toSet)
-        .foreach(v => return v)
-      attempt += 1
-      require(attempt < maxRetries,
-        s"repartitionRewrite on $root lost $maxRetries races")
+      if (stale.isEmpty) Some(snap.version)
+      else {
+        val adds = stageWrite(readFiles(snap, stale.map(_.path),
+          withRowId = snap.meta.tracksRows), snap.meta)
+        val entries = stale.map(a => LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
+          adds.map(a => LogEntry(add = Some(a))) :+
+          LogEntry(info = Some(Info("REPARTITION_REWRITE", snap.version,
+            cdfCaptured = if (snap.meta.cdf) Some(true) else None)))
+        // pure rewrite — but homogeneity is this op's POST-CONDITION, so
+        // only a winner already in the current layout may rebase; an
+        // old-layout straggler forces the recompute that sweeps it up
+        commitRebasingWhere(snap, entries,
+          _.partitionValues.keySet == snap.meta.partitionCols.toSet)
+      }
     }
-    sys.error("unreachable")
-  }
 
   /** CREATE BLOOMFILTER INDEX (Delta's bloom filter index): from this
     * commit on, every data file carries a `_bloom/<uuid>.bin` sidecar —
@@ -2286,8 +1943,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     */
   def addBloomIndex(colName: String, fpp: Double = 0.01): Long = {
     require(fpp > 0 && fpp < 1, s"fpp must be in (0,1), got $fpp")
-    var attempt = 0
-    while (true) {
+    retrying("addBloomIndex") { _ =>
       val (mSnap, complete) = metaSnapshot()
       gateWriter(mSnap.meta)
       require(mSnap.meta.schema.fieldNames.contains(colName),
@@ -2307,44 +1963,42 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         if (sameSpec) snap.adds.filter(a => !a.bloom.exists(_.contains(phys)))
         else snap.adds
       if (sameSpec && candidates.isEmpty)
-        return snap.version // fully indexed already — no commit
-      val pcols = snap.meta.partitionCols
-      val dataSchema = StructType(
-        snap.meta.schema.fields.filterNot(f => pcols.contains(f.name))
-          .map(f => f.copy(name = snap.meta.physicalOf(f.name))))
-      val maxRows = candidates.map(_.rows).maxOption.getOrElse(0L)
-      val blooms = perFileBlooms(
-        candidates.map(a => new Path(root, a.path).toString),
-        Some(dataSchema), phys, maxRows, fpp)
-      val updated = candidates.flatMap { a =>
-        blooms.get(a.path).map { bytes =>
-          a.copy(bloom = Some(a.bloom.getOrElse(Map.empty) +
-            (phys -> writeBloomSidecar(bytes))))
+        Some(snap.version) // fully indexed already — no commit
+      else {
+        val pcols = snap.meta.partitionCols
+        val dataSchema = StructType(
+          snap.meta.schema.fields.filterNot(f => pcols.contains(f.name))
+            .map(f => f.copy(name = snap.meta.physicalOf(f.name))))
+        val maxRows = candidates.map(_.rows).maxOption.getOrElse(0L)
+        val blooms = perFileBlooms(
+          candidates.map(a => new Path(root, a.path).toString),
+          Some(dataSchema), phys, maxRows, fpp)
+        val updated = candidates.flatMap { a =>
+          blooms.get(a.path).map { bytes =>
+            a.copy(bloom = Some(a.bloom.getOrElse(Map.empty) +
+              (phys -> writeBloomSidecar(bytes))))
+          }
         }
+        val meta = snap.meta.copy(
+          bloomIndex = Some(snap.meta.bloomCols + (colName -> fpp)))
+        // remove-then-re-add per path (replay ends on the new payload);
+        // under CDF the marker says "pure rewrite, no logical change" so
+        // feed readers skip this commit instead of diffing it. The meta
+        // entry rides only when the recorded spec actually changes — an
+        // incremental repair is then meta-free and can rebase
+        val metaEntry =
+          if (meta != snap.meta) Seq(LogEntry(meta = Some(meta))) else Nil
+        val entries = metaEntry ++
+          (updated.map(a => LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
+            updated.map(a => LogEntry(add = Some(a)))) :+
+          LogEntry(info = Some(Info("ADD_BLOOM_INDEX", snap.version,
+            cdfCaptured = if (snap.meta.cdf) Some(true) else None)))
+        // pure rewrite: a winner blind append rebases — on an indexed
+        // table its files carry sidecars from stageWrite already, and any
+        // that do not are the NEXT incremental run's candidates
+        commitRebasingWhere(snap, entries, _ => true)
       }
-      val meta = snap.meta.copy(
-        bloomIndex = Some(snap.meta.bloomCols + (colName -> fpp)))
-      // remove-then-re-add per path (replay ends on the new payload);
-      // under CDF the marker says "pure rewrite, no logical change" so
-      // feed readers skip this commit instead of diffing it. The meta
-      // entry rides only when the recorded spec actually changes — an
-      // incremental repair is then meta-free and can rebase
-      val metaEntry =
-        if (meta != snap.meta) Seq(LogEntry(meta = Some(meta))) else Nil
-      val entries = metaEntry ++
-        (updated.map(a => LogEntry(remove = Some(Remove(a.path, Some(a.rows), a.bytes)))) ++
-          updated.map(a => LogEntry(add = Some(a)))) :+
-        LogEntry(info = Some(Info("ADD_BLOOM_INDEX", snap.version,
-          cdfCaptured = if (snap.meta.cdf) Some(true) else None)))
-      // pure rewrite: a winner blind append rebases — on an indexed
-      // table its files carry sidecars from stageWrite already, and any
-      // that do not are the NEXT incremental run's candidates
-      commitRebasingWhere(snap, entries, _ => true).foreach(v => return v)
-      attempt += 1
-      require(attempt < maxRetries,
-        s"addBloomIndex on $root lost $maxRetries races")
     }
-    sys.error("unreachable")
   }
 
   /** Turn on commit-time change capture from the NEXT commit on (the
@@ -2352,37 +2006,16 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * before this one keep resolving their feed via the file-diff
     * fallback — [[readChanges]] handles mixed histories per commit.
     */
-  def enableChangeDataFeed(): Long = {
-    var attempt = 0
-    while (true) {
-      val snap = metaSnapshot()._1 // metadata-only commit
-      gateWriter(snap.meta)
-      if (snap.meta.cdf) return snap.version // already on, no commit
-      val entries = Seq(
-        LogEntry(meta = Some(snap.meta.copy(cdfEnabled = Some(true))
-          .withWriterFeature("changeDataFeed"))),
-        LogEntry(info = Some(Info("ENABLE_CDF", snap.version))))
-      if (TxLog.tryCommit(fs, root, snap.version + 1, entries))
-        return snap.version + 1
-      attempt += 1
-      require(attempt < maxRetries,
-        s"enableChangeDataFeed on $root lost $maxRetries races")
+  def enableChangeDataFeed(): Long =
+    alterMeta("ENABLE_CDF") { snap => // already on: no commit
+      Option.when(!snap.meta.cdf)(snap.meta.copy(cdfEnabled = Some(true))
+        .withWriterFeature("changeDataFeed"))
     }
-    sys.error("unreachable")
-  }
 
-  /** Write-side protocol gate ([[TxLog.supportedWriterFeatures]], the
-    * twin of [[TxLog.snapshot]]'s reader gate): refuse to mutate a
-    * table whose stamped writer features this client does not
-    * implement — an old writer would silently break the invariant the
-    * feature protects (unenforced CHECK constraints, diverging
-    * generated columns, dropped deletion vectors, logically-named
-    * files, an incomplete change feed). Reading never consults it.
-    */
   /** Candidate live paths for a KEYED mutation's match scan: the files
     * whose stats cannot exclude the key frame's [min, max] on the
     * LEADING key column — a file outside the range cannot hold any
-    * matching key, so merge/applyChanges read only the overlap instead
+    * matching key, so [[hitFiles]] reads only the overlap instead
     * of scanning the whole table to find affected files (at 100 TB the
     * difference between a bounded upsert and a full-table scan per
     * merge; on a clustered/z-ordered table the overlap is tiny).
@@ -2409,8 +2042,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
 
   /** Can the leading key column's stats order a range prune? `_row_id`
     * is not in the logical schema but carries long stats like any data
-    * column, so id-keyed mutations (applyChangesById's replica loop)
-    * prune too. */
+    * column, so id-keyed mutations ([[applyChangesById]]) prune too. */
   private def keyPrunable(meta: Meta, k: String): Boolean =
     (if (k == RowIdCol) Some(LongType: DataType)
      else meta.schema.find(_.name == k).map(_.dataType))
@@ -2454,8 +2086,9 @@ final class TxTable(spark: SparkSession, rootStr: String) {
   /** Planning snapshot for a KEYED mutation — the distributed twin of
     * [[keyScanPaths]]: above the driver threshold the key frame's
     * [min, max] agg runs first and the checkpoint is filtered
-    * DISTRIBUTED on the leading key's stats, so merge/applyChanges on a
-    * million-file table collect only the candidate Adds; below it the
+    * DISTRIBUTED on the leading key's stats, so a keyed mutation
+    * ([[keyedReplace]], the keyed [[MergeInto]]) on a million-file table
+    * collects only the candidate Adds; below it the
     * full fold serves and [[keyScanPaths]] prunes driver-side exactly
     * as before (same conservatism, same null-safety fallbacks). */
   private def keyedMutationSnapshot(keyCols: Seq[String], keys: DataFrame,
@@ -2634,10 +2267,40 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     }
   }
 
-  /** Open-range generalization of [[candidateFiles]]'s keep decision:
-    * can file `a` hold a row with `colName` in [lo, hi] (either side
-    * optionally unbounded)? Missing stats fall to the partition value;
-    * missing both, or ANY parse/type mismatch, keeps the file. */
+  /** The one optimistic-commit loop: `attempt(i)` (i = 0, 1, ...) plans
+    * and tries one commit and yields the committed version — or the
+    * current one when there is nothing to commit — and None when it
+    * lost the version race, which runs the next attempt. */
+  private def retrying(op: String)(attempt: Int => Option[Long]): Long = {
+    val v = Iterator.range(0, maxRetries).flatMap(attempt(_)).nextOption()
+    require(v.isDefined, s"$op on $root lost $maxRetries races")
+    v.get
+  }
+
+  /** Claims version `base + 1` with `entries`; None when another writer
+    * already holds it. */
+  private def tryClaim(base: Long, entries: Seq[LogEntry]): Option[Long] =
+    Some(base + 1).filter(TxLog.tryCommit(fs, root, _, entries))
+
+  /** A metadata-only DDL commit (no data file touched): `change` yields
+    * the new meta, or None when the table already has it (no commit;
+    * the current version returns). `withFiles` resolves the full
+    * snapshot, for a change that must validate the existing rows. */
+  private def alterMeta(op: String, withFiles: Boolean = false)(
+      change: Snapshot => Option[Meta]): Long =
+    retrying(op) { _ =>
+      val snap = if (withFiles) TxLog.snapshot(fs, root) else metaSnapshot()._1
+      gateWriter(snap.meta)
+      change(snap).fold(Option(snap.version))(meta =>
+        tryClaim(snap.version, Seq(LogEntry(meta = Some(meta)),
+          LogEntry(info = Some(Info(op, snap.version))))))
+    }
+
+  /** Has the log already absorbed this writer transaction (appId,
+    * version)? Then the write is an idempotent no-op. */
+  private def absorbed(snap: Snapshot, txn: Option[Txn]): Boolean =
+    txn.exists(t => snap.txns.get(t.appId).exists(_ >= t.version))
+
   /** Conflict-checked retry for a staged PREDICATE mutation (the
     * WriteSerializable slice of Delta's ConflictChecker): when the
     * staged commit loses the version race, examine the WINNER instead
@@ -2662,11 +2325,9 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       cond: Column): Option[Long] =
     commitRebasingOn(snap, entries, condConstraints(snap.meta, cond))
 
-  /** [[commitRebasing]] on explicit range constraints — the KEYED
-    * mutations' entry (merge/applyChanges prove disjointness against
-    * their source-key ranges, not a WHERE clause). `mkConstraints` is
-    * by-name: the range aggregation runs only if a race is actually
-    * lost. */
+  /** [[commitRebasing]] on explicit range constraints (the keyed
+    * mutations' [[commitRebasingOnKeys]]). `mkConstraints` is by-name:
+    * it is computed only if a race is actually lost. */
   private[lake] def commitRebasingOn(snap: Snapshot, entries: Seq[LogEntry],
       mkConstraints: => Seq[(String, Option[Any], Option[Any])])
       : Option[Long] = {
@@ -2675,6 +2336,19 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       cs.nonEmpty &&
         cs.exists { case (n, lo, hi) => !keepByStats(snap, a, n, lo, hi) })
   }
+
+  /** The keyed mutations' rebase: a winner blind append whose files
+    * cannot hold any key of `keys` (by the key frame's range on each
+    * prunable key column) cannot change what the commit replaces. Under
+    * null-safe matching a null key yields no constraint, so any winner
+    * falls back to the recompute. */
+  private def commitRebasingOnKeys(snap: Snapshot, entries: Seq[LogEntry],
+      keyCols: Seq[String], keys: DataFrame, nullSafe: Boolean)
+      : Option[Long] =
+    commitRebasingOn(snap, entries,
+      keyCols.filter(keyPrunable(snap.meta, _)).flatMap { k =>
+        keyRange(keys, k, nullSafe)
+          .map { case (lo, hi) => (k, Option(lo), Option(hi)) } })
 
   /** The rebase core: `safeAdd` decides whether one winner-added file
     * provably cannot affect the staged work. Predicate/keyed mutations
@@ -2689,8 +2363,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     // watermarks, protocol stamps) must re-gate against the head — no
     // rebase
     if (entries.exists(_.meta.isDefined))
-      return Some(snap.version + 1)
-        .filter(TxLog.tryCommit(fs, root, _, entries))
+      return tryClaim(snap.version, entries)
     val ourApps = entries.flatMap(_.txn).map(_.appId).toSet
     var v = snap.version + 1
     var rebases = 0
@@ -2715,6 +2388,10 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     None
   }
 
+  /** Open-range generalization of [[candidateFiles]]'s keep decision:
+    * can file `a` hold a row with `colName` in [lo, hi] (either side
+    * optionally unbounded)? Missing stats fall to the partition value;
+    * missing both, or ANY parse/type mismatch, keeps the file. */
   private def keepByStats(snap: Snapshot, a: Add, colName: String,
       lo: Option[Any], hi: Option[Any]): Boolean =
     a.stats.get(snap.meta.physicalOf(colName)) match {
@@ -2745,20 +2422,40 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       }
     }
 
-  /** Null-safe keyed join (`<=>` per key, SQL's IS NOT DISTINCT FROM):
-    * a NULL key value matches a NULL key value. The right side's key
-    * columns are renamed before joining, so semi/anti/left outputs
-    * never carry ambiguous names; a left join's borrowed key copies are
-    * dropped on the way out. */
-  private def nullSafeKeyJoin(left: DataFrame, right: DataFrame,
-      keys: Seq[String], how: String): DataFrame = {
-    val r = right.select(right.columns.map(c =>
-      if (keys.contains(c)) col(c).as(s"__ns_$c") else col(c))
-      .toIndexedSeq: _*)
-    left.join(r, keys.map(k => col(k) <=> col(s"__ns_$k")).reduce(_ && _), how)
-      .drop(keys.map(k => s"__ns_$k"): _*)
-  }
+  /** Keyed join on `keys`: plain equality (a NULL key never matches),
+    * or with `nullSafe` `<=>` per key (SQL's IS NOT DISTINCT FROM: a
+    * NULL key value matches a NULL key value). For the null-safe form
+    * the right side's key columns are renamed before joining, so
+    * semi/anti/left outputs never carry ambiguous names; a left join's
+    * borrowed key copies are dropped on the way out. */
+  private def keyJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
+      nullSafe: Boolean, how: String): DataFrame =
+    if (!nullSafe) left.join(right, keys, how)
+    else {
+      val r = right.select(right.columns.map(c =>
+        if (keys.contains(c)) col(c).as(s"__ns_$c") else col(c))
+        .toIndexedSeq: _*)
+      left.join(r, keys.map(k => col(k) <=> col(s"__ns_$k")).reduce(_ && _),
+        how).drop(keys.map(k => s"__ns_$k"): _*)
+    }
 
+  /** `df`'s rows under `meta`'s columns, in schema order: a column `df`
+    * lacks (older files, before an evolution) null-fills; `_row_id`
+    * rides along when `df` carries it. */
+  private def aligned(meta: Meta, df: DataFrame): DataFrame =
+    df.select(meta.schema.fields.map(f =>
+      if (df.columns.contains(f.name)) col(f.name)
+      else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq ++
+      (if (df.columns.contains(RowIdCol)) Seq(col(RowIdCol)) else Nil): _*)
+
+  /** Write-side protocol gate ([[TxLog.supportedWriterFeatures]], the
+    * twin of [[TxLog.snapshot]]'s reader gate): refuse to mutate a
+    * table whose stamped writer features this client does not
+    * implement — an old writer would silently break the invariant the
+    * feature protects (unenforced CHECK constraints, diverging
+    * generated columns, dropped deletion vectors, logically-named
+    * files, an incomplete change feed). Reading never consults it.
+    */
   private def gateWriter(meta: Meta): Unit = {
     val alien = meta.writerFeats.filterNot(TxLog.supportedWriterFeatures)
     require(alien.isEmpty,
@@ -3567,13 +3264,31 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * frame that supplies one (GENERATED ALWAYS, Delta's rule — an
     * explicit value would silently break the uniqueness the declaration
     * promises). */
-  private def applyIdentities(df: DataFrame, meta: Meta): DataFrame =
+  private def applyIdentities(df: DataFrame, meta: Meta): DataFrame = {
+    refuseIdentityValues(df, meta)
     meta.identities.foldLeft(df) { case (d, (c, next)) =>
-      require(!d.columns.contains(c),
-        s"identity column $c is GENERATED ALWAYS — writers must not " +
-          "supply it")
       d.withColumn(c, lit(next) + monotonically_increasing_id())
     }
+  }
+
+  private def refuseIdentityValues(df: DataFrame, meta: Meta): Unit =
+    meta.identities.keys.foreach(c => require(!df.columns.contains(c),
+      s"identity column $c is GENERATED ALWAYS — writers must not " +
+        "supply it"))
+
+  /** `df` as new rows: fresh `_row_id`s and identity values from the
+    * snapshot's watermarks. Under CDF the nondeterministic assignment is
+    * MATERIALIZED (localCheckpoint) so the staged files and the captured
+    * feed record identical values — unlike a best-effort cache, a lost
+    * block fails the job instead of recomputing different ids into the
+    * feed. */
+  private def freshRows(df: DataFrame, meta: Meta): DataFrame = {
+    val fresh = applyIdentities(
+      if (meta.tracksRows) assignRowIds(df, meta.nextRowId) else df, meta)
+    if (meta.cdf && (meta.tracksRows || meta.identities.nonEmpty))
+      fresh.localCheckpoint()
+    else fresh
+  }
 
   /** Fill absent DEFAULT columns with their expressions (cast to the
     * declared type); explicit values win — SQL DEFAULT semantics. */
@@ -3975,41 +3690,36 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * writer tasks BEFORE any file is staged.
     */
   private[lake] def commitStagedAppend(stagedSchema: StructType,
-      physical: Map[String, String], adds: Vector[Add], txn: Txn): Long = {
-    var attempt = 0
-    while (attempt < maxRetries) {
+      physical: Map[String, String], adds: Vector[Add], txn: Txn): Long =
+    retrying("streaming append") { _ =>
       val snap = metaSnapshot()._1
       gateWriter(snap.meta)
-      if (snap.txns.get(txn.appId).exists(_ >= txn.version))
-        return snap.version
-      val evolved = evolve(snap.meta, stagedSchema, preassigned = physical)
-      stagedSchema.fieldNames.foreach { n =>
-        val p = physical.getOrElse(n, n)
-        require(evolved.physicalOf(n) == p && !snap.meta.retired.contains(p),
-          s"column $n was staged as $p, but the table at $root now " +
-            s"stores it as ${evolved.physicalOf(n)} (dropped or re-added " +
-            "since the query started) — restart the query")
+      if (absorbed(snap, Some(txn))) Some(snap.version)
+      else {
+        val evolved = evolve(snap.meta, stagedSchema, preassigned = physical)
+        stagedSchema.fieldNames.foreach { n =>
+          val p = physical.getOrElse(n, n)
+          require(evolved.physicalOf(n) == p && !snap.meta.retired.contains(p),
+            s"column $n was staged as $p, but the table at $root now " +
+              s"stores it as ${evolved.physicalOf(n)} (dropped or re-added " +
+              "since the query started) — restart the query")
+        }
+        // identity and row-id watermarks move past the staged max (from
+        // the files' own stats — the DSv2 sink allocates identity values
+        // and `_row_id`s in its writer tasks, and the NEXT epoch's
+        // factory reads this bump)
+        val merged = bumpWatermark(bumpIdentities(evolved, adds), adds)
+        val metaEntry =
+          if (merged != snap.meta) Seq(LogEntry(meta = Some(merged)))
+          else Nil
+        val entries = metaEntry ++ adds.map(a => LogEntry(add = Some(a))) :+
+          LogEntry(txn = Some(txn)) :+
+          LogEntry(info = Some(Info("STREAMING UPDATE", snap.version)))
+        val v = tryClaim(snap.version, entries)
+        v.foreach(_ => maybeAutoCompact(merged))
+        v
       }
-      // identity and row-id watermarks move past the staged max (from
-      // the files' own stats — the DSv2 sink allocates identity values
-      // and `_row_id`s in its writer tasks, and the NEXT epoch's
-      // factory reads this bump)
-      val merged = bumpWatermark(bumpIdentities(evolved, adds), adds)
-      val metaEntry =
-        if (merged != snap.meta) Seq(LogEntry(meta = Some(merged)))
-        else Nil
-      val entries = metaEntry ++ adds.map(a => LogEntry(add = Some(a))) :+
-        LogEntry(txn = Some(txn)) :+
-        LogEntry(info = Some(Info("STREAMING UPDATE", snap.version)))
-      val v = snap.version + 1
-      if (TxLog.tryCommit(fs, root, v, entries)) {
-        maybeAutoCompact(merged)
-        return v
-      }
-      attempt += 1
     }
-    sys.error(s"streaming append to $root lost $maxRetries races")
-  }
 
   /** Per-file bloom filters in ONE distributed aggregation: hash the
     * column, group by `_metadata.file_path`, aggregate with Catalyst's

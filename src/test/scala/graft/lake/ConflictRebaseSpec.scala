@@ -282,4 +282,48 @@ class ConflictRebaseSpec extends SparkSpec {
       assert(ids === ((100L until 1000L) ++ (5000L until 5100L)).toSet)
     } finally pool.shutdown()
   }
+
+  /** Runs `op` against a live blind append of `appended` ids and returns
+    * the table's ids and commit operations once both have landed. */
+  private def raceAppend(tab: TxTable, appended: (Long, Long))(
+      op: => Long): (Seq[Long], Seq[String]) = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: scala.concurrent.ExecutionContext =
+      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    try {
+      val mut = scala.concurrent.Future(op)
+      val app = scala.concurrent.Future(
+        tab.append(spark.range(appended._1, appended._2).toDF("id")))
+      val wait = scala.concurrent.duration.Duration(120, "s")
+      scala.concurrent.Await.result(mut, wait)
+      scala.concurrent.Await.result(app, wait)
+      (tab.read().as[Long].collect().sorted.toSeq,
+        tab.history().select("op").as[String].collect().toSeq)
+    } finally pool.shutdown()
+  }
+
+  test("end-to-end: applyChanges races a live blind append and both land") {
+    val (tab, _, _) = freshTable("e2eapply")
+    // deletes retract 0..9, inserts re-land 10..19 and add 3000..3009
+    val slice = spark.range(0L, 20L).union(spark.range(3000L, 3010L))
+      .select(col("id"), when(col("id") < 10L, lit("delete"))
+        .otherwise(lit("insert")).as("_change_type"))
+    val (ids, ops) = raceAppend(tab, (6000L, 6100L))(
+      tab.applyChanges(slice, Seq("id")))
+    assert(ids === ((10L until 1000L) ++ (3000L until 3010L) ++
+      (6000L until 6100L)))
+    assert(ops.contains("APPLY_CHANGES") && ops.contains("APPEND"), ops)
+  }
+
+  test("end-to-end: a keyed mergeInto races a live blind append and " +
+      "both land") {
+    val (tab, _, _) = freshTable("e2emergeinto")
+    val src = spark.range(0L, 50L).union(spark.range(1000L, 1010L))
+      .toDF("id")
+    val (ids, ops) = raceAppend(tab, (8000L, 8100L))(
+      tab.mergeInto(src, Seq("id")).whenMatchedDelete()
+        .whenNotMatchedInsert().execute())
+    assert(ids === ((50L until 1010L) ++ (8000L until 8100L)))
+    assert(ops.contains("MERGE_INTO") && ops.contains("APPEND"), ops)
+  }
 }
