@@ -1,6 +1,7 @@
 package graft.lake
 
 import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapred.JobConf
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.TaskContext
@@ -68,6 +69,11 @@ object StageWrite {
   final case class StatSpec(phys: String, ord: Int, dataType: DataType,
       kind: String)
 
+  /** Everything a writing task needs, built once on the driver. It
+    * holds one or two Hadoop confs (~1,000 entries, ~110 KB serialized
+    * each), so it reaches tasks as ONE broadcast per staging job or
+    * streaming epoch — never inside each task's closure — and each
+    * task copies the conf once into its own `JobConf`. */
   final case class Factory(stageAbs: String, rootAbs: String,
       writers: OutputWriterFactory, conf: SerializableConfiguration,
       dataSchema: StructType, partCols: Array[String],
@@ -182,19 +188,22 @@ object StageWrite {
       writers.getFileExtension(ctx0))
   }
 
+  /** One job over `physDf`'s rows; `f`'s broadcast ends with it. */
   private def run(spark: SparkSession, physDf: DataFrame, f: Factory)
       : Vector[StagedStat] = {
     val rdd = physDf.queryExecution.toRdd
-    spark.sparkContext.runJob(rdd,
+    val bf = spark.sparkContext.broadcast(f)
+    try spark.sparkContext.runJob(rdd,
       (ctx: TaskContext, it: Iterator[InternalRow]) => {
         if (it.isEmpty) Array.empty[StagedStat]
         else {
-          val w = new StageTaskWriter(f, ctx.partitionId(),
+          val w = new StageTaskWriter(bf.value, ctx.partitionId(),
             ctx.taskAttemptId())
           try { it.foreach(w.write); w.finish() }
           catch { case t: Throwable => w.abort(); throw t }
         }
       }).flatten.toVector
+    finally bf.destroy()
   }
 
   /** Hive's escapePathName (the inverse of [[TxTable]]'s unescape and
@@ -222,9 +231,10 @@ object StageWrite {
 private[lake] final class StageTaskWriter(f: StageWrite.Factory,
     partitionId: Int, taskAttemptId: Long) {
 
+  // one JobConf copy per task (the factory's conf is shared by every
+  // task of the executor); the context keeps a JobConf as given
   private def taskCtx(conf: SerializableConfiguration) =
-    new TaskAttemptContextImpl(
-      new org.apache.hadoop.conf.Configuration(conf.value),
+    new TaskAttemptContextImpl(new JobConf(conf.value),
       new TaskAttemptID(new TaskID(
         new org.apache.hadoop.mapreduce.JobID(
           "graftstage", partitionId), TaskType.MAP, partitionId),

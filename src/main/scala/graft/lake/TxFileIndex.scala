@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{
   Attribute, BoundReference, Cast, EqualNullSafe, EqualTo, Expression,
   GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal,
   Predicate}
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.execution.datasources.{
   FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -41,21 +42,31 @@ import TxLog.{Add, Snapshot, Stat}
   * costs zero filesystem RPCs — only legacy entries written before the
   * field existed fall back to one `getFileStatus` each.
   *
-  * Scope: serves the files it is given (the caller decides the
-  * snapshot and, for merge-on-read, keeps deletion-vectored files on
-  * the anti-join path — a DV'd file's physical rows are NOT all live,
-  * which a bare parquet scan cannot know).
+  * Scope: serves the files it is given, all of ONE partition layout
+  * (the caller decides the snapshot and groups files by layout — after
+  * a partition evolution a column is a directory value in one layout
+  * and data bytes in the other). A deletion-vectored file is served
+  * whole: the caller removes its deleted positions with an anti-join
+  * on ([[TxFileIndex.FileCol]], [[TxFileIndex.PosCol]]), keyed by
+  * [[TxFileIndex.scanPath]].
   */
 final class TxFileIndex(spark: SparkSession, root: Path, snap: Snapshot,
     adds: Seq[Add]) extends FileIndex {
 
-  // nullable like every file-source schema (DataSource.resolveRelation
-  // applies asNullable): the declared schema may say required, but a
-  // merge can land a NULL key and a default partition a NULL value —
-  // a required-typed vectorized read would corrupt them to zeros
-  private val partCols: Seq[StructField] =
-    snap.meta.partitionCols.flatMap(c => snap.meta.schema.find(_.name == c))
-      .map(_.copy(nullable = true))
+  // the files' own layout: their partition keys (physical names —
+  // partition columns are never renamed while they partition), in
+  // schema order. Nullable like every file-source schema
+  // (DataSource.resolveRelation applies asNullable): the declared
+  // schema may say required, but a merge can land a NULL key and a
+  // default partition a NULL value — a required-typed vectorized read
+  // would corrupt them to zeros
+  private val partCols: Seq[StructField] = {
+    val keys = adds.headOption.fold(snap.meta.partitionCols.toSet)(
+      _.partitionValues.keySet)
+    snap.meta.schema.fields.toSeq
+      .map(f => f.copy(name = snap.meta.physicalOf(f.name), nullable = true))
+      .filter(f => keys(f.name))
+  }
 
   override val partitionSchema: StructType = StructType(partCols)
 
@@ -67,8 +78,8 @@ final class TxFileIndex(spark: SparkSession, root: Path, snap: Snapshot,
 
   // rendered in the empty-authority form Spark's own listings print
   // (`file:///x`) — a Hadoop Path cannot carry that spelling, so the
-  // strings are built directly; Dataset.inputFiles then compares stable
-  // across the native and per-file read paths
+  // strings are built directly; Dataset.inputFiles then compares equal
+  // to a plain `spark.read.parquet` of the same files
   override def inputFiles: Array[String] =
     statuses.map { case (_, st) =>
       val u = st.getPath.toUri
@@ -78,24 +89,18 @@ final class TxFileIndex(spark: SparkSession, root: Path, snap: Snapshot,
   // (add, status) per live file — resolved once; Add.bytes makes this
   // metadata-only (no RPC) for every file written since the field exists
   private lazy val statuses: Seq[(Add, FileStatus)] = adds.map { a =>
-    val raw = new Path(root, a.path)
-    val fs = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // qualified (scheme-carrying) paths, like every Spark file listing —
-    // pure path arithmetic, not an RPC
-    val p = fs.makeQualified(raw)
+    val p = TxFileIndex.qualified(spark, root, a)
     val st = a.bytes match {
       case Some(len) => new FileStatus(len, false, 1, len, 0L, p)
-      case None => fs.getFileStatus(p)
+      case None => p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getFileStatus(p)
     }
     a -> st
   }
 
   /** A partition tuple's values as an InternalRow under
     * [[partitionSchema]] — decoded from the log's string values with
-    * Catalyst's own Cast (null for missing / default-partition keys;
-    * files from an OLDER partition layout simply lack the key and read
-    * the column from their bytes instead — those files are listed under
-    * a null tuple and never partition-prune, which is conservative). */
+    * Catalyst's own Cast (null for default-partition keys). */
   private def tupleRow(pv: Map[String, String]): InternalRow =
     InternalRow.fromSeq(partCols.map { f =>
       pv.get(f.name).filterNot(_ == "__HIVE_DEFAULT_PARTITION__") match {
@@ -224,24 +229,53 @@ final class TxFileIndex(spark: SparkSession, root: Path, snap: Snapshot,
 
 object TxFileIndex {
 
-  /** One native scan over `adds` (physical-name parquet files) at
-    * `snap`'s schema, logical names restored on top. Partition columns
-    * come from the log's values through the relation's own partition
-    * handling; files from an older partition LAYOUT (after a partition
-    * evolution) are excluded by the caller — their partition column is
-    * data bytes, not a directory value. */
+  /** Scan extras: the row's file as the scan spells it
+    * (`_metadata.file_path`), its position in that file
+    * (`_metadata.row_index`), and the physical row id. */
+  private[lake] val FileCol = "__txlog_file"
+  private[lake] val PosCol = "__txlog_pos"
+  private[lake] val RowIdCol = "_row_id"
+
+  /** `a`'s qualified (scheme-carrying) path, like every Spark file
+    * listing — pure path arithmetic, not an RPC. */
+  private def qualified(spark: SparkSession, root: Path, a: Add): Path = {
+    val raw = new Path(root, a.path)
+    raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(raw)
+  }
+
+  /** `a`'s [[FileCol]] value exactly as the scan spells it — what an
+    * anti-join keyed on [[FileCol]] must match. This is Spark's own
+    * `_metadata.file_path` extractor applied to the path the index
+    * lists: the path's string form re-parsed, which drops the empty
+    * authority of `file:///`, then URL-encoded, which encodes an
+    * escaped partition directory's `%` once more. The listed path's
+    * own URI (`file:///…`) matches no row. */
+  private[lake] def scanPath(spark: SparkSession, root: Path, a: Add)
+      : String =
+    new Path(SparkPath.fromPath(qualified(spark, root, a)).toPath.toString)
+      .toUri.toString
+
+  /** One native scan over `adds` — files of ONE partition layout
+    * (physical-name parquet files) — at `snap`'s schema, logical names
+    * restored on top. Partition columns come from the log's values
+    * through the relation's own partition handling. `withFileCols`
+    * appends [[FileCol]] and [[PosCol]]; `withRowId` appends the
+    * physical [[RowIdCol]] (null in files written before tracking). */
   def scan(spark: SparkSession, root: Path, snap: Snapshot,
-      adds: Seq[Add]): DataFrame = {
+      adds: Seq[Add], withFileCols: Boolean = false,
+      withRowId: Boolean = false): DataFrame = {
     val meta = snap.meta
-    val pset = meta.partitionCols.toSet
-    // scan schema under PHYSICAL names (partition cols identity-mapped
-    // — rename refuses them), nullable like any resolved file-source
-    // schema — files can legitimately hold NULLs the declared schema
-    // calls required (null merge keys, evolution backfill)
-    val dataSchema = StructType(
-      meta.schema.fields.filterNot(f => pset.contains(f.name))
-        .map(f => f.copy(name = meta.physicalOf(f.name), nullable = true)))
     val index = new TxFileIndex(spark, root, snap, adds)
+    val pset = index.partitionSchema.fieldNames.toSet
+    // scan schema under PHYSICAL names, nullable like any resolved
+    // file-source schema — files can legitimately hold NULLs the
+    // declared schema calls required (null merge keys, evolution
+    // backfill)
+    val dataSchema = StructType(
+      meta.schema.fields.map(f => f.copy(name = meta.physicalOf(f.name),
+        nullable = true)).filterNot(f => pset(f.name)) ++
+        (if (withRowId) Seq(StructField(RowIdCol, LongType)) else Nil))
     val relation = HadoopFsRelation(
       location = index,
       partitionSchema = index.partitionSchema,
@@ -252,8 +286,12 @@ object TxFileIndex {
     // public wrapping route (Dataset.ofRows is private[sql]); wraps the
     // relation in a LogicalRelation internally
     val df = spark.baseRelationToDataFrame(relation)
-    // logical labels + the table's declared column order
+    // logical labels + the table's declared column order; the metadata
+    // columns resolve only on the raw relation, so in this projection
     df.select(meta.schema.fieldNames.map(n =>
-      col(meta.physicalOf(n)).as(n)).toIndexedSeq: _*)
+      col(meta.physicalOf(n)).as(n)).toIndexedSeq ++
+      (if (withFileCols) Seq(col("_metadata.file_path").as(FileCol),
+        col("_metadata.row_index").as(PosCol)) else Nil) ++
+      (if (withRowId) Seq(col(RowIdCol)) else Nil): _*)
   }
 }

@@ -1,6 +1,7 @@
 package graft.lake
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Cast, UnsafeProjection}
@@ -291,15 +292,24 @@ final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
         else Cast(alloc, dt)
     }.toArray
     val root = new Path(rootStr)
-    TxStreamWriterFactory(
+    releaseStage()
+    val b = spark.sparkContext.broadcast(
       StageWrite.factory(spark, physSchema, physSchema.fieldNames.toSeq,
         new Path(root, stageRel).toString, root.toUri.getPath, partCols,
-        statCols, TxTable.statHllLgK),
-      checkRows, notNullOrdinals, appendExprs)
+        statCols, TxTable.statHllLgK))
+    stage = Some(b)
+    TxStreamWriterFactory(b, checkRows, notNullOrdinals, appendExprs)
   }
+
+  // the current epoch's staging factory: broadcast once per epoch,
+  // destroyed when the epoch commits or aborts
+  @volatile private var stage: Option[Broadcast[StageWrite.Factory]] = None
+
+  private def releaseStage(): Unit = { stage.foreach(_.destroy()); stage = None }
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
+    releaseStage()
     val stats = messages.toVector.flatMap {
       case m: TxStreamCommitMessage => m.stats
       case other => sys.error(s"unexpected commit message $other")
@@ -328,6 +338,7 @@ final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
+    releaseStage()
     val root = new Path(rootStr)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     messages.foreach {
@@ -346,7 +357,8 @@ final class TxStreamingWrite(rootStr: String, partitionCols: Seq[String],
 final case class TxStreamCommitMessage(stats: Seq[StagedStat])
     extends WriterCommitMessage
 
-final case class TxStreamWriterFactory(stage: StageWrite.Factory,
+final case class TxStreamWriterFactory(
+    stage: Broadcast[StageWrite.Factory],
     checks: Array[(String,
       org.apache.spark.sql.catalyst.expressions.Expression)],
     notNull: Array[(String, Int)],
@@ -365,7 +377,7 @@ final case class TxStreamWriterFactory(stage: StageWrite.Factory,
 final class TxStreamDataWriter(f: TxStreamWriterFactory,
     partitionId: Int, taskId: Long) extends DataWriter[InternalRow] {
 
-  private val out = new StageTaskWriter(f.stage, partitionId, taskId)
+  private val out = new StageTaskWriter(f.stage.value, partitionId, taskId)
 
   // constraint predicates compiled ONCE per task from the bound
   // expressions the driver resolved at query start: NOT NULL is a

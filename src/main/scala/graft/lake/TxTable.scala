@@ -4,11 +4,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import TxLog._
-import TxTable.{statColsOf, statKind}
+import TxFileIndex.{FileCol, PosCol, RowIdCol}
+import TxTable.{filePositions, fileSet, statColsOf, statKind}
 
 /** Table operations over a [[TxLog]]-managed parquet directory: ACID
   * create / append / delete / partition-overwrite, snapshot-isolated
@@ -457,9 +459,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       // matching row, so hits/capture/rewrite are identical.
       val cur = readFiles(snap, predScanPaths(snap, cond), withFileCol = true,
         withRowId = snap.meta.tracksRows && snap.meta.cdf)
-      val hit = cur.where(cond)
-        .select(col(FileCol).as("f")).distinct()
-        .collect().map(r => relPath(r.getString(0))).toSet
+      val hit = fileSet(cur.where(cond)).map(relPath)
       if (hit.isEmpty) Some(snap.version) // nothing to do, no commit
       else {
         val affected = snap.adds.filter(a => hit(a.path))
@@ -512,9 +512,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       val idFeed = tracks && snap.meta.cdf
       val cur = readFiles(snap, predScanPaths(snap, cond),
         withFileCol = true, withRowId = idFeed)
-      val hit = cur.where(cond)
-        .select(col(FileCol).as("f")).distinct()
-        .collect().map(r => relPath(r.getString(0))).toSet
+      val hit = fileSet(cur.where(cond)).map(relPath)
       val affected = snap.adds.filter(a => hit(a.path))
       val survivors = readFiles(snap, affected.map(_.path),
           withRowId = tracks)
@@ -568,11 +566,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       val cur = readFiles(snap, predScanPaths(snap, cond),
         withFileCol = true, withPos = true,
         withRowId = snap.meta.tracksRows && snap.meta.cdf)
-      val hits = cur.where(cond)
-        .groupBy(col(FileCol))
-        .agg(collect_list(col(PosCol)).as("pos"))
-        .collect()
-        .map(r => relPath(r.getString(0)) -> r.getSeq[Long](1))
+      val hits = filePositions(cur.where(cond))
+        .map { case (f, pos) => relPath(f) -> pos }
       if (hits.isEmpty) Some(snap.version) // nothing to do, no commit
       else {
         // The cap bounds the MERGED vector (existing positions + this
@@ -659,9 +654,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       // predicate data skipping like [[deleteWhere]]
       val cur = readFiles(snap, predScanPaths(snap, cond), withFileCol = true,
         withRowId = idFeed)
-      val hit = cur.where(matched)
-        .select(col(FileCol).as("f")).distinct()
-        .collect().map(r => relPath(r.getString(0))).toSet
+      val hit = fileSet(cur.where(matched)).map(relPath)
       if (hit.isEmpty) Some(snap.version) // nothing matches, no commit
       else {
         val affected = snap.adds.filter(a => hit(a.path))
@@ -3220,14 +3213,9 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * partition columns are attached from the log's partitionValues, not
     * parsed from directories (per-commit staging dirs make the layout
     * inconsistent for Spark's own discovery — and the log is the source
-    * of truth anyway). Files group by partition tuple, one typed-literal
-    * projection per group. At 100 TB the same idea becomes a custom
-    * FileIndex; the union of per-tuple scans keeps this dependency-free.
+    * of truth anyway). Every read goes through [[TxFileIndex]]: one
+    * native scan per partition layout ([[readFiles]]).
     */
-  private val FileCol = "__txlog_file"
-  private val PosCol = "__txlog_pos"
-  private val RowIdCol = "_row_id"
-
   /** Fresh row-id assignment from the watermark: unique and stable are
     * the contract, dense is not (Delta's rule too) —
     * `monotonically_increasing_id` embeds the partition ordinal, so a
@@ -3299,132 +3287,49 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         expr(sql).cast(meta.schema(c).dataType))
     }
 
+  /** `rels` (live at `snap`) as rows of `snap`'s logical schema, with
+    * the requested extras ([[FileCol]], [[PosCol]], [[RowIdCol]])
+    * appended. Files store PHYSICAL column names (stable across
+    * renames); each file's OWN partitionValues — not the table's current
+    * partition spec — decide which columns come from the log vs the
+    * file bytes: after PARTITION EVOLUTION ([[repartitionBy]]) old- and
+    * new-layout files coexist, so the read is ONE [[TxFileIndex]] scan
+    * per layout (one in practice). Deletion-vectored files' deleted
+    * positions leave through ONE broadcast anti-join on (file,
+    * position) — the DV cardinality is writer-capped per file, so the
+    * broadcast is bounded; positions decode on the driver from the
+    * binary sidecar (or the legacy inline list).
+    */
   private def readFiles(snap: Snapshot, rels: Seq[String],
       withFileCol: Boolean = false, withPos: Boolean = false,
       withRowId: Boolean = false): DataFrame = {
-    val schema = snap.meta.schema
-    val metaFields =
-      (if (withFileCol) Seq(StructField(FileCol, StringType)) else Nil) ++
-        (if (withPos) Seq(StructField(PosCol, LongType)) else Nil) ++
-        (if (withRowId) Seq(StructField(RowIdCol, LongType)) else Nil)
     if (rels.isEmpty)
       return spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        StructType(schema.fields ++ metaFields))
-    // files store PHYSICAL column names (stable across renames); the
-    // scan schema asks for those and the final projection re-labels
-    // them with this version's LOGICAL names. Each file's OWN
-    // partitionValues — not the table's current partition spec — decide
-    // which columns come from the log vs the file bytes: after
-    // PARTITION EVOLUTION ([[repartitionBy]]) old- and new-layout files
-    // coexist, and a column that is a directory value in one layout is
-    // plain data bytes in the other.
-    // a row-id read asks the scan for the PHYSICAL `_row_id` column too
-    // (not part of the logical schema; files from before tracking read
-    // null — only create-time opt-in exists today, so in practice every
-    // file of a tracked table carries it)
-    def dataSchemaFor(pv: Map[String, String]) = StructType(
-      schema.fields.filterNot(f => pv.contains(f.name))
-        .map(f => f.copy(name = snap.meta.physicalOf(f.name))) ++
-        (if (withRowId) Seq(StructField(RowIdCol, LongType)) else Nil))
+        StructType(snap.meta.schema.fields ++
+          (if (withFileCol) Seq(StructField(FileCol, StringType)) else Nil) ++
+          (if (withPos) Seq(StructField(PosCol, LongType)) else Nil) ++
+          (if (withRowId) Seq(StructField(RowIdCol, LongType)) else Nil)))
     val addByPath = snap.adds.map(a => a.path -> a).toMap
-    // files carrying a deletion vector scan individually (the anti-join
-    // key is the position alone, so no path normalization is needed);
-    // plain files keep the batched per-partition-tuple scan
-    val (dvRels, plainRels) = rels.partition(r => addByPath(r).hasDv)
-    val needMeta = withFileCol || withPos || dvRels.nonEmpty
-    // the hot path — a plain snapshot read with no metadata columns and
-    // a homogeneous partition layout — goes through ONE native
-    // FileIndex scan ([[TxFileIndex]]): the log serves files/partition
-    // values/stats into Spark's own parquet source, so partition
-    // pruning and min/max file skipping happen inside the planner and
-    // the whole read is a single vectorized, codegen'd scan node
-    // instead of a union of per-tuple frames. Mixed layouts (partition
-    // evolution) and metadata-needing mutation scans keep the explicit
-    // per-group path, which handles both exactly.
-    if (!withFileCol && !withPos && !withRowId) {
-      val pset = snap.meta.partitionCols.toSet
-      if (plainRels.forall(r => addByPath(r).partitionValues.keySet == pset)) {
-        val plainDf =
-          TxFileIndex.scan(spark, root, snap, plainRels.map(addByPath))
-        // DV'd files still need the per-file anti-join on row position;
-        // their metadata columns stay internal to each frame
-        val dvDf = dvRels.sorted.map(r => dvFrame(snap, addByPath(r))
-          .drop(FileCol, PosCol))
-        return (plainDf +: dvDf).reduce(_ unionAll _)
+    val adds = rels.map(addByPath)
+    val dvAdds = adds.filter(_.hasDv)
+    val fileCols = withFileCol || withPos || dvAdds.nonEmpty
+    val all = adds.groupBy(_.partitionValues.keySet).values.toSeq
+      .sortBy(_.head.path)
+      .map(TxFileIndex.scan(spark, root, snap, _, fileCols, withRowId))
+      .reduce(_ unionAll _)
+    val live =
+      if (dvAdds.isEmpty) all
+      else {
+        import spark.implicits._
+        val gone = dvAdds.flatMap { a =>
+          val f = TxFileIndex.scanPath(spark, root, a)
+          dvPositionsOf(a).map(f -> _)
+        }.toDF("__dv_file", "__dv_pos")
+        all.join(broadcast(gone), col(FileCol) === col("__dv_file") &&
+          col(PosCol) === col("__dv_pos"), "left_anti")
       }
-    }
-    def metaSelect(scan: DataFrame): DataFrame =
-      // pull the metadata columns while still on the raw scan — they do
-      // not survive later projections
-      if (needMeta) scan.select(col("*"),
-        col("_metadata.file_path").as(FileCol),
-        col("_metadata.row_index").as(PosCol))
-      else scan
-    def finish(base: DataFrame, pv: Map[String, String]): DataFrame = {
-      // attach exactly this file group's directory-value columns (keys
-      // not in the schema anymore — dropped after an evolution — are
-      // simply ignored)
-      val attached = pv.keySet.filter(schema.fieldNames.contains)
-      val withParts = attached.foldLeft(base) { (df, c) =>
-        val v = pv.get(c).filterNot(_ == "__HIVE_DEFAULT_PARTITION__")
-        df.withColumn(c, lit(v.orNull).cast(schema(c).dataType))
-      }
-      val cols = schema.fieldNames.map { n =>
-        if (attached.contains(n)) col(n)
-        else col(snap.meta.physicalOf(n)).as(n)
-      } ++ (if (needMeta) Seq(col(FileCol), col(PosCol)) else Nil) ++
-        (if (withRowId) Seq(col(RowIdCol)) else Nil)
-      withParts.select(cols.toIndexedSeq: _*)
-    }
-    val plainFrames = plainRels.groupBy(r => addByPath(r).partitionValues)
-      .toSeq.sortBy(_._1.toSeq.sorted.mkString("/"))
-      .map { case (pv, paths) =>
-        finish(metaSelect(spark.read.schema(dataSchemaFor(pv))
-          .parquet(paths.map(r => new Path(root, r).toString): _*)), pv)
-      }
-    val dvFrames = dvRels.sorted.map(r =>
-      dvFrame(snap, addByPath(r), withRowId))
-    val out = (plainFrames ++ dvFrames).reduce(_ unionAll _)
-    val drop =
-      (if (withFileCol) Nil else Seq(FileCol)) ++
-        (if (withPos) Nil else Seq(PosCol))
-    drop.foldLeft(out)(_ drop _)
-  }
-
-  /** One deletion-vectored file's LIVE rows, with [[FileCol]]/[[PosCol]]
-    * attached (callers that don't want them drop them): live rows =
-    * physical rows minus the vector, a broadcast anti-join on position
-    * (the DV cardinality is writer-capped, so the broadcast is bounded).
-    * Positions decode from the binary sidecar (or the legacy inline
-    * list) on the driver — cap-bounded metadata.
-    */
-  private def dvFrame(snap: Snapshot, a: Add,
-      withRowId: Boolean = false): DataFrame = {
-    val schema = snap.meta.schema
-    val dataSchema = StructType(
-      schema.fields.filterNot(f => a.partitionValues.contains(f.name))
-        .map(f => f.copy(name = snap.meta.physicalOf(f.name))) ++
-        (if (withRowId) Seq(StructField(RowIdCol, LongType)) else Nil))
-    val scan = spark.read.schema(dataSchema)
-      .parquet(new Path(root, a.path).toString)
-      .select(col("*"),
-        col("_metadata.file_path").as(FileCol),
-        col("_metadata.row_index").as(PosCol))
-    import spark.implicits._
-    val dvDf = dvPositionsOf(a).toDF("__dv_pos")
-    val base = scan.join(broadcast(dvDf),
-      col(PosCol) === col("__dv_pos"), "left_anti")
-    val attached = a.partitionValues.keySet.filter(schema.fieldNames.contains)
-    val withParts = attached.foldLeft(base) { (df, c) =>
-      val v = a.partitionValues.get(c)
-        .filterNot(_ == "__HIVE_DEFAULT_PARTITION__")
-      df.withColumn(c, lit(v.orNull).cast(schema(c).dataType))
-    }
-    withParts.select(schema.fieldNames.map { n =>
-      if (attached.contains(n)) col(n)
-      else col(snap.meta.physicalOf(n)).as(n)
-    }.toIndexedSeq ++ Seq(col(FileCol), col(PosCol)) ++
-      (if (withRowId) Seq(col(RowIdCol)) else Nil): _*)
+    live.drop((if (withFileCol) Nil else Seq(FileCol)) ++
+      (if (withPos) Nil else Seq(PosCol)): _*)
   }
 
   // ---- write plumbing ----
@@ -3863,6 +3768,29 @@ object TxTable {
         statKind(dt).map(k => (meta.physicalOf(c), dt, k)))) ++
       types.get("_row_id").map(dt => ("_row_id", dt, "l"))
   }
+
+  /** The distinct [[TxFileIndex.FileCol]] values of `rows`, distinct
+    * per task and merged on the driver: one job, no exchange (the rows
+    * stream through `queryExecution.toRdd`, as [[StageWrite]] reads its
+    * own). */
+  private[lake] def fileSet(rows: DataFrame): Set[String] =
+    rows.sparkSession.sparkContext.runJob(
+      rows.select(FileCol).queryExecution.toRdd,
+      (it: Iterator[InternalRow]) =>
+        it.map(_.getUTF8String(0).toString).toSet.toArray)
+      .iterator.flatten.toSet
+
+  /** `rows`' [[TxFileIndex.PosCol]]s per [[TxFileIndex.FileCol]],
+    * grouped per task and concatenated on the driver: one job, no
+    * exchange. */
+  private[lake] def filePositions(rows: DataFrame)
+      : Map[String, Array[Long]] =
+    rows.sparkSession.sparkContext.runJob(
+      rows.select(FileCol, PosCol).queryExecution.toRdd,
+      (it: Iterator[InternalRow]) =>
+        it.map(r => r.getUTF8String(0).toString -> r.getLong(1)).toArray
+          .groupMap(_._1)(_._2).toArray)
+      .iterator.flatten.toSeq.groupMapReduce(_._1)(_._2)(_ ++ _)
 
   /** Validate a TBLPROPERTIES map WITHOUT touching any table — the
     * shared gate for `SET TBLPROPERTIES` and `CREATE TABLE ...

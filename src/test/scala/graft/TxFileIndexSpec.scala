@@ -8,6 +8,8 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 import graft.lake.{TxFileIndex, TxLog, TxTable}
 
 /** The native-FileIndex read path ([[graft.lake.TxFileIndex]] — the
@@ -15,9 +17,9 @@ import graft.lake.{TxFileIndex, TxLog, TxTable}
   * design): plan shape (ONE FileSourceScanExec over the log's files,
   * partition pruning inside the planner), log-stats file skipping
   * through the planner's own listFiles callback, plan-time costing
-  * from logged file sizes (no filesystem RPCs), and content parity
-  * with the legacy per-tuple union path on every layout that routes
-  * natively.
+  * from logged file sizes (no filesystem RPCs), and that every read —
+  * time travel, schema evolution, merge-on-read files, mutation scans
+  * and mixed partition layouts — plans natively.
   */
 class TxFileIndexSpec extends SparkSpec {
   import spark.implicits._
@@ -118,7 +120,13 @@ class TxFileIndexSpec extends SparkSpec {
     assert(v0.count() === 40)
   }
 
-  test("merge-on-read files stay OFF the native path; plain files stay on it") {
+  /** Every file-source scan of `df`'s pre-AQE plan (a broadcast join
+    * wraps the executed plan in AdaptiveSparkPlanExec, which hides the
+    * scans from a plain collect). */
+  private def nativeScans(df: DataFrame): Seq[FileSourceScanExec] =
+    df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+
+  test("merge-on-read files read through the ONE native scan") {
     val tab = new TxTable(spark, freshRoot("dv"))
     tab.create(docs(100))
     tab.deleteWhereMergeOnRead($"id" === 7L)
@@ -126,17 +134,54 @@ class TxFileIndexSpec extends SparkSpec {
     // content first: the DV row is gone
     assert(df.count() === 99)
     assert(df.where($"id" === 7L).count() === 0)
-    // the DV'd file reads through the anti-join path, so the plan is a
-    // union — but it must still contain a native TxFileIndex scan for
-    // the untouched plain files (pre-AQE plan: the join wraps the
-    // executed plan in AdaptiveSparkPlanExec, which hides the scans
-    // from a plain collect)
-    val native = df.queryExecution.sparkPlan.collect {
-      case s: FileSourceScanExec
-        if s.relation.location.isInstanceOf[TxFileIndex] => s
+    // the DV'd file reads through the same scan as every plain file
+    val scans = nativeScans(df)
+    assert(scans.length === 1, s"expected ONE native scan, got ${scans.length}")
+    assert(scans.head.relation.location.isInstanceOf[TxFileIndex])
+  }
+
+  test("a withFileCol mutation scan reads through ONE native scan") {
+    val tab = new TxTable(spark, freshRoot("mut"))
+    tab.create(docs(90).repartition(3), partitionCols = Seq("lang"))
+    // a file scan RDD per stage the delete runs: its match probe and its
+    // rewrite each read the three partition tuples' files as ONE scan
+    val scansPerStage =
+      new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        scansPerStage.add(
+          e.stageInfo.rddInfos.count(_.name == "FileScanRDD")): Unit
     }
-    assert(native.nonEmpty,
-      "plain files of a partially-DV'd table must stay on the native path")
+    spark.sparkContext.addSparkListener(l)
+    val jobs = try jobsOf(tab.deleteWhere($"id" % 10 === 3L))
+      finally spark.sparkContext.removeSparkListener(l)
+    assert(jobs > 0)
+    val perStage = scansPerStage.asScala.toSeq.map(_.intValue)
+    assert(perStage.exists(_ == 1) && perStage.forall(_ <= 1),
+      s"file scans per stage: $perStage")
+    val left = tab.read()
+    assert(left.count() === 81)
+    assert(left.where($"id" % 10 === 3L).count() === 0)
+  }
+
+  test("a two-layout read after repartitionBy plans one native scan per layout") {
+    val tab = new TxTable(spark, freshRoot("evo"))
+    tab.create(docs(60), partitionCols = Seq("lang"))
+    tab.repartitionBy(Seq("score"))
+    tab.append(docs(30).withColumn("id", $"id" + 100))
+    val df = tab.read()
+    val scans = nativeScans(df)
+    assert(scans.length === 2, s"expected two native scans, got ${scans.length}")
+    assert(scans.forall(_.relation.location.isInstanceOf[TxFileIndex]))
+    assert(scans.map(_.relation.partitionSchema.fieldNames.toSeq).toSet ===
+      Set(Seq("lang"), Seq("score")))
+    // partition values from the log in one layout, bytes in the other
+    val byLang = df.groupBy("lang").count().as[(String, Long)].collect().toMap
+    assert(byLang === Map("0" -> 30L, "1" -> 30L, "2" -> 30L))
+    // a data filter in the old layout, a partition filter in the new one
+    assert(df.where($"score" === 50L).select("id").as[Long].collect()
+      .toSet === Set(5L, 105L))
   }
 
   test("a query WHERE composes with skipping — no readBetween routing needed") {
