@@ -4,9 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Attribute, BoundReference, Cast, EqualNullSafe, EqualTo, Expression,
-  GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal,
-  Predicate}
+  And, Attribute, BoundReference, Cast, Expression, Literal, Predicate}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.execution.datasources.{
   FileIndex, HadoopFsRelation, PartitionDirectory}
@@ -14,7 +12,7 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
-import TxLog.{Add, Snapshot, Stat}
+import TxLog.{Add, Snapshot}
 
 /** The txlog read path as a native Spark [[FileIndex]] — Delta's
   * TahoeFileIndex design: the transaction log (not a directory listing)
@@ -26,12 +24,13 @@ import TxLog.{Add, Snapshot, Stat}
   *     [[listFiles]] its partition filters and only matching partition
   *     tuples' files enter the scan (visible as the scan's "partition
   *     filters" / shrinking "files read"),
-  *   - LOG-STATS FILE SKIPPING: data filters of shape `col op literal`
-  *     drop every file whose recorded [min,max] cannot satisfy them —
-  *     Spark never even opens the excluded footers (the same decision
-  *     [[TxTable.candidateFiles]] makes, now inside the planner's own
-  *     callback, composing with whatever the query's WHERE clause is
-  *     instead of requiring the caller to route through `readBetween`),
+  *   - LOG-STATS FILE SKIPPING: the data filters go through the lake's
+  *     one skipping evaluator ([[TxSkipping]]) — a file whose recorded
+  *     [min,max] (or partition value) cannot satisfy a `col op value` /
+  *     `IN` conjunct, or whose bloom sidecar excludes every point value,
+  *     is dropped, and Spark never opens its footer. Every lake read and
+  *     every mutation's match scan gets the same decision, whatever the
+  *     query's WHERE clause,
   *   - and everything the native parquet source already does
   *     downstream: footer row-group pruning on the surviving files,
   *     column pruning, vectorized decode, whole-stage codegen — ONE
@@ -114,9 +113,16 @@ final class TxFileIndex(spark: SparkSession, root: Path, snap: Snapshot,
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    // data filters meet the log's per-file stats here, through the one
+    // skipping evaluator; attributes carry the physical names the stats
+    // are keyed by
     val statKept =
       if (dataFilters.isEmpty) statuses
-      else statuses.filter { case (a, _) => mayMatch(a, dataFilters) }
+      else {
+        val keep = TxSkipping.keeper(spark, root,
+          dataFilters.reduce(And), n => n)
+        statuses.filter { case (a, _) => keep(a) }
+      }
     val grouped = statKept
       .groupBy { case (a, _) =>
         partCols.map(f => a.partitionValues.get(f.name)) }
@@ -135,95 +141,11 @@ final class TxFileIndex(spark: SparkSession, root: Path, snap: Snapshot,
             spark.sessionState.analyzer.resolver(f.name, a.name))
           require(i >= 0, s"partition filter on unknown column ${a.name}")
           BoundReference(i, partCols(i).dataType, nullable = true)
-      }).reduce(org.apache.spark.sql.catalyst.expressions.And)
+      }).reduce(And)
       val pred = Predicate.create(bound)
       pred.initialize(0)
       grouped.filter(d => pred.eval(d.values))
     }
-  }
-
-  /** Conservative file-level evaluation of a data filter against the
-    * log's min/max stats: true = the file MAY hold a matching row
-    * (missing stats, unsupported shapes, and non-literal operands all
-    * keep the file). Stats are keyed by PHYSICAL column name — which is
-    * exactly what the relation's attributes carry, since the scan
-    * schema is the physical one. */
-  private def mayMatch(a: Add, filters: Seq[Expression]): Boolean =
-    filters.forall(f => mayMatchOne(a, f))
-
-  private def statOf(a: Add, attr: Attribute): Option[Stat] =
-    a.stats.get(attr.name)
-
-  private def rangeMay(st: Stat, lo: Option[Any], hi: Option[Any],
-      loStrict: Boolean, hiStrict: Boolean): Boolean = {
-    def cmp(x: String, v: Any): Int = st.kind match {
-      case "l" => java.lang.Long.compare(x.toLong, v match {
-        case n: Number => n.longValue(); case s => s.toString.toLong })
-      case "d" => java.lang.Double.compare(x.toDouble, v match {
-        case n: Number => n.doubleValue(); case s => s.toString.toDouble })
-      case _ => x.compareTo(v.toString)
-    }
-    val okLo = lo.forall(v =>
-      if (loStrict) cmp(st.max, v) > 0 else cmp(st.max, v) >= 0)
-    val okHi = hi.forall(v =>
-      if (hiStrict) cmp(st.min, v) < 0 else cmp(st.min, v) <= 0)
-    okLo && okHi
-  }
-
-  private def lit(e: Expression): Option[Any] = e match {
-    case Literal(v, _) if v != null => Some(v match {
-      case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-      case d: org.apache.spark.sql.types.Decimal => d.toBigDecimal
-      case x => x
-    })
-    case _ => None
-  }
-
-  private def mayMatchOne(a: Add, f: Expression): Boolean = f match {
-    case org.apache.spark.sql.catalyst.expressions.And(l, r) =>
-      mayMatchOne(a, l) && mayMatchOne(a, r)
-    case EqualTo(attr: Attribute, v) => statOf(a, attr) match {
-      case Some(st) => lit(v).forall(x =>
-        rangeMay(st, Some(x), Some(x), loStrict = false, hiStrict = false))
-      case None => true
-    }
-    case EqualTo(v, attr: Attribute) => mayMatchOne(a, EqualTo(attr, v))
-    case EqualNullSafe(attr: Attribute, v) =>
-      mayMatchOne(a, EqualTo(attr, v))
-    case GreaterThan(attr: Attribute, v) => statOf(a, attr) match {
-      case Some(st) =>
-        lit(v).forall(x => rangeMay(st, Some(x), None, loStrict = true, hiStrict = false))
-      case None => true
-    }
-    case GreaterThanOrEqual(attr: Attribute, v) => statOf(a, attr) match {
-      case Some(st) =>
-        lit(v).forall(x => rangeMay(st, Some(x), None, loStrict = false, hiStrict = false))
-      case None => true
-    }
-    case LessThan(attr: Attribute, v) => statOf(a, attr) match {
-      case Some(st) =>
-        lit(v).forall(x => rangeMay(st, None, Some(x), loStrict = false, hiStrict = true))
-      case None => true
-    }
-    case LessThanOrEqual(attr: Attribute, v) => statOf(a, attr) match {
-      case Some(st) =>
-        lit(v).forall(x => rangeMay(st, None, Some(x), loStrict = false, hiStrict = false))
-      case None => true
-    }
-    // literal-on-the-left comparisons flip
-    case GreaterThan(v, attr: Attribute) => mayMatchOne(a, LessThan(attr, v))
-    case GreaterThanOrEqual(v, attr: Attribute) =>
-      mayMatchOne(a, LessThanOrEqual(attr, v))
-    case LessThan(v, attr: Attribute) => mayMatchOne(a, GreaterThan(attr, v))
-    case LessThanOrEqual(v, attr: Attribute) =>
-      mayMatchOne(a, GreaterThanOrEqual(attr, v))
-    case In(attr: Attribute, vs) if vs.forall(lit(_).isDefined) =>
-      statOf(a, attr) match {
-        case Some(st) => vs.exists(v => lit(v).forall(x =>
-          rangeMay(st, Some(x), Some(x), loStrict = false, hiStrict = false)))
-        case None => true
-      }
-    case _ => true // OR / IsNull / functions / subqueries: keep the file
   }
 }
 
@@ -282,7 +204,11 @@ object TxFileIndex {
       dataSchema = dataSchema,
       bucketSpec = None,
       fileFormat = new ParquetFileFormat(),
-      options = Map.empty)(spark)
+      // parquet's dictionary filter compares doubles with
+      // Double.compare, so `d <= -0.0` drops a row group of 0.0s that
+      // Spark's filter (and the stats skipping) would match; the
+      // min/max row-group and page filters stay on
+      options = Map("parquet.filter.dictionary.enabled" -> "false"))(spark)
     // public wrapping route (Dataset.ofRows is private[sql]); wraps the
     // relation in a LogicalRelation internally
     val df = spark.baseRelationToDataFrame(relation)

@@ -40,7 +40,7 @@ object TxLog {
 
   /** One typed column statistic, string-encoded with a kind tag so the
     * JSON stays schema-free: kind "l" (integral), "d" (floating), "s"
-    * (string). Used for file skipping — see [[TxTable.candidateFiles]].
+    * (string). Used for file skipping — see [[TxSkipping]].
     * `hll` (base64 compact DataSketches HLL, small lgK) rides on
     * STRING columns only: per-file sketches UNION exactly, so
     * [[graft.lake.catalog]]'s `estimateStatistics` can hand CBO a real

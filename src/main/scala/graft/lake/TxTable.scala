@@ -46,24 +46,6 @@ final class TxTable(spark: SparkSession, rootStr: String) {
   /** True once a transaction log exists at the root. */
   def exists: Boolean = version >= 0L
 
-  /** Max partition value for `colName` across the live files — pure log
-    * metadata (no listing, no Spark job). Decoded timestamp strings
-    * order lexically = chronologically, so this IS the latest-load
-    * lookup for etl_inserted-partitioned tables.
-    */
-  def partitionValueMax(colName: String): Option[String] =
-    TxLog.liveAddsFrame(fs, root, None) match {
-      case Some((live, _, _, _)) => // one small agg, no Add collection
-        val pv = col("partitionValues").getItem(colName)
-        val r = live.where(pv.isNotNull &&
-          pv =!= "__HIVE_DEFAULT_PARTITION__").agg(max(pv)).collect().head
-        if (r.isNullAt(0)) None else Some(r.getString(0))
-      case None =>
-        TxLog.snapshot(fs, root).adds
-          .flatMap(_.partitionValues.get(colName))
-          .filterNot(_ == "__HIVE_DEFAULT_PARTITION__").maxOption
-    }
-
   // ---- writes ----
 
   /** Create (or overwrite-create) the table from `df`. Version 0.
@@ -454,10 +436,10 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       gateAppendOnly(snap.meta, "DELETE")
       // a tracked table's capture carries each deleted row's _row_id —
       // identity-based CDF consumption needs the retracted identity.
-      // The match scan reads only stats-candidate files for the
-      // predicate ([[predScanPaths]]); a pruned file provably holds no
-      // matching row, so hits/capture/rewrite are identical.
-      val cur = readFiles(snap, predScanPaths(snap, cond), withFileCol = true,
+      // `cur.where(cond)` skips files through the scan's own index
+      // ([[TxFileIndex]]); a pruned file provably holds no matching row,
+      // so hits/capture/rewrite are identical.
+      val cur = readFiles(snap, snap.adds.map(_.path), withFileCol = true,
         withRowId = snap.meta.tracksRows && snap.meta.cdf)
       val hit = fileSet(cur.where(cond)).map(relPath)
       if (hit.isEmpty) Some(snap.version) // nothing to do, no commit
@@ -510,7 +492,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       enforceConstraints(df, snap.meta)
       val tracks = snap.meta.tracksRows
       val idFeed = tracks && snap.meta.cdf
-      val cur = readFiles(snap, predScanPaths(snap, cond),
+      val cur = readFiles(snap, snap.adds.map(_.path),
         withFileCol = true, withRowId = idFeed)
       val hit = fileSet(cur.where(cond)).map(relPath)
       val affected = snap.adds.filter(a => hit(a.path))
@@ -563,7 +545,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       val addByPath = snap.adds.map(a => a.path -> a).toMap
       // predicate data skipping like [[deleteWhere]]; row positions are
       // per-file (`_metadata.row_index`), so a subset scan keeps them
-      val cur = readFiles(snap, predScanPaths(snap, cond),
+      val cur = readFiles(snap, snap.adds.map(_.path),
         withFileCol = true, withPos = true,
         withRowId = snap.meta.tracksRows && snap.meta.cdf)
       val hits = filePositions(cur.where(cond))
@@ -651,10 +633,12 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       val matched = coalesce(cond, lit(false))
       val tracks = snap.meta.tracksRows
       val idFeed = tracks && snap.meta.cdf
-      // predicate data skipping like [[deleteWhere]]
-      val cur = readFiles(snap, predScanPaths(snap, cond), withFileCol = true,
+      // predicate data skipping like [[deleteWhere]] — the probe filters
+      // on `cond` itself: `matched`'s coalesce would hide its conjuncts
+      // from the scan's skipping (same rows: a NULL verdict never passes)
+      val cur = readFiles(snap, snap.adds.map(_.path), withFileCol = true,
         withRowId = idFeed)
-      val hit = fileSet(cur.where(matched)).map(relPath)
+      val hit = fileSet(cur.where(cond)).map(relPath)
       if (hit.isEmpty) Some(snap.version) // nothing matches, no commit
       else {
         val affected = snap.adds.filter(a => hit(a.path))
@@ -683,7 +667,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
         // both images carry the row's _row_id — UPDATE preserves identity,
         // so the pair is id-joinable with no key assumptions.
         val entries = stageCommit(snap, snap.meta, "UPDATE", affected,
-          Some(rewritten.drop(flag)), cur.where(matched).drop(FileCol)
+          Some(rewritten.drop(flag)), cur.where(cond).drop(FileCol)
             .withColumn("_change_type", lit("update_preimage"))
             .unionByName(rewritten.where(col(flag))
               .drop((flag +: (if (idFeed) Nil else Seq(RowIdCol))): _*)
@@ -1864,8 +1848,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * Caveats of a mixed-layout table (all Iceberg-shared):
     * [[overwritePartition]] refuses until the layout is homogeneous (a
     * value's rows could hide in old-layout files it would not replace),
-    * and [[readLatestPartition]]/[[partitionValueMax]] see only files
-    * whose layout carries the column.
+    * and [[readLatestPartition]] sees only files whose layout carries
+    * the column.
     */
   def repartitionBy(newPartitionCols: Seq[String]): Long =
     alterMeta("REPARTITION") { snap =>
@@ -2039,7 +2023,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
   private def keyPrunable(meta: Meta, k: String): Boolean =
     (if (k == RowIdCol) Some(LongType: DataType)
      else meta.schema.find(_.name == k).map(_.dataType))
-      .exists(t => t.isInstanceOf[NumericType] || t == StringType)
+      .exists(TxSkipping.skippable)
 
   /** The key frame's [min, max] — None when no prune is sound (empty /
     * all-null keys; under null-SAFE matching, ANY null key: stats say
@@ -2091,174 +2075,19 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       if (!keyPrunable(m, k)) lit(true)
       else keyRange(keys, k, nullSafe) match {
         case None           => lit(true)
-        case Some((lo, hi)) => candidateKeep(m, k, lo, hi)
+        case Some((lo, hi)) =>
+          TxSkipping.column(spark, m, col(k).between(lit(lo), lit(hi)))
       }
     })
 
-  /** Candidate live paths for a PREDICATE mutation's match scan
-    * (`update` / `deleteWhere` / merge-on-read delete): data skipping on
-    * the user's own WHERE clause, Delta's model. The analyzed predicate
-    * is split into top-level conjuncts; every conjunct of a recognized
-    * shape (`col <op> literal`, `IN`, both orientations, numeric or
-    * string, casts from type coercion unwrapped) narrows the candidate
-    * set via per-file stats — a matching row must satisfy EVERY
-    * conjunct, so the keeps intersect. Point-equality conjuncts probe
-    * the bloom sidecars too. Everything else is conservative: an
-    * unrecognized conjunct (OR, UDF, null tests, date/decimal types,
-    * cross-type compares where stat order ≠ predicate order) constrains
-    * nothing, an analysis failure or stats-parse failure keeps the
-    * file, and integer-stat bounds from fractional literals truncate
-    * toward keeping. At 100 TB this turns `UPDATE ... WHERE day = X`
-    * from a full-table scan into a scan of the overlapping files only.
-    */
-  private def predScanPaths(snap: Snapshot, cond: Column): Seq[String] = {
-    val all = snap.adds.map(_.path)
-    // same toy-scale gate as keyScanPaths: below a handful of files the
-    // analysis + stats walk saves nothing
-    if (snap.adds.size < 16) return all
-    val cs = scala.util.Try(condConstraints(snap.meta, cond)).getOrElse(Nil)
-    if (cs.isEmpty) return all
-    var keep = snap.adds
-    cs.foreach { case (name, lo, hi) =>
-      keep = keep.filter(a => keepByStats(snap, a, name, lo, hi))
-      (lo, hi) match {
-        case (Some(l), Some(h)) if l == h && keep.nonEmpty =>
-          val b = bloomCandidateFiles(snap, name, l).map(_.path).toSet
-          keep = keep.filter(a => b(a.path))
-        case _ =>
-      }
-    }
-    keep.map(_.path)
-  }
-
-  /** Planning snapshot for a PREDICATE mutation, the open-range twin of
-    * [[planningSnapshot]]: resolved through
-    * [[graft.lake.TxLog.prunedSnapshot]] with the WHERE clause's mined
-    * constraints as the keep Column, so a million-file table plans an
-    * `UPDATE ... WHERE day = X` distributed over the checkpoint and
-    * only stats-candidate Adds ever reach the driver. Small tables (or
-    * an unminable predicate) fold in memory exactly as before;
-    * [[predScanPaths]] then applies the same keeps (plus blooms)
-    * driver-side — idempotent on the pre-filtered set. */
+  /** Planning snapshot for a PREDICATE mutation: the WHERE clause's
+    * candidate files ([[TxSkipping.snapshot]]) — distributed over the
+    * checkpoint on a million-file table, so an `UPDATE ... WHERE day =
+    * X` never collects the full Add list; folded in memory on a small
+    * one. The match scan's own index then skips with the same
+    * evaluator. */
   private def mutationSnapshot(cond: Column): Snapshot =
-    TxLog.prunedSnapshot(fs, root, None, m => {
-      val cs = scala.util.Try(condConstraints(m, cond)).getOrElse(Nil)
-      if (cs.isEmpty) lit(true)
-      else cs.map { case (n, lo, hi) => candidateKeepOpen(m, n, lo, hi) }
-        .reduce(_ && _)
-    })
-
-  /** Conjunct range constraints `(column, lo, hi)` mined from an
-    * analyzed predicate — `None` = unbounded on that side. Only shapes
-    * whose stat-domain order provably matches the predicate's order
-    * qualify: integral/floating attribute with a numeric literal,
-    * string attribute with a string literal. Resolution runs against an
-    * EMPTY frame with the table schema (no scan is planned). */
-  private def condConstraints(meta: Meta, cond: Column)
-      : Seq[(String, Option[Any], Option[Any])] = {
-    import org.apache.spark.sql.catalyst.expressions.{
-      And, AttributeReference, Cast, EqualNullSafe, EqualTo, Expression,
-      GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
-    val analyzed = spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), StructType(meta.schema.fields))
-      .where(cond).queryExecution.analyzed
-    val top = analyzed.collectFirst { case f: LFilter => f.condition }
-      .getOrElse(return Nil)
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case x         => Seq(x)
-    }
-    val numeric: Set[DataType] = Set(ByteType, ShortType, IntegerType,
-      LongType, FloatType, DoubleType)
-    val integral: Set[DataType] =
-      Set(ByteType, ShortType, IntegerType, LongType)
-    // Unwrap ONLY value-preserving widening casts of integral columns
-    // (the analyzer's own coercions, e.g. int column vs long literal).
-    // A narrowing or lossy cast must NOT be seen through: mining
-    // `$"price".cast("long") === 15` as price=[15,15] would prune a
-    // file whose stats are [15.1, 15.8] even though row 15.3 MATCHES
-    // the predicate — a silently-skipped delete. Float→double, though
-    // an up-cast, is excluded too: a float's widened value can differ
-    // from its stats string's double parse, breaking the stats order.
-    def attrOf(e: Expression): Option[AttributeReference] = e match {
-      case a: AttributeReference => Some(a)
-      case Cast(a: AttributeReference, t, _, _)
-          if integral(a.dataType) && Cast.canUpCast(a.dataType, t) =>
-        Some(a)
-      case _ => None
-    }
-    def valOf(a: AttributeReference, l: Literal): Option[Any] =
-      l.value match {
-        case null => None
-        case n: java.lang.Number if numeric(a.dataType) => Some(n)
-        case s: org.apache.spark.unsafe.types.UTF8String
-            if a.dataType == StringType => Some(s.toString)
-        case _ => None
-      }
-    conjuncts(top).flatMap {
-      case EqualTo(e, l: Literal) =>
-        for (a <- attrOf(e); v <- valOf(a, l)) yield (a.name, Some(v): Option[Any], Some(v): Option[Any])
-      case EqualTo(l: Literal, e) =>
-        for (a <- attrOf(e); v <- valOf(a, l)) yield (a.name, Some(v): Option[Any], Some(v): Option[Any])
-      case EqualNullSafe(e, l: Literal) if l.value != null =>
-        for (a <- attrOf(e); v <- valOf(a, l)) yield (a.name, Some(v): Option[Any], Some(v): Option[Any])
-      case EqualNullSafe(l: Literal, e) if l.value != null =>
-        for (a <- attrOf(e); v <- valOf(a, l)) yield (a.name, Some(v): Option[Any], Some(v): Option[Any])
-      case GreaterThan(e, l: Literal) =>
-        for (a <- attrOf(e); v <- valOf(a, l)) yield (a.name, Some(v): Option[Any], None: Option[Any])
-      case GreaterThanOrEqual(e, l: Literal) =>
-        for (a <- attrOf(e); v <- valOf(a, l)) yield (a.name, Some(v): Option[Any], None: Option[Any])
-      case LessThan(e, l: Literal) =>
-        for (a <- attrOf(e); v <- valOf(a, l)) yield (a.name, None: Option[Any], Some(v): Option[Any])
-      case LessThanOrEqual(e, l: Literal) =>
-        for (a <- attrOf(e); v <- valOf(a, l)) yield (a.name, None: Option[Any], Some(v): Option[Any])
-      case GreaterThan(l: Literal, e) => // lit > col  ==  col < lit
-        for (a <- attrOf(e); v <- valOf(a, l)) yield (a.name, None: Option[Any], Some(v): Option[Any])
-      case GreaterThanOrEqual(l: Literal, e) =>
-        for (a <- attrOf(e); v <- valOf(a, l)) yield (a.name, None: Option[Any], Some(v): Option[Any])
-      case LessThan(l: Literal, e) => // lit < col  ==  col > lit
-        for (a <- attrOf(e); v <- valOf(a, l)) yield (a.name, Some(v): Option[Any], None: Option[Any])
-      case LessThanOrEqual(l: Literal, e) =>
-        for (a <- attrOf(e); v <- valOf(a, l)) yield (a.name, Some(v): Option[Any], None: Option[Any])
-      case In(e, elems) if elems.nonEmpty &&
-          elems.forall(x => x.isInstanceOf[Literal] &&
-            x.asInstanceOf[Literal].value != null) =>
-        attrOf(e).flatMap { a =>
-          val vs = elems.flatMap(x => valOf(a, x.asInstanceOf[Literal]))
-          if (vs.size != elems.size) None
-          else vs.head match {
-            case _: java.lang.Number =>
-              // integral literals compare EXACT via longValue: distinct
-              // longs above 2^53 collapse to equal doubles, and a
-              // double-picked endpoint could tighten [lo, hi] past a
-              // true match — a silently skipped mutation row. Doubles
-              // only order genuinely fractional literal sets.
-              val integral = vs.forall {
-                case _: java.lang.Long | _: java.lang.Integer |
-                     _: java.lang.Short | _: java.lang.Byte => true
-                case _ => false
-              }
-              val ds: Seq[Double] =
-                if (integral) Nil
-                else vs.map(_.asInstanceOf[java.lang.Number].doubleValue)
-              val (iMin, iMax) =
-                if (integral) {
-                  val ls = vs.map(_.asInstanceOf[java.lang.Number].longValue)
-                  (ls.indexOf(ls.min), ls.indexOf(ls.max))
-                } else (ds.indexOf(ds.min), ds.indexOf(ds.max))
-              Some((a.name,
-                Some(vs(iMin)): Option[Any],
-                Some(vs(iMax)): Option[Any]))
-            case _: String =>
-              val ss = vs.map(_.asInstanceOf[String])
-              Some((a.name, Some(ss.min): Option[Any], Some(ss.max): Option[Any]))
-            case _ => None
-          }
-        }
-      case _ => None
-    }
-  }
+    TxSkipping.snapshot(spark, root, None, cond)
 
   /** The one optimistic-commit loop: `attempt(i)` (i = 0, 1, ...) plans
     * and tries one commit and yields the committed version — or the
@@ -2307,27 +2136,18 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * mutating first serialize to the same table. The commit REBASES
     * one version forward with the SAME entries — a metadata-only retry
     * where the fallback recomputes a 100 TB scan+rewrite. Anything
-    * unprovable (meta-carrying winner, any remove, unminable
-    * predicate, stats-less add, a tracked/identity append — those
-    * carry meta by construction) returns None and the caller
+    * unprovable (meta-carrying winner, any remove, a predicate with no
+    * skippable conjunct, stats-less add, a tracked/identity append —
+    * those carry meta by construction) returns None and the caller
     * recomputes from a fresh snapshot, exactly the old behavior.
     * Winner commits are read one at a time — O(lost races), never a
-    * log replay.
+    * log replay. `cond` is by-name: it is computed only if a race is
+    * actually lost.
     */
   private[lake] def commitRebasing(snap: Snapshot, entries: Seq[LogEntry],
-      cond: Column): Option[Long] =
-    commitRebasingOn(snap, entries, condConstraints(snap.meta, cond))
-
-  /** [[commitRebasing]] on explicit range constraints (the keyed
-    * mutations' [[commitRebasingOnKeys]]). `mkConstraints` is by-name:
-    * it is computed only if a race is actually lost. */
-  private[lake] def commitRebasingOn(snap: Snapshot, entries: Seq[LogEntry],
-      mkConstraints: => Seq[(String, Option[Any], Option[Any])])
-      : Option[Long] = {
-    lazy val cs = scala.util.Try(mkConstraints).getOrElse(Nil)
-    commitRebasingWhere(snap, entries, a =>
-      cs.nonEmpty &&
-        cs.exists { case (n, lo, hi) => !keepByStats(snap, a, n, lo, hi) })
+      cond: => Column): Option[Long] = {
+    lazy val keep = TxSkipping.keeper(spark, root, snap.meta, cond)
+    commitRebasingWhere(snap, entries, a => !keep(a))
   }
 
   /** The keyed mutations' rebase: a winner blind append whose files
@@ -2338,10 +2158,11 @@ final class TxTable(spark: SparkSession, rootStr: String) {
   private def commitRebasingOnKeys(snap: Snapshot, entries: Seq[LogEntry],
       keyCols: Seq[String], keys: DataFrame, nullSafe: Boolean)
       : Option[Long] =
-    commitRebasingOn(snap, entries,
+    commitRebasing(snap, entries,
       keyCols.filter(keyPrunable(snap.meta, _)).flatMap { k =>
         keyRange(keys, k, nullSafe)
-          .map { case (lo, hi) => (k, Option(lo), Option(hi)) } })
+          .map { case (lo, hi) => col(k).between(lit(lo), lit(hi)) } }
+        .foldLeft(lit(true))(_ && _))
 
   /** The rebase core: `safeAdd` decides whether one winner-added file
     * provably cannot affect the staged work. Predicate/keyed mutations
@@ -2380,40 +2201,6 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     }
     None
   }
-
-  /** Open-range generalization of [[candidateFiles]]'s keep decision:
-    * can file `a` hold a row with `colName` in [lo, hi] (either side
-    * optionally unbounded)? Missing stats fall to the partition value;
-    * missing both, or ANY parse/type mismatch, keeps the file. */
-  private def keepByStats(snap: Snapshot, a: Add, colName: String,
-      lo: Option[Any], hi: Option[Any]): Boolean =
-    a.stats.get(snap.meta.physicalOf(colName)) match {
-      case Some(st) => scala.util.Try {
-        st.kind match {
-          case "l" =>
-            lo.forall(l => st.max.toLong >= toL(l)) &&
-              hi.forall(h => st.min.toLong <= toL(h))
-          case "d" =>
-            lo.forall(l => st.max.toDouble >= toD(l)) &&
-              hi.forall(h => st.min.toDouble <= toD(h))
-          case _ =>
-            lo.forall(l => st.max >= l.toString) &&
-              hi.forall(h => st.min <= h.toString)
-        }
-      }.getOrElse(true)
-      case None => a.partitionValues.get(colName) match {
-        case Some(v) if v != "__HIVE_DEFAULT_PARTITION__" =>
-          scala.util.Try {
-            if (lo.orElse(hi).exists(_.isInstanceOf[Number])) {
-              val d = v.toDouble
-              lo.forall(l => d >= toD(l)) && hi.forall(h => d <= toD(h))
-            } else
-              lo.forall(l => v >= l.toString) &&
-                hi.forall(h => v <= h.toString)
-          }.getOrElse(true)
-        case _ => true
-      }
-    }
 
   /** Keyed join on `keys`: plain equality (a NULL key never matches),
     * or with `nullSafe` `<=>` per key (SQL's IS NOT DISTINCT FROM: a
@@ -2762,9 +2549,9 @@ final class TxTable(spark: SparkSession, rootStr: String) {
 
   /** Latest-partition read in ONE log resolution: the max of `colName`
     * across the live files' partitionValues picks the newest load, and
-    * the same snapshot serves the filtered read — half the log IO of
-    * `partitionValueMax` + `read` (which the medallion's hot read path
-    * would otherwise do on every node). Falls back to the full snapshot
+    * the same snapshot serves the filtered read — half the log IO of a
+    * separate max lookup plus `read` (which the medallion's hot read
+    * path would otherwise do on every node). Falls back to the full snapshot
     * when the column has no decoded values (empty table / all-null
     * loads).
     */
@@ -2988,13 +2775,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * two that matter.
     */
   def readBetween(colName: String, lo: Any, hi: Any,
-      asOf: Option[Long] = None): DataFrame = {
-    val snap = planningSnapshot(asOf, colName, lo, hi)
-    val keep = candidateFiles(snap, colName, lo, hi)
-    val c = col(colName)
-    readFiles(snap, keep.map(_.path))
-      .where(c >= lit(lo) && c <= lit(hi))
-  }
+      asOf: Option[Long] = None): DataFrame =
+    readWhere(asOf, col(colName).between(lit(lo), lit(hi)))
 
   /** Point lookup with bloom-index file skipping: stats prune first
     * (equality is the degenerate range), then each surviving file's
@@ -3004,201 +2786,44 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * filter stays on for exactness.
     */
   def readEquals(colName: String, value: Any,
-      asOf: Option[Long] = None): DataFrame = {
-    val snap = planningSnapshot(asOf, colName, value, value)
-    val keep = bloomCandidateFiles(snap, colName, value)
-    readFiles(snap, keep.map(_.path)).where(col(colName) === lit(value))
-  }
+      asOf: Option[Long] = None): DataFrame =
+    readWhere(asOf, col(colName) === lit(value))
 
   /** Multi-key point read: only the live files whose stats/bloom CANNOT
     * exclude `colName == ` one of `values` are planned — one Spark job
     * for the whole key set, never a job per key. The read backing
     * [[graft.ext.Ivm]]'s bounded min/max retraction (recompute JUST the
     * groups whose extremum was retracted), and any multi-key lookup.
-    * Pruning decisions are driver-side log metadata (stats) plus one
-    * sidecar probe per surviving file per key (bloom), like
-    * [[readEquals]].
+    * A file is kept when some value passes both its stats and its bloom
+    * sidecar, like [[readEquals]].
     */
   def readEqualsAny(colName: String, values: Seq[Any],
-      asOf: Option[Long] = None): DataFrame = {
-    // a big live set prunes distributed on the OR of per-value keeps
-    // (capped: past 256 values the predicate itself is the bottleneck —
-    // fall back to collecting the live set and pruning driver-side)
-    val snap =
-      if (values.isEmpty || values.size > 256) TxLog.snapshot(fs, root, asOf)
-      else TxLog.prunedSnapshot(fs, root, asOf,
-        m => values.map(v => candidateKeep(m, colName, v, v))
-          .reduce(_ || _))
+      asOf: Option[Long] = None): DataFrame =
     if (values.isEmpty)
-      return readFiles(snap, Nil)
-    val keep = values.iterator
-      .flatMap(v => bloomCandidateFiles(snap, colName, v).map(_.path))
-      .toSeq.distinct
-    readFiles(snap, keep).where(col(colName).isin(values: _*))
+      readFiles(TxLog.prunedSnapshot(fs, root, asOf, _ => lit(false)), Nil)
+    else readWhere(asOf, col(colName).isin(values: _*))
+
+  /** `cond`'s rows at `asOf`, planned on its candidate files only
+    * ([[TxSkipping.snapshot]]: stats, partition values, blooms). */
+  private def readWhere(asOf: Option[Long], cond: Column): DataFrame = {
+    val snap = TxSkipping.snapshot(spark, root, asOf, cond)
+    readFiles(snap, snap.adds.map(_.path)).where(cond)
   }
 
   /** The bloom + stats skipping decision, exposed for tests: candidate
     * files for `colName == value` after BOTH prunes. Files without a
-    * sidecar for the column are kept (conservative). Sidecar loads are
-    * driver-side and bounded by the stats-surviving count, and the
-    * DESERIALIZED filters are cached process-wide ([[TxTable
-    * .bloomCache]]): sidecars are immutable UUID-named files, so a
-    * cached entry can never go stale, and a multi-key lookup
-    * ([[readEqualsAny]] — the IVM retraction's N probes against the
-    * same surviving files) pays each sidecar's IO + deserialization
-    * once instead of once per key.
-    */
+    * sidecar for the column are kept (conservative). */
   def bloomCandidateFiles(snap: Snapshot, colName: String, value: Any)
-      : Vector[Add] = {
-    val statKept = candidateFiles(snap, colName, value, value)
-    val phys = snap.meta.physicalOf(colName)
-    snap.meta.schema.find(_.name == colName).map(_.dataType) match {
-      case None => statKept
-      case Some(dt) =>
-        val h = hashForBloom(dt, value)
-        statKept.filter { a =>
-          a.bloom.flatMap(_.get(phys)) match {
-            case None => true
-            case Some(rel) =>
-              TxTable.bloomCache.get(new Path(root, rel).toString, () => {
-                val in = fs.open(new Path(root, rel))
-                try org.apache.spark.util.sketch.BloomFilter.readFrom(in)
-                finally in.close()
-              }).mightContainLong(h)
-          }
-        }
-    }
-  }
-
-  /** Bloom hashing is WIDTH-NORMALIZED on both build and probe sides:
-    * integral values hash as LONG, floats as DOUBLE — `xxhash64` of
-    * int 5 and long 5 differ, so without the normalization a
-    * metadata-only TYPE WIDENING (int→long) would turn every
-    * pre-widening sidecar into a false-negative machine: files wrongly
-    * skipped, rows silently missing. With it, sidecars survive
-    * widening untouched. */
-  private def bloomNormType(dt: DataType): DataType = dt match {
-    case ByteType | ShortType | IntegerType | LongType => LongType
-    case FloatType | DoubleType => DoubleType
-    case other => other
-  }
-
-  /** Driver-side twin of the build path's normalized `xxhash64`: the
-    * probe value casts to the column's WIDTH-NORMALIZED type first (an
-    * Int probe against a BIGINT column must hash as a long, or nothing
-    * would ever match). */
-  private def hashForBloom(dt: DataType, value: Any): Long = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, XxHash64}
-    val lit0 = Literal(value)
-    val norm = bloomNormType(dt)
-    val casted: org.apache.spark.sql.catalyst.expressions.Expression =
-      if (lit0.dataType == norm) lit0 else Cast(lit0, norm, Some("UTC"))
-    // seed 42 = the default the `xxhash64` SQL function builds with
-    XxHash64(Seq(casted), 42L).eval(null).asInstanceOf[Long]
-  }
+      : Vector[Add] =
+    TxSkipping.files(spark, root, snap, col(colName) === lit(value))
 
   /** The skipping decision, exposed for tests: files whose stats CANNOT
     * exclude [lo,hi] (missing stats keep the file — conservative).
     * Partition columns carry no per-file stats — their single value
     * rides in partitionValues and prunes exactly. */
   def candidateFiles(snap: Snapshot, colName: String, lo: Any, hi: Any): Vector[Add] =
-    snap.adds.filter(a => keepByStats(snap, a, colName, Some(lo), Some(hi)))
-  private def toL(v: Any): Long = v match {
-    case n: Number => n.longValue(); case s: String => s.toLong
-  }
-  private def toD(v: Any): Double = v match {
-    case n: Number => n.doubleValue(); case s: String => s.toDouble
-  }
-
-  /** The Column twin of [[candidateFiles]] — the same skipping decision
-    * expressed over the flattened Add fields (`stats`,
-    * `partitionValues`), so [[graft.lake.TxLog.prunedSnapshot]] can run
-    * it DISTRIBUTED over a large checkpoint instead of folding a
-    * million Add entries on the driver. Identical conservatism: missing
-    * stats fall to the partition value, an unparseable partition value
-    * keeps the file. */
-  private def candidateKeep(meta: Meta, colName: String, lo: Any,
-      hi: Any): Column = {
-    val st = col("stats").getItem(meta.physicalOf(colName))
-    val pv = col("partitionValues").getItem(colName)
-    val kind = st.getField("kind")
-    // cross-domain probes (a string value against numeric-kind stats)
-    // cannot order — that branch keeps the file, like the driver twin's
-    // Try fallback
-    val numKeep = scala.util.Try((toL(lo), toL(hi), toD(lo), toD(hi)))
-    val stKeep = numKeep match {
-      case scala.util.Success((ll, lh, dl, dh)) =>
-        when(kind === "l",
-          st.getField("max").cast("long") >= lit(ll) &&
-            st.getField("min").cast("long") <= lit(lh))
-        .when(kind === "d",
-          st.getField("max").cast("double") >= lit(dl) &&
-            st.getField("min").cast("double") <= lit(dh))
-        .otherwise(st.getField("max") >= lit(lo.toString) &&
-          st.getField("min") <= lit(hi.toString))
-      case _ =>
-        when(kind === "l" || kind === "d", lit(true))
-          .otherwise(st.getField("max") >= lit(lo.toString) &&
-            st.getField("min") <= lit(hi.toString))
-    }
-    val pvKeep = (lo, hi) match {
-      case (l: Number, h: Number) =>
-        coalesce(pv.cast("double") >= lit(l.doubleValue) &&
-          pv.cast("double") <= lit(h.doubleValue), lit(true))
-      case _ => pv >= lit(lo.toString) && pv <= lit(hi.toString)
-    }
-    when(st.isNotNull, stKeep)
-      .otherwise(when(pv.isNotNull &&
-        pv =!= "__HIVE_DEFAULT_PARTITION__", pvKeep).otherwise(lit(true)))
-  }
-
-  /** Open-range extension of [[candidateKeep]]: the distributed keep
-    * for a one- or no-sided bound. Same conservatism; a fully
-    * unbounded constraint keeps everything. */
-  private def candidateKeepOpen(meta: Meta, colName: String,
-      lo: Option[Any], hi: Option[Any]): Column = (lo, hi) match {
-    case (Some(l), Some(h)) => candidateKeep(meta, colName, l, h)
-    case (None, None)       => lit(true)
-    case _ =>
-      val v = lo.orElse(hi).get
-      val isLo = lo.isDefined
-      val st = col("stats").getItem(meta.physicalOf(colName))
-      val pv = col("partitionValues").getItem(colName)
-      val kind = st.getField("kind")
-      // a lower bound can only be excluded by the file's MAX, an upper
-      // bound by its MIN
-      val stat = if (isLo) st.getField("max") else st.getField("min")
-      def cmp(a: Column, b: Column): Column = if (isLo) a >= b else a <= b
-      // cross-domain probes keep (same rule as candidateKeep)
-      val stKeep = scala.util.Try((toL(v), toD(v))) match {
-        case scala.util.Success((l, d)) =>
-          when(kind === "l", cmp(stat.cast("long"), lit(l)))
-            .when(kind === "d", cmp(stat.cast("double"), lit(d)))
-            .otherwise(cmp(stat, lit(v.toString)))
-        case _ =>
-          when(kind === "l" || kind === "d", lit(true))
-            .otherwise(cmp(stat, lit(v.toString)))
-      }
-      val pvKeep = v match {
-        case _: Number =>
-          coalesce(cmp(pv.cast("double"), lit(toD(v))), lit(true))
-        case _ => cmp(pv, lit(v.toString))
-      }
-      when(st.isNotNull, stKeep)
-        .otherwise(when(pv.isNotNull &&
-          pv =!= "__HIVE_DEFAULT_PARTITION__", pvKeep).otherwise(lit(true)))
-  }
-
-  /** Planning snapshot for a range/point read on `colName`: resolved
-    * through [[graft.lake.TxLog.prunedSnapshot]], so a million-file
-    * table filters its live set distributed and only the candidate
-    * Adds reach the driver; small tables fold in memory as before (the
-    * caller's [[candidateFiles]]/bloom prune then does the exact same
-    * filtering driver-side — idempotent on the pre-filtered set). */
-  private def planningSnapshot(asOf: Option[Long], colName: String,
-      lo: Any, hi: Any): Snapshot =
-    TxLog.prunedSnapshot(fs, root, asOf,
-      m => candidateKeep(m, colName, lo, hi))
+    TxSkipping.files(spark, root, snap,
+      col(colName).between(lit(lo), lit(hi)))
 
   private def readSnapshot(snap: Snapshot): DataFrame =
     readFiles(snap, snap.adds.map(_.path))
@@ -3346,7 +2971,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * declared type (probed, and spec-pinned).
     * Stats keep working unchanged (integrals share stat kind "l",
     * floats "d"); bloom sidecars keep working because hashing is
-    * width-normalized ([[bloomNormType]]). Both protocol halves are
+    * width-normalized ([[TxSkipping.bloomNormType]]). Both protocol halves are
     * stamped — an old READER given the widened schema must upcast and
     * an old WRITER must not land narrow files after a second widening
     * it does not understand, so version-skewed clients refuse loudly.
@@ -3390,7 +3015,8 @@ final class TxTable(spark: SparkSession, rootStr: String) {
           // turn every pre-widening sidecar into a false-negative
           // machine — the width normalization only spans one family
           require(!meta.bloomCols.contains(cf.name) ||
-              bloomNormType(cf.dataType) == bloomNormType(f.dataType),
+              TxSkipping.bloomNormType(cf.dataType) ==
+                TxSkipping.bloomNormType(f.dataType),
             s"column ${cf.name}: widening ${cf.dataType.simpleString} → " +
               s"${f.dataType.simpleString} crosses the bloom hash " +
               "family and would invalidate its index sidecars — drop " +
@@ -3646,10 +3272,10 @@ final class TxTable(spark: SparkSession, rootStr: String) {
       .create(items, fpp).bitSize()
     val reader = schemaOpt.fold(spark.read)(s => spark.read.schema(s))
     val pdf = reader.parquet(absPaths: _*)
-    // width-normalized hash (see [[bloomNormType]]): sidecars stay
-    // valid across a type widening
+    // width-normalized hash (see [[TxSkipping.bloomNormType]]):
+    // sidecars stay valid across a type widening
     val hashCol = pdf.schema.find(_.name == phys)
-      .map(f => col(phys).cast(bloomNormType(f.dataType)))
+      .map(f => col(phys).cast(TxSkipping.bloomNormType(f.dataType)))
       .getOrElse(col(phys))
     pdf
       .select(col("_metadata.file_path").as("__f"),
@@ -3830,28 +3456,4 @@ object TxTable {
   val autoCompactKey = "spark.graft.lake.autoCompact"
   val autoCompactMinFilesKey = "spark.graft.lake.autoCompact.minFiles"
   val autoCompactMinRowsKey = "spark.graft.lake.autoCompact.minRows"
-
-  /** Process-wide LRU of deserialized bloom sidecars, keyed by absolute
-    * sidecar path. Safe because sidecars are IMMUTABLE UUID-named files
-    * (a new index writes a new file; vacuum deletes, never rewrites) —
-    * an entry can go unreachable, never stale. Bounded so a long-lived
-    * driver over many tables cannot grow without limit; one filter is
-    * a few hundred KB at the default fpp, so 256 entries is tens of MB.
-    */
-  private[lake] val bloomCache =
-    new SidecarCache[org.apache.spark.util.sketch.BloomFilter](256)
-
-  private[lake] final class SidecarCache[V](maxEntries: Int) {
-    private val map =
-      new java.util.LinkedHashMap[String, V](64, 0.75f, true) {
-        override def removeEldestEntry(
-            e: java.util.Map.Entry[String, V]): Boolean =
-          size() > maxEntries
-      }
-    def get(key: String, load: () => V): V = map.synchronized {
-      val hit = map.get(key)
-      if (hit != null) hit
-      else { val v = load(); map.put(key, v); v }
-    }
-  }
 }

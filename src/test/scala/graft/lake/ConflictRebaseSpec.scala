@@ -145,26 +145,26 @@ class ConflictRebaseSpec extends SparkSpec {
     val entries = stagedDelete(tab, snap)
     assert(TxLog.tryCommit(fs, root, snap.version + 1,
       plantedAppend(500000L, 500099L)))
-    // the keyed form: explicit (col, lo, hi) constraints, as merge
-    // derives from its source-key range aggregation
-    assert(tab.commitRebasingOn(snap, entries,
-      Seq(("id", Some(0L), Some(50L)))) === Some(snap.version + 2))
+    // the keyed form: the source-key range as a predicate, as merge
+    // derives it from its source-key range aggregation
+    assert(tab.commitRebasing(snap, entries,
+      col("id").between(0L, 50L)) === Some(snap.version + 2))
     // overlap through the keyed form refuses
     val (tab2, root2, fs2) = freshTable("keyedover")
     val snap2 = TxLog.snapshot(fs2, root2)
     val entries2 = stagedDelete(tab2, snap2)
     assert(TxLog.tryCommit(fs2, root2, snap2.version + 1,
       plantedAppend(40L, 60L)))
-    assert(tab2.commitRebasingOn(snap2, entries2,
-      Seq(("id", Some(0L), Some(50L)))).isEmpty)
-    // empty constraints (null-safe keys with nulls, unprunable types)
-    // refuse — nothing provable
+    assert(tab2.commitRebasing(snap2, entries2,
+      col("id").between(0L, 50L)).isEmpty)
+    // no key range (null-safe keys with nulls, unprunable types) is the
+    // always-true predicate, which refuses — nothing provable
     val (tab3, root3, fs3) = freshTable("keyedempty")
     val snap3 = TxLog.snapshot(fs3, root3)
     val entries3 = stagedDelete(tab3, snap3)
     assert(TxLog.tryCommit(fs3, root3, snap3.version + 1,
       plantedAppend(600000L, 600099L)))
-    assert(tab3.commitRebasingOn(snap3, entries3, Nil).isEmpty)
+    assert(tab3.commitRebasing(snap3, entries3, lit(true)).isEmpty)
   }
 
   test("a winner advancing OUR app's txn watermark refuses the rebase — " +
