@@ -22,9 +22,9 @@ import TxLog.{Add, Meta, Snapshot}
   *     `op` one of `=`, `<=>`, `<`, `<=`, `>`, `>=` (the non-null value
   *     `v` on either side), or `c IN (v, ...)` / `InSet`, becomes the
   *     same comparison against `stats[phys].min/max` cast to the
-  *     column's type — the column bare or inside an integral
-  *     value-preserving up-cast, which is monotone, so the min/max
-  *     images bound it;
+  *     column's type — the column bare or inside a numeric up-cast
+  *     of an integral column, which is monotone, so the min/max images
+  *     bound it;
   *   - a file without stats for the column is judged by its partition
   *     value instead; a file with neither is kept;
   *   - any other conjunct keeps every file.
@@ -63,7 +63,9 @@ private[lake] object TxSkipping {
       e match {
         case a: AttributeReference if skippable(a.dataType) =>
           Some((a, a))
-        case Cast(a: AttributeReference, t, _, _)
+        // numeric targets only: Spark also up-casts any atomic type to
+        // a string, and int-to-string is not monotone ("10" < "9")
+        case Cast(a: AttributeReference, t: NumericType, _, _)
             if integral(a.dataType) && Cast.canUpCast(a.dataType, t) =>
           Some((e, a))
         case _ => None
@@ -156,13 +158,10 @@ private[lake] object TxSkipping {
         orKeep(may(image(pv), image(pv))), Literal.TrueLiteral))
   }
 
-  /** `pred` rewritten into the keep expression over one Add's flattened
-    * fields. `physOf` maps an attribute's name to the physical name its
-    * stats and partition value are keyed by. */
-  private def keep(pred: Expression, physOf: String => String): Expression =
-    allOf(conjuncts(pred).flatMap(bound), physOf)
-
-  private def allOf(bounds: Seq[Bound], physOf: String => String) =
+  /** The keep expression over one Add's flattened fields: every handled
+    * conjunct's keep. `physOf` maps an attribute's name to the physical
+    * name its stats and partition value are keyed by. */
+  private def keep(bounds: Seq[Bound], physOf: String => String) =
     bounds.map(b => keepOf(b, physOf)(b.may))
       .reduceOption[Expression](And).getOrElse(Literal.TrueLiteral)
 
@@ -185,8 +184,8 @@ private[lake] object TxSkipping {
     * the expression's SQL text, the public route from a Catalyst
     * expression to a `Column`. */
   def column(spark: SparkSession, meta: Meta, cond: Column): Column =
-    functions.expr(resolve(spark, meta, cond)
-      .fold[Expression](Literal.TrueLiteral)(keep(_, meta.physicalOf)).sql)
+    functions.expr(keep(resolve(spark, meta, cond).toSeq
+      .flatMap(conjuncts).flatMap(bound), meta.physicalOf).sql)
 
   // ---- the driver evaluator ----
 
@@ -217,7 +216,7 @@ private[lake] object TxSkipping {
       physOf: String => String): Add => Boolean = {
     val bounds = conjuncts(pred).flatMap(bound)
     if (bounds.isEmpty) return _ => true
-    val all = interpreted(allOf(bounds, physOf))
+    val all = interpreted(keep(bounds, physOf))
     val probes = bounds.filter(b => b.points.nonEmpty && (b.side match {
       case c: Cast => integral(c.dataType)
       case _       => true
@@ -252,12 +251,19 @@ private[lake] object TxSkipping {
 
   /** The state at `asOf` with `adds` restricted to `cond`'s candidate
     * files: pruned by [[column]] over the checkpoint when the live set
-    * is large, folded in memory otherwise; [[files]] on the driver
-    * either way. */
+    * is large and `distributed` holds, folded in memory otherwise;
+    * [[files]] on the driver either way. */
   def snapshot(spark: SparkSession, root: Path, asOf: Option[Long],
-      cond: Column): Snapshot = {
+      cond: Column, distributed: Boolean = true): Snapshot = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val s = TxLog.prunedSnapshot(fs, root, asOf, column(spark, _, cond))
+    val s =
+      if (distributed)
+        TxLog.prunedSnapshot(fs, root, asOf, column(spark, _, cond))
+      else {
+        val all = TxLog.snapshot(fs, root, asOf)
+        TxLog.lastResolve.set(("driver-fold", all.adds.size.toLong))
+        all
+      }
     s.copy(adds = files(spark, root, s, cond))
   }
 

@@ -2795,18 +2795,21 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * [[graft.ext.Ivm]]'s bounded min/max retraction (recompute JUST the
     * groups whose extremum was retracted), and any multi-key lookup.
     * A file is kept when some value passes both its stats and its bloom
-    * sidecar, like [[readEquals]].
-    */
+    * sidecar, like [[readEquals]]. Past 256 values the keep's N-way OR
+    * is itself the bottleneck: the live set is folded in memory rather
+    * than pruned distributed. */
   def readEqualsAny(colName: String, values: Seq[Any],
       asOf: Option[Long] = None): DataFrame =
     if (values.isEmpty)
       readFiles(TxLog.prunedSnapshot(fs, root, asOf, _ => lit(false)), Nil)
-    else readWhere(asOf, col(colName).isin(values: _*))
+    else readWhere(asOf, col(colName).isin(values: _*),
+      distributed = values.size <= 256)
 
   /** `cond`'s rows at `asOf`, planned on its candidate files only
     * ([[TxSkipping.snapshot]]: stats, partition values, blooms). */
-  private def readWhere(asOf: Option[Long], cond: Column): DataFrame = {
-    val snap = TxSkipping.snapshot(spark, root, asOf, cond)
+  private def readWhere(asOf: Option[Long], cond: Column,
+      distributed: Boolean = true): DataFrame = {
+    val snap = TxSkipping.snapshot(spark, root, asOf, cond, distributed)
     readFiles(snap, snap.adds.map(_.path)).where(cond)
   }
 
