@@ -10,7 +10,9 @@ import graft.checks.{Check, Checks}
 /** Template-method ETL node — the Scala rebuild of the reference's
   * `TableETL` ABC (etl/utils/base_table.py:53-240). Five-step lifecycle:
   * extractUpstream → transformUpstream → validate → write → read, with
-  * `run()` final (reference: base_table.py:222-240).
+  * `run()` final (reference: base_table.py:222-240). `run()` starts the
+  * checks alongside the write's staging job; they gate the log claim
+  * that makes the load visible, so a failed check still lands nothing.
   *
   * Deliberate divergences (documented in SURVEY.md §3.4/§7.5):
   *   - lineage execution is memoized via [[RunRegistry]] (the reference
@@ -227,9 +229,15 @@ abstract class TableEtl(
 
   /** Returns the committed txlog version for ACID writes (None on the
     * plain-file path, which has no commit identity to report). */
-  final def write(ds: EtlDataSet): Option[Long] =
-    if (ds.dataFormat == "txlog") Some(writeTx(ds))
+  final def write(ds: EtlDataSet): Option[Long] = write(ds, () => ())
+
+  /** [[write]] held back by `gate`: a warm txlog load calls it after
+    * staging and before the log claim; every other path calls it before
+    * writing anything. */
+  private def write(ds: EtlDataSet, gate: () => Unit): Option[Long] =
+    if (ds.dataFormat == "txlog") Some(writeTx(ds, gate))
     else {
+      gate()
       ds.data.hint("rebalance").write
         .option("partitionOverwriteMode", "dynamic")
         .options(formatOptions(ds.dataFormat))
@@ -254,33 +262,58 @@ abstract class TableEtl(
     * once; a load carrying zero or several stamps is refused before it
     * commits.
     */
-  private def writeTx(ds: EtlDataSet): Long = {
+  private def writeTx(ds: EtlDataSet, gate: () => Unit): Long = {
     val tab = new graft.lake.TxTable(spark, ds.storagePath)
-    if (!tab.exists) tab.create(ds.data.hint("rebalance"), ds.partitionKeys)
-    else {
+    if (!tab.exists) {
+      gate()
+      tab.create(ds.data.hint("rebalance"), ds.partitionKeys)
+    } else {
       require(ds.partitionKeys.size == 1,
         s"txlog write supports exactly one partition key, got ${ds.partitionKeys}")
-      tab.overwritePartition(ds.partitionKeys.head, ds.data.hint("rebalance"))
+      tab.overwritePartition(ds.partitionKeys.head, ds.data.hint("rebalance"),
+        gate)
     }
   }
 
   /** extract → transform → validate (throw on violation) → write-if-enabled
-    * (reference: base_table.py:222-240).
+    * (reference: base_table.py:222-240). The checks run as their own
+    * Spark action alongside the write's staging job: nothing is visible
+    * until the log claim, so the gate holds back the claim, not the
+    * stage. A failed check deletes the staged files and throws
+    * [[InvalidDataException]] — also when staging failed too, with the
+    * staging error attached as suppressed. Paths with no claim to hold
+    * back (day-0 create, plain files, `writeData = false`) await the
+    * checks before writing.
     */
   final def run(): Unit = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
     val transformed = transformUpstream(extractUpstream())
     currentData = Some(transformed.data)
     val nChecks = effectiveChecks.size
-    val violations = validate(transformed)
-    if (violations.nonEmpty) {
-      val detail = violations
-        .map(v => s"${v.check.description}: ${v.detail}").mkString("; ")
-      LineageRunReport.record(name, NodeRunInfo(dataFormat, nChecks,
-        violations.map(v => s"${v.check.description}: ${v.detail}"), None))
-      throw new InvalidDataException(
-        s"The $name dataset did not pass validation: $detail")
+    val checked = Future(validate(transformed))(
+      RunRegistry.sharedExecutionContext)
+    def gate(): Unit = {
+      val violations = Await.result(checked, Duration.Inf)
+      if (violations.nonEmpty) {
+        val texts = violations.map(v => s"${v.check.description}: ${v.detail}")
+        LineageRunReport.record(name,
+          NodeRunInfo(dataFormat, nChecks, texts, None))
+        throw new InvalidDataException(
+          s"The $name dataset did not pass validation: ${texts.mkString("; ")}")
+      }
     }
-    val committed = if (writeData) write(transformed) else None
+    val committed =
+      try if (writeData) write(transformed, () => gate()) else { gate(); None }
+      catch { case scala.util.control.NonFatal(e)
+          if !e.isInstanceOf[InvalidDataException] =>
+        scala.util.Try(gate()) match {
+          case scala.util.Failure(dq: InvalidDataException) =>
+            dq.addSuppressed(e)
+            throw dq
+          case _ => throw e
+        }
+      }
     // row count for the report: free log metadata on txlog tables — sum
     // the Add entries of THE COMMIT THIS RUN JUST WROTE (one commit-file
     // read, never a Spark job). Summing the live snapshot instead would

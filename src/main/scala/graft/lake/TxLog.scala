@@ -837,7 +837,6 @@ object TxLog {
       asOf: Option[Long])
       : Option[(org.apache.spark.sql.DataFrame, Meta, Long,
         Map[String, Long])] = {
-    import org.apache.spark.sql.functions.{broadcast, col}
     val latest = latestVersion(fs, root)
     require(latest >= 0, s"no transaction log at $root")
     val target = asOf.getOrElse(latest)

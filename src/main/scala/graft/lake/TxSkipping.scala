@@ -134,14 +134,26 @@ private[lake] object TxSkipping {
   /** `b`'s keep over the flattened Add fields `stats` and
     * `partitionValues` (unresolved by name, bound per evaluator):
     * stats when the file has them for the column, else its partition
-    * value; an unparseable value (null image) keeps the file. */
+    * value; an unparseable value (null image) keeps the file.
+    *
+    * A double column's value string may be a float's: a column widened
+    * from float keeps its old files' stats as the float's shortest
+    * string ("1.1"), which reads back as 1.100000023841858, not 1.1. So
+    * a double's lower image is the least, and its upper image the
+    * greatest, of both readings — pruning widens, never narrows. */
   private def keepOf(b: Bound, physOf: String => String)(
       may: (Expression, Expression) => Expression): Expression = {
     val phys = physOf(b.a.name)
-    def image(v: Expression): Expression = {
-      val typed =
-        if (b.a.dataType == StringType) v
-        else Cast(v, b.a.dataType, None, EvalMode.TRY)
+    def image(v: Expression, lower: Boolean): Expression = {
+      def tryCast(e: Expression, t: DataType) = Cast(e, t, None, EvalMode.TRY)
+      val typed = b.a.dataType match {
+        case StringType => v
+        case DoubleType =>
+          val both = Seq(tryCast(v, DoubleType),
+            tryCast(tryCast(v, FloatType), DoubleType))
+          if (lower) Least(both) else Greatest(both)
+        case t => tryCast(v, t)
+      }
       b.side match {
         case c: Cast => c.withNewChildren(Seq(typed))
         case _       => typed
@@ -150,12 +162,13 @@ private[lake] object TxSkipping {
     def orKeep(e: Expression) = Coalesce(Seq(e, Literal.TrueLiteral))
     val st = GetMapValue(UnresolvedAttribute.quoted("stats"), Literal(phys))
     def stat(f: String) =
-      image(GetStructField(st, statType.fieldIndex(f), Some(f)))
+      image(GetStructField(st, statType.fieldIndex(f), Some(f)), f == "min")
     val pv = GetMapValue(UnresolvedAttribute.quoted("partitionValues"),
       Literal(phys))
     If(IsNotNull(st), orKeep(may(stat("min"), stat("max"))),
       If(And(IsNotNull(pv), Not(EqualTo(pv, Literal(DefaultPartition)))),
-        orKeep(may(image(pv), image(pv))), Literal.TrueLiteral))
+        orKeep(may(image(pv, lower = true), image(pv, lower = false))),
+        Literal.TrueLiteral))
   }
 
   /** The keep expression over one Add's flattened fields: every handled

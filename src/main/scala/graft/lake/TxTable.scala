@@ -1102,7 +1102,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * commit, and older partitions read back with nulls in it.
     */
   def overwritePartition(partCol: String, value: String, df0: DataFrame): Long =
-    overwritePartitionOf(partCol, Some(value), df0)
+    overwritePartitionOf(partCol, Some(value), df0, () => ())
 
   /** [[overwritePartition]] of the one partition the rows land in —
     * Spark's `partitionOverwriteMode=dynamic` for a single-stamp load.
@@ -1111,12 +1111,19 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     * staged files, so the commit is one staging action; a change-feed
     * table lands the feed's delete half in that same action, so it
     * learns the value first with one limit-1 probe.
+    *
+    * `gate` runs once the staged files pass the stamp check and before
+    * the log claim, so a caller can overlap its own check of `df0` with
+    * the staging job and still hold the commit back: if it throws, the
+    * staged files are deleted and the exception propagates unchanged.
+    * A retry after a lost race calls it again.
     */
-  def overwritePartition(partCol: String, df0: DataFrame): Long =
-    overwritePartitionOf(partCol, None, df0)
+  def overwritePartition(partCol: String, df0: DataFrame,
+      gate: () => Unit = () => ()): Long =
+    overwritePartitionOf(partCol, None, df0, gate)
 
   private def overwritePartitionOf(partCol: String, given: Option[String],
-      df0: DataFrame): Long = {
+      df0: DataFrame, gate: () => Unit): Long = {
     // generated columns first (create-time-fixed, so the first snapshot's
     // meta is authoritative): the headline use case partitions BY a
     // generated column, so the load may legitimately arrive without it —
@@ -1189,6 +1196,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
             landed.size == 1 && value.forall(_ == landed.head),
             oneStamp(landed.size))
         }
+        gate()
         // only a value-free first attempt above the driver threshold
         // staged before it could plan: plan now. A commit that slipped
         // in since the meta-only snapshot holds snap.version + 1, so the
@@ -1198,7 +1206,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
           else partitionOverwriteSnapshot(partCol, landed.head)
         homogeneous(p)
         p
-      } catch { case e: IllegalArgumentException =>
+      } catch { case scala.util.control.NonFatal(e) =>
         discardStaged(adds, cdfs)
         throw e
       }
@@ -2688,7 +2696,7 @@ final class TxTable(spark: SparkSession, rootStr: String) {
     // names through physicalOf on both sides, so a feed range crossing a
     // RENAME commit stays one coherent relation under the head spelling
     def alignFrom(df: DataFrame, vMeta: Meta,
-        extra: Seq[Column] = Nil): DataFrame =
+        extra: Seq[Column]): DataFrame =
       df.select(head.meta.schema.fields.map { f =>
         val phys = head.meta.physicalOf(f.name)
         vMeta.schema.fieldNames.find(n => vMeta.physicalOf(n) == phys)

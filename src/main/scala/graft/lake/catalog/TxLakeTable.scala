@@ -218,8 +218,6 @@ private[catalog] final class TxScanBuilder(path: String,
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
-  private def exists: Boolean = snap.isDefined
-
   private var required: StructType = full
   private var pushed: Array[Filter] = Array.empty
 

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -96,6 +98,82 @@ class TableEtlSpec extends SparkSpec {
     val node = ordersNode(c)
     intercept[InvalidDataException] { node.run() }
     assert(!new java.io.File(s"$base/bronze/orders").exists())
+  }
+
+  /** Every file under a table root outside its log: data files, bloom
+    * sidecars, change data. */
+  private def dataFiles(root: String): Set[String] = {
+    val r = java.nio.file.Paths.get(root)
+    val walk = Files.walk(r)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(r.relativize(_).toString).filterNot(_.startsWith("_txlog")).toSet
+    finally walk.close()
+  }
+
+  test("a warm load failing its checks lands nothing and keeps the " +
+      "previous load") {
+    val base = Files.createTempDirectory("graft_gate").toString
+    val root = s"$base/bronze/orders_gate"
+    def gated(c: EtlContext) = new BronzeNode(c, "orders_gate", "orders",
+      Seq("order_id"),
+      Seq("order_id", "buyer_id", "order_ts", "total_price", "created_ts"),
+      checks = Seq(Unique(Seq("order_id"))))
+    gated(ctx(t0, base)).run()
+    val tab = new graft.lake.TxTable(spark, root)
+    val (v0, files0) = (tab.version, dataFiles(root))
+    val dup = EtlContext(spark,
+      InMemorySource(Map("orders" -> ordersDf.union(ordersDf))), base,
+      clock = t1)
+    val e = intercept[InvalidDataException] { gated(dup).run() }
+    assert(e.getMessage.startsWith(
+      "The orders_gate dataset did not pass validation: "))
+    assert(tab.version === v0)
+    assert(dataFiles(root) === files0)
+    val kept = gated(ctx(t1, base)).read().data
+    assert(kept.count() === 2)
+    assert(kept.select("etl_inserted").distinct().collect()
+      .map(_.getTimestamp(0)).toSeq === Seq(t0.at))
+    val report = LineageRunReport.snapshot("orders_gate")
+    assert(report.violations.nonEmpty && report.rowsWritten.isEmpty)
+  }
+
+  test("a clean warm load lands exactly one version") {
+    val base = Files.createTempDirectory("graft_gate_ok").toString
+    ordersNode(ctx(t0, base)).run()
+    val tab = new graft.lake.TxTable(spark, s"$base/bronze/orders")
+    val v0 = tab.version
+    val second = ordersNode(ctx(t1, base))
+    second.run()
+    assert(tab.version === v0 + 1)
+    assert(second.read().data.select("etl_inserted").distinct().collect()
+      .map(_.getTimestamp(0)).toSeq === Seq(t1.at))
+  }
+
+  test("a load failing both its checks and its staging throws " +
+      "InvalidDataException with the staging error suppressed") {
+    val base = Files.createTempDirectory("graft_gate_both").toString
+    // day 0 lands one stamp; the warm load carries two stamps (refused
+    // by staging) and every order_id twice (refused by the checks)
+    def node(clock: Clock, twoStamps: Boolean) =
+      new Node(ctx(clock, base)) {
+        override def layer: String = "bronze"
+        override def name: String = "orders_two_stamps"
+        override def primaryKeys: Seq[String] = Seq("order_id")
+        override def checks = Seq(Unique(Seq("order_id")))
+        override def outputColumns: Seq[String] =
+          Seq("order_id", "etl_inserted")
+        override def transformUpstream(up: Seq[EtlDataSet]): EtlDataSet = {
+          val now = stamped(ordersDf)
+          dataset(if (!twoStamps) now
+            else now.union(ordersDf.withColumn("etl_inserted", lit(t0.at))))
+        }
+      }
+    node(t0, twoStamps = false).run()
+    val e = intercept[InvalidDataException] {
+      node(t1, twoStamps = true).run()
+    }
+    assert(e.getSuppressed.toSeq.map(_.getMessage).exists(
+      _.contains("one load = one etl_inserted stamp; got 2 distinct values")))
   }
 
   test("runUpstream=false consumes existing storage without re-extracting") {

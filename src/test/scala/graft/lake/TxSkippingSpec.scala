@@ -155,6 +155,18 @@ class TxSkippingSpec extends SparkSpec {
     assert(tab.read().as[Int].collect().toSeq === Seq(9))
   }
 
+  test("a float column widened to double skips by both readings of " +
+      "its old stats") {
+    // the float file's stats are "1.1", the float's shortest string;
+    // the widened reader returns 1.100000023841858 for its row
+    val tab = new TxTable(spark, freshRoot("widen"))
+    tab.create(Seq(1.1f).toDF("f").coalesce(1))
+    tab.widenColumnType("f", "double")
+    tab.append(Seq(0.5).toDF("f").coalesce(1))
+    assert(tab.read().where($"f" > 1.1).count() === 1)
+    assert(tab.readBetween("f", 1.1000000001, 2.0).count() === 1)
+  }
+
   test("a long IN list is folded in memory, not shipped to the " +
       "distributed prune") {
     val (tab, root) = seeded("longin")

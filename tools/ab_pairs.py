@@ -15,6 +15,12 @@ then prints `perfbench/compare.py`'s table over the two sets and exits
 with its status (1 if any verdict is "worse"). A run that fails or
 reports failed operations is named on standard error; the record of a
 run that exits non-zero is not copied.
+
+`perfbench/run.py` reuses a checkout's `.bench_build/` when the sources
+match, so a `.bench_build` copied from another checkout runs that
+checkout's classes. Before the first pair the tool exits 2, naming the
+path, if either side's cached classpath names a classes directory
+outside that side's checkout.
 """
 import argparse
 import json
@@ -49,6 +55,17 @@ def run(checkout, a, seed, dest):
           file=sys.stderr)
 
 
+def foreign_classes(checkout):
+    """Classes directories on the checkout's cached perfbench classpath
+    that lie outside the checkout."""
+    cp = checkout / ".bench_build" / "classpath.txt"
+    if not cp.exists():
+        return []
+    return [e for e in cp.read_text().strip().split(":")
+            if e and not e.endswith(".jar")
+            and not Path(e).resolve().is_relative_to(checkout)]
+
+
 def main():
     ap = argparse.ArgumentParser()
     ap.add_argument("base", type=Path)
@@ -62,6 +79,12 @@ def main():
     a = ap.parse_args()
     out = a.out or Path(tempfile.mkdtemp(prefix="ab_pairs_"))
     sides = [("base", a.base.resolve()), ("head", a.head.resolve())]
+    for _, checkout in sides:
+        for e in foreign_classes(checkout):
+            print(f"ab_pairs: {checkout / '.bench_build' / 'classpath.txt'}"
+                  f" names {e}, outside {checkout}; delete that "
+                  f".bench_build", file=sys.stderr)
+            return 2
     for i in range(a.pairs):
         seed = a.seed + i
         for name, checkout in (sides if i % 2 == 0 else sides[::-1]):
